@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""DuckDB twin of graft.JobVerbatimBench: the 113 verbatim JOB texts
+"""DuckDB twin of `graft.VerbatimBench imdb`: the 113 verbatim JOB texts
 over the SAME synthetic parquet fixtures, warm best-of-N, one JSON
 line out.
 

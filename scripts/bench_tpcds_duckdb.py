@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""DuckDB twin of graft.TpcdsVerbatimBench: run the reference's 99
+"""DuckDB twin of `graft.VerbatimBench tpcds [scale]`: run the reference's 99
 verbatim TPC-DS query texts over the SAME staged parquet fixtures
 (fixtures/tpcds/<scale>/), warm best-of-N, one JSON line out — the
 same-box apples-to-apples baseline for the engine's verbatim suite.

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""DuckDB twin of graft.TpchVerbatimBench: run the reference's 22
+"""DuckDB twin of `graft.VerbatimBench tpch [scale]`: run the reference's 22
 verbatim TPC-H query texts over the SAME staged parquet fixtures
 (fixtures/tpch/<scale>/), warm best-of-N, one JSON line out — the
 same-box apples-to-apples baseline for the engine's verbatim suite.

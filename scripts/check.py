@@ -14,6 +14,7 @@ import json
 import os
 import math
 import sys
+from decimal import Decimal
 
 import duckdb
 
@@ -76,7 +77,9 @@ def native_type_mismatch(con, outdir, name, sql):
         wq = con.execute(f"SELECT * FROM ({sql}) graft_tp LIMIT 200")
         wcols = [d[0] for d in wq.description]
         wrows = wq.fetchmany(200)
-    except Exception:
+    except Exception as e:
+        # a probe that cannot run is a skipped check, never a silent pass
+        print(f"type probe SKIPPED for {name}: {e}")
         return None
 
     def coltypes(cols, rows):
@@ -98,10 +101,24 @@ def native_type_mismatch(con, outdir, name, sql):
     # Same-type Decimal SCALE seams (Decimal('4.00') vs Decimal('4.0'))
     # also fail the driver's string hash: cell-wise str compare over the
     # probed rows. Valid only when both sides carry the canonical total
-    # ORDER BY (graft_ord), which row-aligns them.
+    # ORDER BY (graft_ord), which selects the same rows on both sides; the
+    # rows are then sorted by their common columns' values, because SQL
+    # does not guarantee the subquery's order survives the LIMIT wrapper.
     if "graft_ord" in sql and len(grows) == len(wrows):
         gi = {c: i for i, c in enumerate(gcols)}
         wi = {c: i for i, c in enumerate(wcols)}
+        common = sorted(set(gi) & set(wi))
+
+        def cell(v):
+            if v is None:
+                return (0, 0.0, "")
+            if isinstance(v, (int, float, Decimal)) and not isinstance(v, bool):
+                f = float(v)
+                return (3, 0.0, "nan") if math.isnan(f) else (1, f, "")
+            return (2, 0.0, str(v))
+
+        grows = sorted(grows, key=lambda r: [cell(r[gi[c]]) for c in common])
+        wrows = sorted(wrows, key=lambda r: [cell(r[wi[c]]) for c in common])
         for c in sorted(set(gt) & set(wt)):
             if gt[c] == "Decimal" and wt[c] == "Decimal" and \
                     not any(b[0] == c for b in bad):

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: explain + time individual headline queries against the SAME
   * staged layout and session configuration Bench measures, so plan-level
@@ -11,22 +10,10 @@ object BenchExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = EngineSession.builder(s"local[$cpus]", 8)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_BENCH_COPIES=10 profiles against the inflated corpus —
-    // the same layout Bench's queries_sf10x block times.
-    val copies = sys.env.getOrElse("SPARK_GRAFT_BENCH_COPIES", "1").toInt
-    val benchDir = Bench.stageFixtures(spark, sfDir, cpus, copies)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    spark.conf.set("spark.sql.files.openCostInBytes", "8m")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    val metrics = new compaction.ChunkMetrics().install(spark)
+    val spark = BenchConf.session(cpus, 8)
+    val benchDir = BenchConf.stageFixtures(spark, sfDir, cpus)
+    BenchConf.staged(spark)
+    BenchConf.tuned(spark)
     args.foreach { n =>
       val df = SparkEntry.queries(n)(spark, benchDir)
       println(s"\n========== $n ==========")
@@ -34,15 +21,13 @@ object BenchExplain {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       def once(): Double = {
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, benchDir)
-          .write.format("noop").mode("overwrite").save()
+        Bench.noop(SparkEntry.queries(n)(spark, benchDir))
         (System.nanoTime() - t0) / 1e9
       }
       val times = (1 to 6).map(_ => once())
       println(f"[time] $n warm samples: ${times.map(t => f"$t%.3f").mkString(" ")}")
       // per-stage breakdown of ONE more run: where the wall time goes
-      metrics.reset()
-      once()
+      val (_, metrics) = compaction.ChunkMetrics.measure(spark)(once())
       metrics.snapshot.toSeq.sortBy(_._1).foreach { case (sid, st) =>
         println(f"[stage] $n $sid%5d  ${st.wallMillis}%5d ms  ${st.tasks}%4d tasks  " +
           f"in=${st.inputRecords}%8d  shufR=${st.shuffleReadRecords}%8d")

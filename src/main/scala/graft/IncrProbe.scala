@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
   * costs scale with the BATCH, not the corpus.
   *
   * Method: hold the batch fixed — the base copy's docs with doc_id ≡ 0
-  * (mod 10); `Bench.stageFixtures`' copy shift (10⁹, ≡ 0 mod 10) keeps
+  * (mod 10); `BenchConf.stageFixtures`' copy shift (10⁹, ≡ 0 mod 10) keeps
   * copy-0 ids identifiable — while the indexed corpus grows through
   * `SPARK_GRAFT_INCR_COPIES` (default 10,20,40). Per corpus size: build
   * AND STAGE the MinHash index to parquet (untimed — that is ingest
@@ -35,7 +35,7 @@ object IncrProbe {
 
     val rows = copiesList.map { c =>
       val t0 = System.nanoTime()
-      val dir = Bench.stageFixtures(spark, sfDir, cpus,
+      val dir = BenchConf.stageFixtures(spark, sfDir, cpus,
         copies = c, moneyDecimals = false)
       val docs = Tables.t(spark, dir, "documents")
       // fixed batch: the base copy's ≡0 (mod 10) ids — identical docs at
@@ -59,20 +59,17 @@ object IncrProbe {
       scala.reflect.io.Path(dir).deleteRecursively()
       (c, nCorpus, nBatch, indexSec, runSec, nPairs)
     }
-    val json = rows.map { case (c, nc, nb, is, rs, np) =>
-      s"""{"copies":$c,"corpus_docs":$nc,"batch_docs":$nb,""" +
-        s""""index_sec":${"%.1f".format(is)},""" +
-        s""""incremental_sec":${"%.1f".format(rs)},"pairs":$np}"""
-    }.mkString("""{"probe":"incremental_dedup_batch_scaling","runs":[""",
-      ",", "]}")
-    try {
-      val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")
-      try w.println(json) finally w.close()
-      System.err.println(s"[incr-probe] record -> $out")
-    } catch { case e: Throwable =>
-      System.err.println(s"[incr-probe] write failed (${e.getMessage})")
-    }
-    println(json)
+    val rec = scala.collection.immutable.ListMap(
+      "probe" -> "incremental_dedup_batch_scaling",
+      "runs" -> rows.map { case (c, nc, nb, is, rs, np) =>
+        scala.collection.immutable.ListMap("copies" -> c, "corpus_docs" -> nc,
+          "batch_docs" -> nb, "index_sec" -> math.rint(is * 10) / 10,
+          "incremental_sec" -> math.rint(rs * 10) / 10, "pairs" -> np)
+      })
+    scala.util.Try(Json.writeFile(out, rec)).fold(
+      e => System.err.println(s"[incr-probe] write failed (${e.getMessage})"),
+      _ => System.err.println(s"[incr-probe] record -> $out"))
+    println(Json.write(rec))
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import scala.collection.immutable.ListMap
 
 /** 100×-scale probe (round-14 verdict item 7; round-15: invariance on
   * every entry by default): push the scale evidence
@@ -71,16 +72,13 @@ object Sf10Probe {
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     def secs(since: Long): Double = (System.nanoTime() - since) / 1e9
-    val dir = Bench.stageFixtures(spark, sfDir, cpus,
+    val dir = BenchConf.stageFixtures(spark, sfDir, cpus,
       copies = copies, moneyDecimals = false)
     val stageSec = secs(t0)
     System.err.println(f"[probe] staged ${copies}x of $sfDir in $stageSec%.0fs -> $dir")
     // the production config the engine ships with — the probe must hold
     // there, not under a tuned benchmark config
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
-    spark.conf.set("spark.sql.shuffle.partitions", math.max(cpus, 8).toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    BenchConf.production(spark, cpus)
     compaction.Compact.enableAqeCompaction(spark)
 
     val results = entries.map { name =>
@@ -100,19 +98,16 @@ object Sf10Probe {
       }
       (name, sec, n, h, inv)
     }
-    val json = results.map { case (n, sec, rows, h, inv) =>
-      s""""$n":{"sec":${"%.2f".format(sec)},"rows":$rows,"hash":"$h","invariance":"$inv"}"""
-    }.mkString(
-      s"""{"copies":$copies,"sf":"$sfDir","stage_sec":${"%.1f".format(stageSec)},"cpus":$cpus,"entries":{""",
-      ",", "}}")
-    try {
-      val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")
-      try w.println(json) finally w.close()
-      System.err.println(s"[probe] record -> $out")
-    } catch { case e: Throwable =>
-      System.err.println(s"[probe] write failed (${e.getMessage})")
-    }
-    println(json)
+    val rec = ListMap("copies" -> copies, "sf" -> sfDir,
+      "stage_sec" -> math.rint(stageSec * 10) / 10, "cpus" -> cpus,
+      "entries" -> ListMap.from(results.map { case (n, sec, rows, h, inv) =>
+        n -> ListMap("sec" -> math.rint(sec * 100) / 100, "rows" -> rows, "hash" -> h,
+          "invariance" -> inv)
+      }))
+    scala.util.Try(Json.writeFile(out, rec)).fold(
+      e => System.err.println(s"[probe] write failed (${e.getMessage})"),
+      _ => System.err.println(s"[probe] record -> $out"))
+    println(Json.write(rec))
     scala.reflect.io.Path(dir).deleteRecursively()
     spark.stop()
   }

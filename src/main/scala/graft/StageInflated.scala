@@ -15,7 +15,7 @@ object StageInflated {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     val spark = EngineSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Bench.stageFixtures(spark, sfDir, cpus,
+    val dir = BenchConf.stageFixtures(spark, sfDir, cpus,
       copies = copiesStr.toInt, moneyDecimals = false, outDir = Some(outDir))
     println(s"STAGED $dir")
     spark.stop()

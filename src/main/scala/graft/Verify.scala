@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -54,18 +55,14 @@ object Verify {
       (if (only.isEmpty) SparkEntry.queries
        else SparkEntry.queries.filter { case (n, _) => only(n) })
         .toSeq.sortBy(_._1) // deterministic order: partial runs are a prefix
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // The record files are rewritten after every entry, each atomically
+    // (tmp + move), so a crash mid-gate leaves the last complete record.
+    def writeAtomic(name: String, v: Any): Unit = {
+      val tmp = Paths.get(s"$outDir/$name.tmp")
+      Files.writeString(tmp, Json.write(v))
+      Files.move(tmp, Paths.get(s"$outDir/$name"),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    }
     // Wrap each oracle in the same canonical ORDER BY (quoted, sorted
     // column names, NULLS FIRST — DuckDB's default is NULLS LAST).
     // Queries whose oracle embeds its OWN total ORDER BY (multi-statement
@@ -98,49 +95,24 @@ object Verify {
     // yet (or never) dumped have no columnsByQuery entry (no ORDER BY
     // wrapper) and possibly stale parquet in a reused outDir — emitting
     // them would invite spurious order-dependent mismatches.
-    def writeOracleJson(): Unit = {
-      val json = SparkEntry.oracleSql
-        .filter { case (k, _) => columnsByQuery.contains(k) }
-        .toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(wrapped(k, v))}" }
-        .mkString("{", ",", "}")
-      val tmp = Paths.get(s"$outDir/oracle_sql.json.tmp")
-      Files.writeString(tmp, json)
-      Files.move(tmp, Paths.get(s"$outDir/oracle_sql.json"),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+    def writeOracleJson(): Unit = writeAtomic("oracle_sql.json", ListMap.from(
+      SparkEntry.oracleSql.filter { case (k, _) => columnsByQuery.contains(k) }
+        .toSeq.sortBy(_._1).map { case (k, v) => k -> wrapped(k, v) }))
     // Gate integrity: a thrown query must surface as a FAILED row, never a
     // vanished one (round 7: four regressions silently dropped out of the
     // correctness record because failures were only logged to stderr).
     // errors.json maps query name → exception message and is re-written
     // atomically after every failure, same crash-tolerance as oracle_sql.
     val errors = scala.collection.mutable.Map.empty[String, String]
-    def writeErrorsJson(): Unit = {
-      val json = errors.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}")
-      val tmp = Paths.get(s"$outDir/errors.json.tmp")
-      Files.writeString(tmp, json)
-      Files.move(tmp, Paths.get(s"$outDir/errors.json"),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+    def writeErrorsJson(): Unit = writeAtomic("errors.json", ListMap.from(errors.toSeq.sortBy(_._1)))
     recordLock.synchronized { writeErrorsJson() } // always present, even when empty: absence ≠ success
     // Per-entry wall-time record (round-15 verdict item 6): widens perf-
     // regression coverage from the 13 bench headliners to the whole gate.
     // Written atomically after every query (crash-tolerant, like the
     // oracle json); Bench diffs latest-vs-prev and flags >1.5× moves.
     val timings = scala.collection.mutable.Map.empty[String, Long]
-    def writeTimingsJson(): Unit = {
-      val json = timings.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
-      val tmp = Paths.get(s"$outDir/verify_timings.json.tmp")
-      Files.writeString(tmp, json)
-      Files.move(tmp, Paths.get(s"$outDir/verify_timings.json"),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+    def writeTimingsJson(): Unit =
+      writeAtomic("verify_timings.json", ListMap.from(timings.toSeq.sortBy(_._1)))
     val t0 = System.nanoTime()
     var done = 0
     def runOne(sess: SparkSession, name: String,
@@ -253,8 +225,6 @@ object Verify {
         if (Files.exists(latest))
           Files.move(latest, dir.resolve("verify_timings_prev.json"),
             StandardCopyOption.REPLACE_EXISTING)
-        val json = timings.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
         // loadavg annotation (r16 verdict: a noisy baseline was only
         // identifiable by side-channel knowledge — record the box state
         // in the file so a contended run is machine-detectable)
@@ -262,9 +232,8 @@ object Verify {
           scala.io.Source.fromFile("/proc/loadavg").mkString.trim
             .split("\\s+").take(3).mkString(" ")
         } catch { case _: Throwable => "" }
-        Files.writeString(latest,
-          s"""{"sf":"$sfDir","loadavg":"$load","threads":$threads,""" +
-            s""""timings":$json}""")
+        Files.writeString(latest, Json.write(ListMap("sf" -> sfDir, "loadavg" -> load,
+          "threads" -> threads, "timings" -> ListMap.from(timings.toSeq.sortBy(_._1)))))
         System.err.println(s"[verify] timings -> $latest (loadavg $load, threads $threads)")
       }
     } catch { case e: Throwable =>

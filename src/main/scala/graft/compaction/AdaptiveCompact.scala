@@ -70,19 +70,11 @@ class AdaptiveCompact(spark: SparkSession, val tuner: CompactTuner = new Compact
     val arm = tuner.selectArm()
     val target = tuner.arms(arm)
     applyArm(target)
-    val m = new ChunkMetrics().install(spark)
-    val t0 = System.nanoTime()
-    work(spark)
-    val secs = (System.nanoTime() - t0) / 1e9
-    // listener events are async: wait for a stable task count
-    val deadline = System.currentTimeMillis() + 10000
-    var prev = -1L; var stable = 0
-    while (stable < 3 && System.currentTimeMillis() < deadline) {
-      val n = m.snapshot.values.map(_.tasks).sum
-      if (n == prev && n > 0) stable += 1 else { stable = 0; prev = n }
-      Thread.sleep(100)
+    val (secs, m) = ChunkMetrics.measure(spark) {
+      val t0 = System.nanoTime()
+      work(spark)
+      (System.nanoTime() - t0) / 1e9
     }
-    spark.sparkContext.removeSparkListener(m)
     val stf = m.smallTaskFraction(1024)
     val cf = m.snapshot.keys.flatMap(m.chunkFactor).foldLeft(0.0)(math.max)
     val cost = secs * (1.0 + stf)

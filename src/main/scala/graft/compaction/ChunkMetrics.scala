@@ -1,9 +1,9 @@
 package graft.compaction
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Partition/batch-size metrology — the Spark re-expression of the
@@ -32,7 +32,8 @@ class ChunkMetrics extends SparkListener {
       var shuffleWriteRecords: Long = 0L,
       var shuffleWriteBytes: Long = 0L,
       var wallMillis: Long = 0L,
-      histogram: Array[Long] = new Array[Long](64))
+      histogram: Array[Long] = new Array[Long](64),
+      taskRecords: ArrayBuffer[Long] = ArrayBuffer.empty[Long])
 
   private val stages = TrieMap.empty[Int, StageStats]
 
@@ -59,6 +60,7 @@ class ChunkMetrics extends SparkListener {
         val processed = math.max(m.inputMetrics.recordsRead,
           m.shuffleReadMetrics.recordsRead)
         st.histogram(bucket(processed)) += 1
+        st.taskRecords += processed
       }
     }
   }
@@ -73,17 +75,19 @@ class ChunkMetrics extends SparkListener {
         math.max(s.inputRecords, s.shuffleReadRecords).toDouble / s.shuffleWriteRecords
     }
 
+  /** Tasks of one stage that processed fewer than `threshold` records. */
+  def smallTasks(s: StageStats, threshold: Long): Long =
+    s.synchronized(s.taskRecords.count(_ < threshold).toLong)
+
   /** Fraction of tasks that processed fewer than `threshold` records —
     * the trigger condition of the reference's dynamic compaction
     * (`chunk.size() < compact_threshold`, reference
-    * `src/execution/physical_operator.cpp:266`). */
+    * `src/execution/physical_operator.cpp:266`). Counted per task, not
+    * per log2 bucket: a 1500-record task is not small at 1024. */
   def smallTaskFraction(threshold: Long): Double = {
     val all = stages.values.toSeq
     val total = all.map(_.tasks).sum
-    if (total == 0) return 0.0
-    val cut = bucket(threshold)
-    val small = all.map(_.histogram.take(cut + 1).sum).sum
-    small.toDouble / total
+    if (total == 0) 0.0 else all.map(smallTasks(_, threshold)).sum.toDouble / total
   }
 
   def reset(): Unit = stages.clear()
@@ -91,5 +95,20 @@ class ChunkMetrics extends SparkListener {
   def install(spark: SparkSession): this.type = {
     spark.sparkContext.addSparkListener(this)
     this
+  }
+}
+
+object ChunkMetrics {
+
+  /** Runs `work` with a fresh [[ChunkMetrics]] installed, waits until the
+    * listener bus has delivered every event the work posted, and returns
+    * the work's result with the complete metrics. */
+  def measure[T](spark: SparkSession)(work: => T): (T, ChunkMetrics) = {
+    val m = new ChunkMetrics().install(spark)
+    try {
+      val out = work
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      (out, m)
+    } finally spark.sparkContext.removeSparkListener(m)
   }
 }

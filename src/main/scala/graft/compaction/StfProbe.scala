@@ -1,6 +1,6 @@
 package graft.compaction
 
-import graft.{Bench, EngineSession, SparkEntry}
+import graft.{Bench, BenchConf, EngineSession, SparkEntry}
 
 /** Per-stage small-task diagnostic for the compaction metrology: runs one
   * query (default `job_deep_join`) against the staged bench layout and
@@ -22,27 +22,17 @@ object StfProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = EngineSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    val benchDir = Bench.stageFixtures(spark, sfDir, cpus)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    spark.conf.set("spark.sql.files.openCostInBytes", "8m")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    val benchDir = BenchConf.stageFixtures(spark, sfDir, cpus)
+    BenchConf.staged(spark)
+    BenchConf.tuned(spark)
     if (aqe) Compact.enableAqeCompaction(spark)
-    else spark.conf.set("spark.sql.adaptive.enabled", "false")
     // warm once so listener sees the steady-state plan, then measure
-    SparkEntry.queries(query)(spark, benchDir)
-      .write.format("noop").mode("overwrite").save()
-    val m = new ChunkMetrics().install(spark)
-    m.reset()
-    SparkEntry.queries(query)(spark, benchDir)
-      .write.format("noop").mode("overwrite").save()
-    Thread.sleep(2000)
+    Bench.noop(SparkEntry.queries(query)(spark, benchDir))
+    val (_, m) = ChunkMetrics.measure(spark)(Bench.noop(SparkEntry.queries(query)(spark, benchDir)))
     val cut = 1024L
     println(f"stage  tasks  input_rec  shuf_read  shuf_write  wall_ms  small")
     m.snapshot.toSeq.sortBy(_._1).foreach { case (sid, s) =>
-      val cutB = 64 - java.lang.Long.numberOfLeadingZeros(cut) - 1
-      val small = s.histogram.take(cutB + 1).sum
-      println(f"$sid%5d  ${s.tasks}%5d  ${s.inputRecords}%9d  ${s.shuffleReadRecords}%9d  ${s.shuffleWriteRecords}%10d  ${s.wallMillis}%7d  $small%5d")
+      println(f"$sid%5d  ${s.tasks}%5d  ${s.inputRecords}%9d  ${s.shuffleReadRecords}%9d  ${s.shuffleWriteRecords}%10d  ${s.wallMillis}%7d  ${m.smallTasks(s, cut)}%5d")
     }
     println(f"small_task_fraction(${cut}) = ${m.smallTaskFraction(cut)}%.3f (aqe=$aqe)")
     spark.stop()

@@ -40,7 +40,6 @@ case class SplitPipelineRule() extends Rule[LogicalPlan] with Logging {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SplitPipelineRule())
-    e.injectPlannerStrategy(s => GraftIEJoinStrategy(s))
     // DuckDB-dialect fallback: native parse wins; on ParseException the
     // statement is retried through graft.sql.DuckDialect.translate.
     e.injectParser((_, parser) => new graft.sql.DuckFallbackParser(parser))

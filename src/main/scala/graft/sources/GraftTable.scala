@@ -686,8 +686,11 @@ object GraftTable {
     // inserts only needs the hit files' rows.
     val existingKeys =
       if (hitFiles.isEmpty) None else Some(readFiles(spark, root, hitFiles))
+    // The USING anti-join puts the key columns first; select back into
+    // schema order, since the union below is by position.
     val inserts = existingKeys match {
       case Some(t) => src.join(t.select(keys.map(col): _*), keys, "left_anti")
+        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
       case None => src
     }
     val newRows = updated.map(_.unionAll(inserts)).getOrElse(inserts)

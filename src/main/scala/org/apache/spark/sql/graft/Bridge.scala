@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `private[sql]` (the Column API is now backend-agnostic), so this one
   * object lives inside the `org.apache.spark.sql` namespace to lend the
   * engine's custom Catalyst expressions a public Column surface. No Spark
-  * internals are modified.
+  * internals are modified. Being inside `org.apache.spark`, it also lends
+  * the harness the `private[spark]` listener-bus drain.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -21,4 +22,9 @@ object Bridge {
     * attributes — no analyzer pass). */
   def catalystExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Blocks until every listener event posted so far has been delivered,
+    * so a listener read right after an action sees all of its tasks. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

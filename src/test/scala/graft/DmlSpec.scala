@@ -85,6 +85,28 @@ class DmlSpec extends SparkSpec {
     assert(rows.size === 8)
   }
 
+  test("merge on a key that is not a schema prefix writes inserted rows in schema order") {
+    val root = freshRoot()
+    // lineitem-shaped: the key (l_orderkey, l_linenumber) is not the
+    // leading column pair, so the insert anti-join reorders columns
+    val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+      "l_quantity", "l_returnflag")
+    GraftTable.create(spark, root, spark.createDataFrame(Seq(
+      (1L, 10L, 100L, 1, 5.0, "N"), (1L, 11L, 101L, 2, 6.0, "N"),
+      (2L, 12L, 102L, 1, 7.0, "R"))).toDF(cols: _*))
+    // one MERGE both updates line 2 and inserts line 3 of order 1
+    GraftTable.merge(spark, root, spark.createDataFrame(Seq(
+      (1L, 11L, 101L, 2, 9.0, "A"), (1L, 13L, 103L, 3, 4.0, "F"))).toDF(cols: _*),
+      Seq("l_orderkey", "l_linenumber"))
+    val order1 = GraftTable.read(spark, root).filter(col("l_orderkey") === 1L)
+      .orderBy("l_linenumber").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3), r.getDouble(4), r.getString(5)))
+      .toSeq
+    assert(order1 === Seq((1L, 10L, 100L, 1, 5.0, "N"), (1L, 11L, 101L, 2, 9.0, "A"),
+      (1L, 13L, 103L, 3, 4.0, "F")))
+    assert(GraftTable.read(spark, root).count() === 4)
+  }
+
   test("time travel: every version stays readable after later DML") {
     val root = freshRoot()
     GraftTable.create(spark, root, spark.range(100).toDF("id"))

@@ -54,6 +54,20 @@ class ChunkMetricsSpec extends SparkSpec {
     assert(snap.nonEmpty)
     assert(snap.values.map(_.inputRecords).sum > 0)
   }
+
+  test("smallTaskFraction counts tasks below the threshold exactly, not by log2 bucket") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stf_spec_").toString
+    // two files of 1500 rows: two scan tasks, each above 1024 records but
+    // inside the same log2 bucket [1024, 2048) as the threshold
+    spark.range(0, 3000, 1, 2).write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir) // schema inference outside the measure
+    val (_, m) = ChunkMetrics.measure(spark)(
+      scan.write.format("noop").mode("overwrite").save())
+    assert(m.snapshot.values.flatMap(_.taskRecords).toSeq.sorted === Seq(1500L, 1500L))
+    assert(m.smallTaskFraction(1024) === 0.0)
+    assert(m.smallTaskFraction(1500) === 0.0)
+    assert(m.smallTaskFraction(1501) === 1.0)
+  }
 }
 
 class CompactSpec extends SparkSpec {
