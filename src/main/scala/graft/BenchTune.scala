@@ -13,10 +13,8 @@ object BenchTune {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = EngineSession.local(cpus)
 
-    val headline = Seq(
-      "q1_pricing", "q3_shipping", "q5_region", "q10_returned",
-      "join_asof", "agg_rollup", "win_rank", "shape_unnest",
-      "ann_topk", "text_stats", "compact_filter")
+    // the headline minus its two slowest entries, so a sweep stays short
+    val headline = Bench.Headline.filterNot(Set("job_deep_join", "dedup_minhash"))
     val fns = headline.map(n => n -> SparkEntry.queries(n))
 
     /** Stage fixtures: `parts` files per big table, codec, optional
@@ -58,8 +56,7 @@ object BenchTune {
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
       spark.conf.set("spark.sql.shuffle.partitions", shuf.toString)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (bc * 1024 * 1024).toString)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      spark.conf.set("spark.sql.files.openCostInBytes", "8m")
+      BenchConf.staged(spark)
       fns.foreach { case (_, fn) => once(fn, dir) } // warm
       val results = fns.map { case (name, fn) =>
         name -> (1 to 3).map(_ => once(fn, dir)).min

@@ -21,8 +21,7 @@ import scala.collection.immutable.ListMap
   * All three run under [[BenchConf.verbatim]]. Each suite is warmed TWICE
   * (the first sweep pays codegen compile + footer caches, the second gets
   * C2 onto the join/agg loops: single-warm best-of-3 ran 2-4× slower on
-  * the join-heavy TPC-H queries), then timed best-of-`SPARK_GRAFT_BENCH_RUNS`
-  * (default 3). Emits one JSON line and writes it to the suite's
+  * the join-heavy TPC-H queries), then timed best-of-3. Emits one JSON line and writes it to the suite's
   * `bench_evidence/` record.
   *
   * Run: `sbt "runMain graft.VerbatimBench <tpch|tpcds|imdb> [scale]"`
@@ -31,6 +30,7 @@ import scala.collection.immutable.ListMap
 object VerbatimBench {
 
   private type Run = SparkSession => DataFrame
+  private val Runs = 3
 
   /** Per suite: the metric name, the record path, and its queries as
     * (JSON key, runner) for a fixture dir. */
@@ -50,7 +50,6 @@ object VerbatimBench {
       s"usage: VerbatimBench <${suites.keys.toSeq.sorted.mkString("|")}> [scale]"))
     val scale = args.lift(1).getOrElse("sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val spark = BenchConf.session(cpus, 32)
     BenchConf.verbatim(spark)
     // only the name of the fixture dir argument is read: it selects the scale
@@ -61,10 +60,10 @@ object VerbatimBench {
       (System.nanoTime() - t0) / 1e9
     }
     (1 to 2).foreach(_ => queries.foreach(q => once(q._2)))
-    val best = queries.map { case (k, q) => k -> (1 to runs).map(_ => once(q)).min }
+    val best = queries.map { case (k, q) => k -> (1 to Runs).map(_ => once(q)).min }
     val scope = if (name == "imdb") "fixtures" -> sql.JobVerbatim.fixtureRoot else "scale" -> scale
     val record = ListMap("metric" -> suite.metric, "value" -> Bench.r3(best.map(_._2).sum),
-      "unit" -> "sec", "runs" -> runs, scope,
+      "unit" -> "sec", "runs" -> Runs, scope,
       "queries" -> ListMap.from(best.map { case (k, t) => k -> Bench.r3(t) }))
     scala.util.Try(Json.writeFile(suite.out, record)).fold(
       e => System.err.println(s"[$name-bench] write failed (${e.getMessage})"),

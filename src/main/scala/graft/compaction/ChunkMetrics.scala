@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * per-chunk-size histograms, `:335-432` HashJoinProfiler and its "chunk
   * factor" = input-chunks / output-chunks per probe).
   *
-  * In Spark the "chunk" is the task partition: this listener folds task
-  * metrics into log2-bucketed histograms of records-per-task per stage,
+  * In Spark the "chunk" is the task partition: this listener keeps the
+  * records each task processed per stage (and their log2 histogram),
   * and exposes a stage-level chunk factor (input records / output records)
   * — small-fragment proliferation after selective operators shows up as
   * mass in the low buckets, exactly the pathology the paper's compaction
@@ -32,8 +32,15 @@ class ChunkMetrics extends SparkListener {
       var shuffleWriteRecords: Long = 0L,
       var shuffleWriteBytes: Long = 0L,
       var wallMillis: Long = 0L,
-      histogram: Array[Long] = new Array[Long](64),
-      taskRecords: ArrayBuffer[Long] = ArrayBuffer.empty[Long])
+      taskRecords: ArrayBuffer[Long] = ArrayBuffer.empty[Long]) {
+
+    /** Tasks per log2 bucket of records processed, from `taskRecords`. */
+    def histogram: Array[Long] = synchronized {
+      val h = new Array[Long](64)
+      taskRecords.foreach(n => h(bucket(n)) += 1)
+      h
+    }
+  }
 
   private val stages = TrieMap.empty[Int, StageStats]
 
@@ -59,7 +66,6 @@ class ChunkMetrics extends SparkListener {
         st.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
         val processed = math.max(m.inputMetrics.recordsRead,
           m.shuffleReadMetrics.recordsRead)
-        st.histogram(bucket(processed)) += 1
         st.taskRecords += processed
       }
     }
@@ -100,14 +106,23 @@ class ChunkMetrics extends SparkListener {
 
 object ChunkMetrics {
 
+  /** Longest wait for the listener bus to drain; Spark's own default is
+    * 10 s, which a listener backlog on a loaded box can exceed. */
+  private val DrainBudgetMs = 60000L
+
   /** Runs `work` with a fresh [[ChunkMetrics]] installed, waits until the
     * listener bus has delivered every event the work posted, and returns
-    * the work's result with the complete metrics. */
+    * the work's result with the metrics. If the bus does not drain within
+    * the budget, says so and returns the metrics seen so far. */
   def measure[T](spark: SparkSession)(work: => T): (T, ChunkMetrics) = {
     val m = new ChunkMetrics().install(spark)
     try {
       val out = work
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      try org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext, DrainBudgetMs)
+      catch { case _: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[chunk-metrics] listener bus not drained after " +
+          s"${DrainBudgetMs / 1000} s; metrics may be incomplete")
+      }
       (out, m)
     } finally spark.sparkContext.removeSparkListener(m)
   }

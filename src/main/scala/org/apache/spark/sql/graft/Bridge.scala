@@ -24,7 +24,8 @@ object Bridge {
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
   /** Blocks until every listener event posted so far has been delivered,
-    * so a listener read right after an action sees all of its tasks. */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
+    * so a listener read right after an action sees all of its tasks.
+    * Throws `TimeoutException` if the bus is still busy after the budget. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMillis: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMillis)
 }
