@@ -28,7 +28,7 @@ object BenchExplain {
       println(f"[time] $n warm samples: ${times.map(t => f"$t%.3f").mkString(" ")}")
       // per-stage breakdown of ONE more run: where the wall time goes
       val (_, metrics) = compaction.ChunkMetrics.measure(spark)(once())
-      metrics.snapshot.toSeq.sortBy(_._1).foreach { case (sid, st) =>
+      metrics.snapshot.toSeq.sortBy(_._1).foreach { case ((sid, _), st) =>
         println(f"[stage] $n $sid%5d  ${st.wallMillis}%5d ms  ${st.tasks}%4d tasks  " +
           f"in=${st.inputRecords}%8d  shufR=${st.shuffleReadRecords}%8d")
       }

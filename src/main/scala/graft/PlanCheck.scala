@@ -24,7 +24,6 @@ object PlanCheck {
     // static mode: explain + smell-check without executing (fast full sweep)
     val static = sys.env.get("SPARK_GRAFT_PLANCHECK_STATIC").contains("1")
     val spark = EngineSession.local(8)
-    val metrics = new compaction.ChunkMetrics().install(spark)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val plan = df.queryExecution.explainString(
@@ -39,16 +38,15 @@ object PlanCheck {
       smells.filter(_._2).foreach { case (s, _) => println(s"  [smell] $s") }
 
       // -- EXPLAIN ANALYZE analog: execute and report per-stage runtime --
-      metrics.reset()
       try if (!static) {
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        println("  [analyze] stage   ms  tasks  input      shufRead   shufWrite  chunkF  task-size-histogram(log2)")
-        metrics.snapshot.toSeq.sortBy(_._1).foreach { case (sid, st) =>
-          val cf = metrics.chunkFactor(sid).map(v => f"$v%7.2f").getOrElse("      -")
+        val (_, metrics) = compaction.ChunkMetrics.measure(spark)(
+          SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save())
+        println("  [analyze] stage.attempt   ms  tasks  input      shufRead   shufWrite  chunkF  task-size-histogram(log2)")
+        metrics.snapshot.toSeq.sortBy(_._1).foreach { case ((sid, att), st) =>
+          val cf = st.chunkFactor.map(v => f"$v%7.2f").getOrElse("      -")
           val hist = st.histogram.zipWithIndex.filter(_._1 > 0)
             .map { case (c, b) => s"2^$b:$c" }.mkString(" ")
-          println(f"  [analyze] $sid%5d  ${st.wallMillis}%4d  ${st.tasks}%5d  ${st.inputRecords}%9d  " +
+          println(f"  [analyze] $sid%5d.$att%-7d  ${st.wallMillis}%4d  ${st.tasks}%5d  ${st.inputRecords}%9d  " +
             f"${st.shuffleReadRecords}%9d  ${st.shuffleWriteRecords}%9d  $cf  $hist")
         }
         println(f"  [analyze] small-task fraction (<1024 rows): ${metrics.smallTaskFraction(1024)}%.3f")

@@ -76,7 +76,7 @@ class AdaptiveCompact(spark: SparkSession, val tuner: CompactTuner = new Compact
       (System.nanoTime() - t0) / 1e9
     }
     val stf = m.smallTaskFraction(1024)
-    val cf = m.snapshot.keys.flatMap(m.chunkFactor).foldLeft(0.0)(math.max)
+    val cf = m.snapshot.values.flatMap(_.chunkFactor).foldLeft(0.0)(math.max)
     val cost = secs * (1.0 + stf)
     tuner.updateArm(arm, cost)
     val ep = Episode(arm, target, secs)

@@ -13,11 +13,13 @@ import scala.jdk.CollectionConverters._
   * factor" = input-chunks / output-chunks per probe).
   *
   * In Spark the "chunk" is the task partition: this listener keeps the
-  * records each task processed per stage (and their log2 histogram),
-  * and exposes a stage-level chunk factor (input records / output records)
-  * — small-fragment proliferation after selective operators shows up as
-  * mass in the low buckets, exactly the pathology the paper's compaction
-  * removes.
+  * records each task processed per stage attempt (and their log2
+  * histogram), and exposes a stage-level chunk factor (input records /
+  * output records) — small-fragment proliferation after selective
+  * operators shows up as mass in the low buckets, exactly the pathology
+  * the paper's compaction removes. Stats are keyed by (stageId, attempt):
+  * a retried attempt re-runs tasks, and merging them into the first
+  * attempt's list would count those partitions twice.
   */
 class ChunkMetrics extends SparkListener {
 
@@ -40,13 +42,22 @@ class ChunkMetrics extends SparkListener {
       taskRecords.foreach(n => h(bucket(n)) += 1)
       h
     }
+
+    /** Records-in / records-out of this attempt — the chunk-factor analog:
+      * high values mean downstream stages would see many small fragments. */
+    def chunkFactor: Option[Double] = synchronized {
+      if (shuffleWriteRecords > 0)
+        Some(math.max(inputRecords, shuffleReadRecords).toDouble / shuffleWriteRecords)
+      else None
+    }
   }
 
-  private val stages = TrieMap.empty[Int, StageStats]
+  /** Keyed by (stageId, stage attempt number). */
+  private val stages = TrieMap.empty[(Int, Int), StageStats]
 
   override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
     val info = ev.stageInfo
-    val st = stages.getOrElseUpdate(info.stageId, StageStats())
+    val st = stages.getOrElseUpdate((info.stageId, info.attemptNumber()), StageStats())
     st.synchronized {
       st.wallMillis = (for {
         s <- info.submissionTime; c <- info.completionTime
@@ -57,7 +68,7 @@ class ChunkMetrics extends SparkListener {
   override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = {
     val m = ev.taskMetrics
     if (m != null) {
-      val st = stages.getOrElseUpdate(ev.stageId, StageStats())
+      val st = stages.getOrElseUpdate((ev.stageId, ev.stageAttemptId), StageStats())
       st.synchronized {
         st.tasks += 1
         st.inputRecords += m.inputMetrics.recordsRead
@@ -71,15 +82,12 @@ class ChunkMetrics extends SparkListener {
     }
   }
 
-  def snapshot: Map[Int, StageStats] = stages.toMap
+  /** Stats per (stageId, attempt number). */
+  def snapshot: Map[(Int, Int), StageStats] = stages.toMap
 
-  /** Records-in / records-out per stage — the chunk-factor analog: high
-    * values mean downstream stages would see many small fragments. */
+  /** Chunk factor of a stage's latest attempt. */
   def chunkFactor(stageId: Int): Option[Double] =
-    stages.get(stageId).collect {
-      case s if s.shuffleWriteRecords > 0 =>
-        math.max(s.inputRecords, s.shuffleReadRecords).toDouble / s.shuffleWriteRecords
-    }
+    stages.keys.filter(_._1 == stageId).maxOption.flatMap(stages(_).chunkFactor)
 
   /** Tasks of one stage that processed fewer than `threshold` records. */
   def smallTasks(s: StageStats, threshold: Long): Long =

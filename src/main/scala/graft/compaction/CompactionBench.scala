@@ -57,7 +57,7 @@ object CompactionBench {
   /** dedup_minhash's eight slowest stages in one instrumented pass. */
   def minhashStages(spark: SparkSession, dir: String): Seq[StageRow] = {
     val (_, m) = ChunkMetrics.measure(spark)(Bench.noop(SparkEntry.queries("dedup_minhash")(spark, dir)))
-    m.snapshot.toSeq.sortBy(-_._2.wallMillis).take(8).map { case (sid, s) =>
+    m.snapshot.toSeq.sortBy(-_._2.wallMillis).take(8).map { case ((sid, _), s) =>
       StageRow(sid, s.wallMillis, s.tasks, s.inputRecords, s.shuffleReadRecords,
         s.shuffleWriteRecords, s.shuffleWriteBytes >> 20)
     }

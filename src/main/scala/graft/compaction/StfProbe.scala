@@ -31,7 +31,7 @@ object StfProbe {
     val (_, m) = ChunkMetrics.measure(spark)(Bench.noop(SparkEntry.queries(query)(spark, benchDir)))
     val cut = 1024L
     println(f"stage  tasks  input_rec  shuf_read  shuf_write  wall_ms  small")
-    m.snapshot.toSeq.sortBy(_._1).foreach { case (sid, s) =>
+    m.snapshot.toSeq.sortBy(_._1).foreach { case ((sid, _), s) =>
       println(f"$sid%5d  ${s.tasks}%5d  ${s.inputRecords}%9d  ${s.shuffleReadRecords}%9d  ${s.shuffleWriteRecords}%10d  ${s.wallMillis}%7d  ${m.smallTasks(s, cut)}%5d")
     }
     println(f"small_task_fraction(${cut}) = ${m.smallTaskFraction(cut)}%.3f (aqe=$aqe)")

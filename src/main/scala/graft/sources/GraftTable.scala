@@ -34,9 +34,11 @@ import scala.jdk.CollectionConverters._
   *    atomic comparable columns in the manifest line itself (the same
   *    data-skipping envelope Iceberg/Delta keep in their logs; reference
   *    analog: per-row-group zone maps,
-  *    `src/storage/statistics/numeric_stats.cpp`). Collecting them is
-  *    one distributed scan of ONLY the freshly written files, amortized
-  *    into the write.
+  *    `src/storage/statistics/numeric_stats.cpp`, kept on the append
+  *    path). They come from the parquet footers the write just produced,
+  *    read in the writing JVM with no Spark job; only columns a footer keeps no
+  *    bounds for (INT96 timestamps, strings past parquet-mr's 4 KB stats
+  *    limit) cost one aggregate over the files that lack them.
   *  - DELETE/UPDATE/MERGE rewrite ONLY the files that contain affected
   *    rows, found in two pruning layers: (1) MANIFEST pruning — the
   *    predicate's `col (=,<,<=,>,>=,IN) literal` conjuncts (and MERGE's
@@ -116,7 +118,7 @@ object GraftTable {
   import org.apache.spark.sql.types.{BooleanType, DateType, NumericType,
     StringType, TimestampNTZType, TimestampType}
 
-  private def statEligible(dt: DataType): Boolean = dt match {
+  private[sources] def statEligible(dt: DataType): Boolean = dt match {
     case _: NumericType | StringType | DateType | TimestampType |
          TimestampNTZType | BooleanType => true
     case _ => false
@@ -135,7 +137,7 @@ object GraftTable {
     *    expansion — Float.toString's shortest repr ("0.3") decodes to a
     *    decimal BELOW the widened value (0.30000001…) and boundary
     *    predicates would prune files that contain matches. */
-  private def encodeExternal(v: Any): Option[String] = v match {
+  private[sources] def encodeExternal(v: Any): Option[String] = v match {
     case null => None
     case s: String => Some(s)
     case b: Boolean => Some(if (b) "1" else "0")
@@ -407,45 +409,115 @@ object GraftTable {
   private def writeFiles(df: DataFrame, root: String): Seq[String] = {
     val rel = s"data/${java.util.UUID.randomUUID}"
     df.write.parquet(abs(root, rel))
-    val stream = Files.list(Paths.get(abs(root, rel)))
-    val paths = try stream.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map(n => s"$rel/$n").toSeq.sorted
-    finally stream.close()
-    if (paths.isEmpty) paths else statsLines(df.sparkSession, root, paths, df.schema)
+    val dir = new org.apache.hadoop.fs.Path(abs(root, rel))
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val files = dir.getFileSystem(conf).listStatus(dir).toSeq
+      .filter { st => val n = st.getPath.getName
+        n.startsWith("part-") && n.endsWith(".parquet") }
+      .sortBy(_.getPath.getName)
+    if (files.isEmpty) Nil
+    else statsLines(df.sparkSession, root, rel, files, df.schema)
+  }
+
+  /** What one file's footer says about one column. */
+  private sealed trait FooterStat
+  /** No non-null value, or a float/double NaN (parquet-mr drops min/max
+    * from a chunk that holds one): the field is omitted. */
+  private case object Omit extends FooterStat
+  /** Values present but no usable footer bounds: INT96 timestamps (parquet
+    * keeps no INT96 stats), strings past parquet-mr's 4 KB stats limit. */
+  private case object Rescan extends FooterStat
+  /** External min/max, in the form a Spark scan would return them. */
+  private final case class Bounds(min: Any, max: Any) extends FooterStat
+
+  /** Fold one column's chunk statistics over every row group of a footer
+    * (parquet's own merge, with the column's own comparator) and decode
+    * the result to external values. */
+  private def footerStat(meta: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      f: org.apache.spark.sql.types.StructField): FooterStat = {
+    import org.apache.spark.sql.types._
+    val path = org.apache.parquet.hadoop.metadata.ColumnPath.get(f.name)
+    val stats = meta.getBlocks.asScala.toSeq
+      .flatMap(_.getColumns.asScala.find(_.getPath == path))
+      .filterNot { c => val s = c.getStatistics
+        s.isNumNullsSet && s.getNumNulls == c.getValueCount }
+      .map(_.getStatistics)
+    if (stats.isEmpty) Omit
+    else if (!stats.forall(_.hasNonNullValue))
+      f.dataType match { case FloatType | DoubleType => Omit; case _ => Rescan }
+    else {
+      val all = stats.head.copy()
+      stats.tail.foreach(all.mergeStatistics)
+      def external(v: Any): Option[Any] = (f.dataType, v) match {
+        case (ByteType | ShortType | IntegerType | LongType | FloatType |
+              DoubleType | BooleanType | DateType | TimestampNTZType, _) => Some(v)
+        case (d: DecimalType, u) =>
+          val unscaled = u match {
+            case b: org.apache.parquet.io.api.Binary => new java.math.BigInteger(b.getBytes)
+            case n: Number => java.math.BigInteger.valueOf(n.longValue)
+          }
+          Some(new java.math.BigDecimal(unscaled, d.scale))
+        case (StringType, b: org.apache.parquet.io.api.Binary) => Some(b.toStringUsingUTF8)
+        case _ => None // TimestampType: Spark writes INT96, which keeps no stats
+      }
+      (external(all.genericGetMin), external(all.genericGetMax)) match {
+        case (Some(mn), Some(mx)) => Bounds(mn, mx)
+        case _ => Rescan
+      }
+    }
   }
 
   /** Per-file min/max stats for the eligible columns, folded into the
-    * manifest entry lines — one distributed scan of ONLY the freshly
-    * written files (the collect is #files × #cols scalars, a metadata
-    * envelope, never rows). A column that is all-null in a file (or
-    * non-comparable: NaN/±Inf) simply omits its field — readers treat
-    * absence as "must keep". */
-  private def statsLines(spark: SparkSession, root: String,
-      relFiles: Seq[String], schema: StructType): Seq[String] = {
+    * manifest entry lines. They come from the freshly written files'
+    * parquet footers, read in the writing JVM (no Spark job). Only the columns
+    * some footer has no bounds for go through one aggregate over the files
+    * that lack them (the collect is #files × #cols scalars, never rows).
+    * A column that is all-null in a file (or non-comparable: NaN/±Inf)
+    * simply omits its field — readers treat absence as "must keep". */
+  private def statsLines(spark: SparkSession, root: String, rel: String,
+      files: Seq[org.apache.hadoop.fs.FileStatus], schema: StructType): Seq[String] = {
+    val relFiles = files.map(st => s"$rel/${st.getPath.getName}")
     val cols = schema.fields.toSeq.filter(f => statEligible(f.dataType))
     if (cols.isEmpty) return relFiles
-    val aggs = cols.flatMap(f =>
-      Seq(min(col(f.name)).as(s"__mn_${f.name}"),
-          max(col(f.name)).as(s"__mx_${f.name}")))
-    val rows = spark.read.schema(schema).parquet(relFiles.map(abs(root, _)): _*)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val byPath = rows.map { r =>
-      val p = relativize(root, r.getString(0))
-      val fields = cols.zipWithIndex.flatMap { case (f, ix) =>
-        (encodeExternal(r.get(1 + ix * 2)), encodeExternal(r.get(2 + ix * 2))) match {
-          case (Some(a), Some(b)) if f.dataType == StringType =>
-            truncMax(b).map(bb => s"${enc(f.name)}=${enc(truncMin(a))},${enc(bb)}")
-          case (Some(a), Some(b)) => Some(s"${enc(f.name)}=${enc(a)},${enc(b)}")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footers = org.apache.spark.sql.graft.Bridge.parmap(files, "graft-footers", 8) { st =>
+      val meta = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+        .readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      cols.map(f => f.name -> footerStat(meta, f)).toMap
+    }
+    val byFooter = relFiles.zip(footers).toMap
+    val rescanCols = cols.filter(f => footers.exists(_(f.name) == Rescan))
+    val rescanFiles = relFiles.filter(p => rescanCols.exists(f => byFooter(p)(f.name) == Rescan))
+    val rescanned: Map[String, Map[String, FooterStat]] =
+      if (rescanFiles.isEmpty) Map.empty
+      else {
+        val aggs = rescanCols.flatMap(f =>
+          Seq(min(col(f.name)).as(s"__mn_${f.name}"),
+              max(col(f.name)).as(s"__mx_${f.name}")))
+        spark.read.schema(schema).parquet(rescanFiles.map(abs(root, _)): _*)
+          .groupBy(input_file_name().as("__file"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().map { r =>
+            relativize(root, r.getString(0)) -> rescanCols.zipWithIndex.map { case (f, ix) =>
+              f.name -> Bounds(r.get(1 + ix * 2), r.get(2 + ix * 2)) }.toMap
+          }.toMap
+      }
+    relFiles.map { p =>
+      val stats = byFooter(p) ++ rescanned.getOrElse(p, Map.empty)
+      val fields = cols.flatMap { f =>
+        stats(f.name) match {
+          case Bounds(mn, mx) => (encodeExternal(mn), encodeExternal(mx)) match {
+            case (Some(a), Some(b)) if f.dataType == StringType =>
+              truncMax(b).map(bb => s"${enc(f.name)}=${enc(truncMin(a))},${enc(bb)}")
+            case (Some(a), Some(b)) => Some(s"${enc(f.name)}=${enc(a)},${enc(b)}")
+            case _ => None
+          }
           case _ => None
         }
       }
-      p -> (if (fields.isEmpty) p else (p +: fields).mkString("\t"))
-    }.toMap
-    relFiles.map(p => byPath.getOrElse(p, p))
+      if (fields.isEmpty) p else (p +: fields).mkString("\t")
+    }
   }
 
   /** Scan-reported file URI → root-relative manifest path. The scan
@@ -719,15 +791,13 @@ object GraftTable {
   def compact(spark: SparkSession, root: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val v = currentVersion(root)
-    val entries = manifest(root, v)
-    val (small, large) = entries.partition(l =>
-      Files.size(Paths.get(abs(root, entryPath(l)))) < targetBytes)
+    val sized = manifest(root, v).map(l =>
+      l -> Files.size(Paths.get(abs(root, entryPath(l)))))
+    val (small, large) = sized.partition(_._2 < targetBytes)
     if (small.size < 2) return v
-    val smallBytes = small.map(l =>
-      Files.size(Paths.get(abs(root, entryPath(l))))).sum
-    val nOut = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
-    val rewritten = readFiles(spark, root, small).repartition(nOut)
-    commit(root, large ++ writeFiles(rewritten, root))
+    val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
+    val rewritten = readFiles(spark, root, small.map(_._1)).repartition(nOut)
+    commit(root, large.map(_._1) ++ writeFiles(rewritten, root))
   }
 
   /** OPTIMIZE … ZORDER BY (the multi-dimensional clustering face of

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * object lives inside the `org.apache.spark.sql` namespace to lend the
   * engine's custom Catalyst expressions a public Column surface. No Spark
   * internals are modified. Being inside `org.apache.spark`, it also lends
-  * the harness the `private[spark]` listener-bus drain.
+  * the harness the `private[spark]` listener-bus drain, and the table
+  * writer Spark's own parallel map for footer reads.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,4 +29,9 @@ object Bridge {
     * Throws `TimeoutException` if the bus is still busy after the budget. */
   def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMillis: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
+
+  /** `f` over `in` on a bounded, short-lived thread pool (Spark's own
+    * parallel footer reads use the same helper); results keep `in`'s order. */
+  def parmap[I, O](in: Seq[I], prefix: String, maxThreads: Int)(f: I => O): Seq[O] =
+    org.apache.spark.util.ThreadUtils.parmap(in, prefix, maxThreads)(f)
 }

@@ -68,6 +68,24 @@ class ChunkMetricsSpec extends SparkSpec {
     assert(m.smallTaskFraction(1500) === 0.0)
     assert(m.smallTaskFraction(1501) === 1.0)
   }
+
+  test("a retried stage attempt keeps its own stats, apart from the first attempt's") {
+    import org.apache.spark.graft.ListenerEvents.{stageCompleted, taskEnd}
+    val m = new ChunkMetrics
+    m.onTaskEnd(taskEnd(7, 0, recordsRead = 100, shuffleRecordsWritten = 10))
+    m.onTaskEnd(taskEnd(7, 0, recordsRead = 200, shuffleRecordsWritten = 20))
+    m.onStageCompleted(stageCompleted(7, 0, wallMillis = 50))
+    m.onTaskEnd(taskEnd(7, 1, recordsRead = 5000, shuffleRecordsWritten = 10))
+    m.onStageCompleted(stageCompleted(7, 1, wallMillis = 80))
+    val snap = m.snapshot
+    assert(snap.keySet === Set((7, 0), (7, 1)))
+    val (first, retry) = (snap((7, 0)), snap((7, 1)))
+    assert(first.taskRecords.toSeq === Seq(100L, 200L) && first.tasks === 2 && first.wallMillis === 50)
+    assert(retry.taskRecords.toSeq === Seq(5000L) && retry.tasks === 1 && retry.wallMillis === 80)
+    assert(first.chunkFactor === Some(10.0) && retry.chunkFactor === Some(500.0))
+    assert(m.chunkFactor(7) === Some(500.0), "a stage's chunk factor is its latest attempt's")
+    assert(m.smallTaskFraction(1024) === 2.0 / 3)
+  }
 }
 
 class CompactSpec extends SparkSpec {

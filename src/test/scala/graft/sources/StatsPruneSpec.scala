@@ -216,4 +216,150 @@ class StatsPruneSpec extends SparkSpec {
       .filter(col("c_custkey") === victim).select("c_name").collect()
     assert(got.map(_.getString(0)).toSeq === Seq("UPDATED"))
   }
+
+  // ------------------------------------------ footer stats vs. a rescan
+
+  /** The per-file aggregate the stats used to come from: min/max of every
+    * eligible column per file, encoded as the manifest encodes them. The
+    * oracle for the footer-derived lines. */
+  private def scannedLines(root: String): Seq[String] = {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val schema = GraftTable.schemaOf(root)
+    val files = manifestLines(root, 1).map(_.takeWhile(_ != '\t'))
+    val cols = schema.fields.toSeq.filter(f => GraftTable.statEligible(f.dataType))
+    val aggs = cols.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
+    val rows = spark.read.schema(schema).parquet(files.map(f => s"$root/$f"): _*)
+      .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect()
+    files.map { p =>
+      rows.find(_.getString(0).endsWith(p)).fold(p) { r =>
+        val fields = cols.zipWithIndex.flatMap { case (f, ix) =>
+          (GraftTable.encodeExternal(r.get(1 + ix * 2)),
+           GraftTable.encodeExternal(r.get(2 + ix * 2))) match {
+            case (Some(a), Some(b)) if f.dataType == org.apache.spark.sql.types.StringType =>
+              GraftTable.truncMax(b).map(bb => s"${enc(f.name)}=${enc(GraftTable.truncMin(a))},${enc(bb)}")
+            case (Some(a), Some(b)) => Some(s"${enc(f.name)}=${enc(a)},${enc(b)}")
+            case _ => None
+          }
+        }
+        (p +: fields).mkString("\t")
+      }
+    }
+  }
+
+  private def rowGroups(root: String, rel: String): Int =
+    org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(s"$root/$rel")).getBlocks.size
+
+  test("footer-derived stats equal a per-file rescan, edge values and row groups included") {
+    val n = 3000L
+    val id = col("id")
+    val micros = (id - 1500) * 1000000007L + 500000
+    val df = spark.range(0, n, 1, 3).select(
+      id,
+      (id % 100 - 50).cast("byte").as("b"),
+      (id * 7 % 30000 - 15000).cast("short").as("s"),
+      (id * 13 % 100000 - 50000).cast("int").as("i"),
+      when(id === 1234, lit(Float.PositiveInfinity))
+        .otherwise((id / 7.0).cast("float")).as("f"),
+      when(id === 17, lit(Double.NaN)).when(id === 2100, lit(-0.0d))
+        .otherwise((id - 1500) / 3.0).as("d"),
+      ((id % 1000) / 100 - 5).cast("decimal(5,2)").as("dec5"),
+      ((id * 12345 % 100000000L) / 100 - 400000).cast("decimal(10,2)").as("dec10"),
+      (id.cast("decimal(30,5)") * lit(BigDecimal("1e20")) - lit(BigDecimal("1.5e23")))
+        .cast("decimal(30,5)").as("dec30"),
+      date_add(lit("1950-01-01").cast("date"), (id * 7).cast("int")).as("dt"),
+      timestamp_micros(micros).as("ts"),
+      timestamp_micros(micros).cast("timestamp_ntz").as("ntz"),
+      (id % 3 === 0).as("bool"),
+      when(id === 2500, lit("z" * 5000))
+        .when(id % 500 === 0, concat(lit("a" * 31 + "\uD83D\uDE00"), id.cast("string")))
+        .otherwise(concat(lit("k\uD83D\uDE00"), lpad(id.cast("string"), 5, "0"))).as("str"),
+      lit(null).cast("int").as("nul"),
+      when(id % 1000 > 600, id).as("sparse"))
+    val root = freshRoot()
+    val key = "parquet.block.size"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "4096")
+    try GraftTable.create(spark, root, df)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val lines = manifestLines(root, 1)
+    assert(lines.size === 3)
+    lines.foreach(l => assert(rowGroups(root, l.takeWhile(_ != '\t')) > 1,
+      "each file must span several row groups"))
+    assert(lines === scannedLines(root))
+    // the edge values really took the omit paths
+    assert(lines.count(_.contains("\td=")) === 2, "NaN omits the double field, a -0.0 minimum keeps it")
+    assert(lines.count(_.contains("\tf=")) === 2, "+Inf omits the float field")
+    assert(!lines.exists(_.contains("\tnul=")))
+    assert(lines.forall(_.contains("\tts=")) && lines.forall(_.contains("\tstr=")))
+  }
+
+  test("footer-derived stats equal a per-file rescan on a range-partitioned table") {
+    val root = rangedTable()
+    assert(manifestLines(root, 1) === scannedLines(root))
+  }
+
+  /** Jobs started while `work` runs, counted after the listener bus drains. */
+  private def jobsOf(work: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc, 60000L)
+    sc.addSparkListener(l)
+    try {
+      work
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc, 60000L)
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("insert and update launch no job beyond their own scans and the write") {
+    val lineitem = graft.Tables.t(spark, sf(), "lineitem")
+    val root = freshRoot()
+    GraftTable.create(spark, root, lineitem.coalesce(1))
+    val rows = lineitem.filter(col("l_orderkey") < 100)
+    val writeJobs = jobsOf(rows.write.parquet(freshRoot() + "/w"))
+    assert(jobsOf(GraftTable.insert(spark, root, rows)) === writeJobs,
+      "insert: the write's jobs only")
+
+    val pred = col("l_orderkey") === 1L
+    val rewritten = GraftTable.read(spark, root).withColumn("l_returnflag",
+      when(coalesce(pred, lit(false)), lit("x")).otherwise(col("l_returnflag")))
+    val baseline = jobsOf {
+      GraftTable.read(spark, root).withColumn("__file", input_file_name())
+        .filter(pred).select("__file").distinct().collect()
+      rewritten.write.parquet(freshRoot() + "/w")
+    }
+    assert(jobsOf(GraftTable.update(spark, root, pred, Map("l_returnflag" -> lit("x")))) === baseline,
+      "update: the affected-file scan and the write only")
+  }
+
+  test("a timestamp column costs one aggregate over that column alone") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import spark.implicits._
+    val df = (0 until 200).map(i => (i.toLong, java.sql.Timestamp.valueOf(s"2020-01-01 00:00:${i % 60}"),
+      s"c$i")).toDF("k", "ts", "note").repartition(2)
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.sparkPlan.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+          .foreach(scans.add)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext, 60000L)
+    spark.listenerManager.register(l)
+    val root = freshRoot()
+    try {
+      GraftTable.create(spark, root, df)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext, 60000L)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    assert(scans.asScala.toSeq === Seq(Seq("ts")),
+      "the only scan of the written files is the fallback aggregate over ts")
+    assert(manifestLines(root, 1) === scannedLines(root))
+  }
 }
