@@ -50,6 +50,18 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
+    builtOracles ++ sql.TpchVerbatim.oracle ++ sql.TpcdsVerbatim.oracle ++ sql.JobVerbatim.oracle
+
+  /** The oracles of `names`. The verbatim suites read each oracle's query
+    * text from the reference checkout, so only the names asked for are
+    * read: a subset without verbatim entries needs no reference checkout. */
+  def oraclesFor(names: Set[String]): Map[String, String] =
+    builtOracles.filter { case (k, _) => names(k) } ++ names.flatMap(n =>
+      sql.TpchVerbatim.oracleOf(n).orElse(sql.TpcdsVerbatim.oracleOf(n))
+        .orElse(sql.JobVerbatim.oracleOf(n)).map(n -> _))
+
+  /** Every oracle but the verbatim suites'. */
+  private def builtOracles: Map[String, String] =
     operators.CoreQueries.oracle ++
       operators.TpchQueries.oracle ++
       operators.TpcdsShapes.oracle ++
@@ -65,9 +77,6 @@ object SparkEntry {
       operators.Shaping.oracle ++
       operators.EdgeQueries.oracle ++
       sql.DuckSqlQueries.oracle ++
-      sql.TpchVerbatim.oracle ++
-      sql.TpcdsVerbatim.oracle ++
-      sql.JobVerbatim.oracle ++
       functions.FunctionQueries.oracle ++
       functions.GraftMacros.oracle ++
       pipeline.Dedup.oracle ++

@@ -96,7 +96,7 @@ object Verify {
     // wrapper) and possibly stale parquet in a reused outDir — emitting
     // them would invite spurious order-dependent mismatches.
     def writeOracleJson(): Unit = writeAtomic("oracle_sql.json", ListMap.from(
-      SparkEntry.oracleSql.filter { case (k, _) => columnsByQuery.contains(k) }
+      SparkEntry.oraclesFor(columnsByQuery.keySet.toSet)
         .toSeq.sortBy(_._1).map { case (k, v) => k -> wrapped(k, v) }))
     // Gate integrity: a thrown query must surface as a FAILED row, never a
     // vanished one (round 7: four regressions silently dropped out of the

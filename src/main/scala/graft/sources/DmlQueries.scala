@@ -6,7 +6,7 @@ import graft.Tables
 
 /** Oracle-checked DML faces (reference `physical_insert.cpp`,
   * `physical_delete.cpp`, `physical_update.cpp` + MERGE-style upsert).
-  * Each entry materializes a GraftTable copy-on-write table from fixture
+  * Each entry materializes a GraftTable from fixture
   * data in a fresh temp dir, applies real write-path DML, and returns the
   * read-back snapshot; the oracle is the equivalent pure SELECT over the
   * untouched fixtures (INSERT ≡ UNION ALL, DELETE ≡ negated-predicate
@@ -35,9 +35,9 @@ object DmlQueries {
       |SELECT CAST(r_regionkey + 100 AS INTEGER) AS n_nationkey,
       |       r_name AS n_name, r_regionkey AS n_regionkey FROM region""".stripMargin
 
-  /** DELETE WHERE c_acctbal < 0 — only files holding negative balances
-    * are rewritten; the survivors are everything where the predicate is
-    * not TRUE (SQL DELETE semantics). */
+  /** DELETE WHERE c_acctbal < 0 — the negative balances are marked in
+    * their files' deletion vectors; the survivors are everything where
+    * the predicate is not TRUE (SQL DELETE semantics). */
   def dmlDelete(s: SparkSession, dir: String): DataFrame = {
     val root = tmpRoot()
     GraftTable.create(s, root, Tables.t(s, dir, "customer")
@@ -112,10 +112,10 @@ object DmlQueries {
     "SELECT c_custkey, c_acctbal FROM customer"
 
   /** CDC: row-level changes between the pre- and post-UPDATE versions.
-    * The engine computes them purely from the manifest diff (only
-    * rewritten files are read; identical rewritten rows cancel under
-    * EXCEPT ALL), so the visible delta is exactly the updated rows:
-    * delete(old values) + insert(new values). */
+    * The engine computes them purely from the manifest diff (only the
+    * touched files and positions are read; identical old and new rows
+    * cancel under EXCEPT ALL), so the visible delta is exactly the
+    * updated rows: delete(old values) + insert(new values). */
   def dmlChanges(s: SparkSession, dir: String): DataFrame = {
     val root = tmpRoot()
     GraftTable.create(s, root, Tables.t(s, dir, "customer")
@@ -363,7 +363,8 @@ object DmlQueries {
     * using ONLY the change feed (signed partial aggregates from
     * `changes()` — insert rows count +1, delete rows −1 — full-outer-
     * joined onto the stale summary), never rescanning the table. The
-    * CoW manifest makes the feed cheap: only rewritten files are read.
+    * manifest makes the feed cheap: only touched files and positions
+    * are read.
     * An UPDATE surfaces as delete(old)+insert(new), so SUM/COUNT
     * maintenance is exact; groups whose count reaches 0 drop, matching
     * the recompute. Money sums go through DECIMAL on both engines so

@@ -4,17 +4,23 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.RoaringBitmap
 import scala.jdk.CollectionConverters._
 
 /** Mutable-table DML over parquet — INSERT / DELETE / UPDATE / MERGE
   * (reference `src/execution/operator/persistent/physical_insert.cpp`,
   * `physical_delete.cpp`, `physical_update.cpp`), re-expressed for Spark as
-  * a minimal MANIFEST-BASED COPY-ON-WRITE table: the lakehouse pattern
-  * (immutable data files + a versioned file manifest + an atomic current
-  * pointer) rather than the reference's MVCC row versioning, which has no
-  * Spark analog (Spark executors cannot share a transaction-local
-  * undo/redo state; files are the unit of atomicity a distributed FS
-  * actually gives you).
+  * a minimal MANIFEST-BASED table with DELETION VECTORS: the lakehouse
+  * pattern (immutable data files + a versioned file manifest + an atomic
+  * current pointer), where a DELETE marks row positions instead of
+  * rewriting files. The reference keeps deleted and updated rows as
+  * versioned markers and reclaims them at CHECKPOINT; its transaction-local
+  * MVCC undo state has no Spark analog (executors cannot share it; files
+  * are the unit of atomicity a distributed FS actually gives you), so the
+  * markers live in the manifest and [[compact]] is the checkpoint.
   *
   * Layout under a table root:
   * {{{
@@ -22,8 +28,14 @@ import scala.jdk.CollectionConverters._
   *   _manifests/v<N>.manifest      one data-file entry per line: the
   *                                 relative path, then optional
   *                                 TAB-separated `col=min,max` stats
-  *                                 fields (URL-encoded); legacy
-  *                                 path-only lines remain readable
+  *                                 fields (URL-encoded), then an optional
+  *                                 `#dv=<base64>` field: the file's
+  *                                 deletion vector, a serialized
+  *                                 RoaringBitmap of deleted
+  *                                 `_metadata.row_index` values (a
+  *                                 URL-encoded column name never starts
+  *                                 with `#`); legacy path-only lines
+  *                                 remain readable
   *   _schema.json                  StructType of the table (create-time)
   *   _current                      the committed version number N
   * }}}
@@ -38,17 +50,26 @@ import scala.jdk.CollectionConverters._
   *    path). They come from the parquet footers the write just produced,
   *    read in the writing JVM with no Spark job; only columns a footer keeps no
   *    bounds for (INT96 timestamps, strings past parquet-mr's 4 KB stats
-  *    limit) cost one aggregate over the files that lack them.
-  *  - DELETE/UPDATE/MERGE rewrite ONLY the files that contain affected
-  *    rows, found in two pruning layers: (1) MANIFEST pruning — the
-  *    predicate's `col (=,<,<=,>,>=,IN) literal` conjuncts (and MERGE's
-  *    source-key min/max range) are intersected with each file's stats
-  *    envelope on the driver, dropping files that cannot match WITHOUT
-  *    opening them — at 10⁶ files a point DELETE plans against the
-  *    manifest, not the filesystem; then (2) one predicate scan of the
-  *    surviving candidates (parquet pushdown / row-group pruning skips
-  *    within them) collects the distinct `input_file_name`s; only those
-  *    are read back and rewritten.
+  *    limit) cost one aggregate over the files that lack them. A deletion
+  *    vector leaves a file's envelope a sound superset.
+  *  - DELETE/UPDATE/MERGE rewrite NO existing file. Matching rows are
+  *    found in two pruning layers: (1) MANIFEST pruning — the predicate's
+  *    `col (=,<,<=,>,>=,IN) literal` conjuncts (and MERGE's source-key
+  *    min/max range) are intersected with each file's stats envelope
+  *    while planning, dropping files that cannot match WITHOUT opening them —
+  *    at 10⁶ files a point DELETE plans against the manifest, not the
+  *    filesystem; then (2) one scan of the surviving candidates (parquet
+  *    pushdown / row-group pruning skips within them) collects the
+  *    matching rows' `(file, row_index)` positions as per-file bitmaps,
+  *    built on the executors. The positions join the files' deletion
+  *    vectors; UPDATE and MERGE also append the rows' new values, from
+  *    the same scan, as one new file. A DELETE writes no data at all.
+  *  - A read filters each file that carries a deletion vector by one
+  *    expression holding all the bitmaps (its plan does not grow with
+  *    them); a table without deletion vectors is a plain parquet scan.
+  *  - [[compact]] rewrites every file that carries a deletion vector, so
+  *    deleted rows are physically dropped there, as the reference's
+  *    CHECKPOINT does.
   *  - Old versions stay readable (time travel / snapshot isolation for
   *    concurrent readers): `read(spark, root, Some(v))`.
   *
@@ -86,6 +107,71 @@ object GraftTable {
 
   /** Root-relative data-file path of a manifest entry line. */
   private def entryPath(line: String): String = line.takeWhile(_ != '\t')
+
+  // ------------------------------------------------- deletion vectors
+  //
+  // A file's deleted rows are a RoaringBitmap of their `_metadata.row_index`
+  // values, keyed in a scan by `_metadata.file_name`: Spark names every
+  // part file after its write job's UUID, so base names are unique within
+  // a table.
+
+  private val DvField = "#dv="
+  private val FileCol = "__graft_file"
+  private val PosCol = "__graft_pos"
+
+  private def fileName(line: String): String = {
+    val p = entryPath(line)
+    p.substring(p.lastIndexOf('/') + 1)
+  }
+
+  private def encodeDv(b: RoaringBitmap): String = {
+    b.runOptimize()
+    val buf = java.nio.ByteBuffer.allocate(b.serializedSizeInBytes)
+    b.serialize(buf)
+    java.util.Base64.getEncoder.encodeToString(buf.array)
+  }
+
+  private def decodeDv(s: String): RoaringBitmap = {
+    val b = new RoaringBitmap
+    b.deserialize(java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(s)))
+    b
+  }
+
+  /** The deletion vector of an entry line, if it has one. */
+  private def entryDv(line: String): Option[RoaringBitmap] =
+    line.split('\t').find(_.startsWith(DvField)).map(f => decodeDv(f.substring(DvField.length)))
+
+  /** The entry with `deleted` added to its deletion vector. */
+  private def withDeleted(line: String, deleted: RoaringBitmap): String = {
+    val fields = line.split('\t').toSeq
+    val dv = entryDv(line).fold(deleted)(RoaringBitmap.or(_, deleted))
+    (fields.filterNot(_.startsWith(DvField)) :+ (DvField + encodeDv(dv))).mkString("\t")
+  }
+
+  /** Entries with the deleted positions of `hits` (file name → rows) added. */
+  private def markDeleted(entries: Seq[String], hits: Map[String, RoaringBitmap]): Seq[String] =
+    entries.map(e => hits.get(fileName(e)).fold(e)(withDeleted(e, _)))
+
+  /** TRUE for a row whose position is in its file's bitmap. */
+  private def inBitmaps(bitmaps: Map[String, RoaringBitmap]): Column = {
+    import org.apache.spark.sql.graft.Bridge
+    Bridge.column(InBitmaps(Bridge.expression(col("_metadata.file_name")),
+      Bridge.expression(col("_metadata.row_index")), new Bitmaps(bitmaps)))
+  }
+
+  /** Positions of `df`'s rows (its `FileCol`/`PosCol` columns) as one bitmap
+    * per file, built on the executors: the collect returns bitmaps,
+    * never rows. */
+  private def positions(df: DataFrame): Map[String, RoaringBitmap] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(FileCol), col(PosCol)).as[(String, Long)].mapPartitions { rows =>
+      val byFile = scala.collection.mutable.HashMap.empty[String, RoaringBitmap]
+      rows.foreach { case (f, p) =>
+        byFile.getOrElseUpdate(f, new RoaringBitmap).add(Math.toIntExact(p)) }
+      byFile.iterator.map { case (f, b) => (f, encodeDv(b)) }
+    }.collect().toSeq.groupMapReduce(_._1)(p => decodeDv(p._2))(RoaringBitmap.or(_, _))
+  }
 
   // ------------------------------------------------- file-stats envelope
   //
@@ -241,7 +327,7 @@ object GraftTable {
   private def entryStats(line: String): Map[String, (String, String)] =
     line.split('\t').toSeq.drop(1).flatMap { f =>
       val eq = f.indexOf('=')
-      if (eq < 0) None
+      if (eq < 0 || f.startsWith("#")) None
       else {
         val c = f.indexOf(',', eq)
         if (c < 0) None
@@ -361,10 +447,13 @@ object GraftTable {
 
   /** Manifest entries of the current version that survive stats pruning
     * against `pred` — the driver-side skip layer (exposed for tests). */
-  private[sources] def candidateEntries(root: String, pred: Column): Seq[String] = {
+  private[sources] def candidateEntries(root: String, pred: Column): Seq[String] =
+    candidates(root, manifest(root, currentVersion(root)), pred)
+
+  private def candidates(root: String, entries: Seq[String], pred: Column): Seq[String] = {
     val cs = extractConstraints(org.apache.spark.sql.graft.Bridge.catalystExpression(pred))
     val types = typeMap(schemaOf(root))
-    manifest(root, currentVersion(root)).filter(canMatch(_, cs, types))
+    entries.filter(canMatch(_, cs, types))
   }
 
   /** Commit a new version. `txn` stamps the manifest with a streaming
@@ -545,20 +634,32 @@ object GraftTable {
   /** Read a snapshot (default: current). Old versions remain readable —
     * data files are immutable and manifests are never rewritten. */
   def read(spark: SparkSession, root: String,
-      version: Option[Int] = None): DataFrame = {
-    val files = manifest(root, version.getOrElse(currentVersion(root))).map(entryPath)
+      version: Option[Int] = None): DataFrame =
+    scan(spark, root, manifest(root, version.getOrElse(currentVersion(root))))
+
+  /** The live rows of manifest entries: each file with a deletion vector
+    * is filtered by it, the others are scanned as they are. `located`
+    * adds each row's `FileCol` / `PosCol` position. No entries: an empty
+    * frame of the table schema. */
+  private def scan(spark: SparkSession, root: String, entries: Seq[String],
+      located: Boolean = false): DataFrame = {
     val schema = schemaOf(root)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(abs(root, _)): _*)
+    if (entries.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val files = spark.read.schema(schema).parquet(entries.map(e => abs(root, entryPath(e))): _*)
+    val dvs = entries.flatMap(e => entryDv(e).map(fileName(e) -> _)).toMap
+    val live = if (dvs.isEmpty) files else files.filter(!inBitmaps(dvs))
+    if (!located) live
+    else live.select(col("*"), col("_metadata.file_name").as(FileCol),
+      col("_metadata.row_index").as(PosCol))
   }
 
   /** RESTORE the table to an earlier snapshot (the Delta RESTORE
     * analog, and the rollback primitive of [[graft.sql.DuckDml]]'s
     * transactions): commits a NEW version whose manifest is the target
     * version's manifest verbatim — metadata only, no data movement
-    * (files are immutable), stats preserved, and the discarded
-    * versions stay time-travel-readable until [[vacuum]]. */
+    * (files are immutable), stats and deletion vectors preserved, and
+    * the discarded versions stay time-travel-readable until [[vacuum]]. */
   def restore(root: String, version: Int): Int = {
     require(version <= currentVersion(root),
       s"cannot restore $root to future version $version")
@@ -566,28 +667,38 @@ object GraftTable {
   }
 
   /** CDC between two versions — the `table_changes` face of the
-    * copy-on-write design. Because data files are immutable, the delta
-    * lives entirely in the manifest difference: files present in both
-    * versions are NEVER read. Net row-level changes come from EXCEPT ALL
-    * over the differing files only (multiset semantics: rows rewritten
-    * byte-identically cancel; an UPDATE surfaces as delete(old) +
-    * insert(new)). Output = table columns + `change_type`
-    * ('insert' | 'delete'). On a 100 TB table a point update's CDC reads
-    * the handful of rewritten files, nothing else. */
+    * manifest design. Because data files are immutable, the delta lives
+    * entirely in the manifest difference: a file both versions list with
+    * the same deletion vector is NEVER read. A file only one version
+    * lists contributes its live rows; a file both list with different
+    * deletion vectors contributes only the positions one of them
+    * deletes. Net row-level changes come from EXCEPT ALL over those rows
+    * (multiset semantics: rows rewritten byte-identically cancel; an
+    * UPDATE surfaces as delete(old) + insert(new)). Output = table
+    * columns + `change_type` ('insert' | 'delete'). On a 100 TB table a
+    * point update's CDC reads the handful of files it touched, nothing
+    * else. */
   def changes(spark: SparkSession, root: String, fromV: Int, toV: Int): DataFrame = {
-    val before = manifest(root, fromV)
-    val after = manifest(root, toV)
-    val added = after.filterNot(before.toSet)
-    val removed = before.filterNot(after.toSet)
-    val schema = schemaOf(root)
-    def readOrEmpty(files: Seq[String]): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else readFiles(spark, root, files)
-    val ins = readOrEmpty(added).exceptAll(readOrEmpty(removed))
-      .withColumn("change_type", lit("insert"))
-    val del = readOrEmpty(removed).exceptAll(readOrEmpty(added))
-      .withColumn("change_type", lit("delete"))
+    def byPath(v: Int) = manifest(root, v).map(l => entryPath(l) -> l).toMap
+    val (before, after) = (byPath(fromV), byPath(toV))
+    val empty = new RoaringBitmap
+    // rows version `a` shows and version `b` does not
+    def gone(a: Map[String, String], b: Map[String, String]): DataFrame = {
+      val whole = a.collect { case (p, l) if !b.contains(p) => l }.toSeq
+      val newlyDeleted = a.toSeq.flatMap { case (p, l) =>
+        b.get(p).map(lb => l -> RoaringBitmap.andNot(
+          entryDv(lb).getOrElse(empty), entryDv(l).getOrElse(empty)))
+          .filterNot(_._2.isEmpty)
+      }
+      val parts = Seq(whole).filter(_.nonEmpty).map(scan(spark, root, _)) ++
+        Seq(newlyDeleted).filter(_.nonEmpty).map(d =>
+          scan(spark, root, d.map(e => entryPath(e._1)))
+            .filter(inBitmaps(d.map { case (l, b) => fileName(l) -> b }.toMap)))
+      parts.reduceOption(_ unionAll _).getOrElse(scan(spark, root, Nil))
+    }
+    val (removed, added) = (gone(before, after), gone(after, before))
+    val ins = added.exceptAll(removed).withColumn("change_type", lit("insert"))
+    val del = removed.exceptAll(added).withColumn("change_type", lit("delete"))
     ins.unionAll(del)
   }
 
@@ -606,82 +717,65 @@ object GraftTable {
     commit(root, old ++ writeFiles(aligned(rows, schemaOf(root)), root), txn)
   }
 
-  /** Root-relative paths of current files containing ≥1 row matching
-    * `pred`. Two layers: manifest stats pruning drops files whose
-    * min/max envelope cannot satisfy the predicate's literal conjuncts
-    * (driver-side, no file opened); then ONE scan of the survivors with
-    * the predicate pushed to parquet (row-group pruning skips within);
-    * the collect is file NAMES, never rows. */
-  private def affectedFiles(spark: SparkSession, root: String,
-      pred: Column): Seq[String] = {
-    val candidates = candidateEntries(root, pred).map(entryPath)
-    if (candidates.isEmpty) return Nil
-    readFiles(spark, root, candidates)
-      .withColumn("__file", input_file_name())
-      .filter(pred)
-      .select(col("__file")).distinct().collect()
-      .map(r => relativize(root, r.getString(0)))
-      .toSeq.sorted
-  }
-
-  /** Read specific files/entry lines of the table (stats fields, if any,
-    * are stripped). */
-  private def readFiles(spark: SparkSession, root: String,
-      files: Seq[String]): DataFrame =
-    spark.read.schema(schemaOf(root)).parquet(files.map(f => abs(root, entryPath(f))): _*)
-
   /** DELETE WHERE pred: rows where the predicate is TRUE are removed
-    * (NULL predicate keeps the row — SQL DELETE semantics). Only files
-    * containing matches are rewritten. */
+    * (NULL predicate keeps the row — SQL DELETE semantics). One scan of
+    * the stats-pruned candidates collects the matching positions into the
+    * files' deletion vectors; no data is written. Every call commits one
+    * version, matches or not, so time travel and changes() stay
+    * well-defined. */
   def delete(spark: SparkSession, root: String, pred: Column): Unit = {
-    val hit = affectedFiles(spark, root, pred)
-    // no matches: still commit the (identical) manifest — every DML call
-    // is one version, so time travel and changes() stay well-defined
-    if (hit.isEmpty) { commit(root, manifest(root, currentVersion(root))); return }
-    val hitSet = hit.toSet
-    val keep = manifest(root, currentVersion(root))
-      .filterNot(l => hitSet(entryPath(l)))
-    val kept = readFiles(spark, root, hit)
-      .filter(!coalesce(pred, lit(false)))
-    commit(root, keep ++ writeFiles(kept, root))
+    val entries = manifest(root, currentVersion(root))
+    val hit = candidates(root, entries, pred)
+    val deleted =
+      if (hit.isEmpty) Map.empty[String, RoaringBitmap]
+      else positions(scan(spark, root, hit, located = true).filter(pred))
+    commit(root, markDeleted(entries, deleted))
   }
+
+  /** The changed rows of one statement go to one new file. */
+  private def writeChanged(rows: DataFrame, root: String): Seq[String] =
+    writeFiles(rows.coalesce(1), root)
 
   /** UPDATE SET col = expr WHERE pred. `set` expressions see the pre-update
     * row (SQL UPDATE semantics — all assignments evaluated against the old
-    * values). Only files containing matches are rewritten. */
+    * values). The matched rows are computed once, with their positions
+    * and new values (cached, so a nondeterministic predicate marks exactly
+    * the rows it rewrites): the positions join the deletion vectors, the
+    * new rows go to one new file. */
   def update(spark: SparkSession, root: String, pred: Column,
       set: Map[String, Column]): Unit = {
     val schema = schemaOf(root)
     require(set.keySet.subsetOf(schema.fieldNames.toSet),
       s"unknown columns in SET: ${set.keySet -- schema.fieldNames}")
-    val hit = affectedFiles(spark, root, pred)
-    if (hit.isEmpty) { commit(root, manifest(root, currentVersion(root))); return }
-    val hitSet = hit.toSet
-    val keep = manifest(root, currentVersion(root))
-      .filterNot(l => hitSet(entryPath(l)))
-    val p = coalesce(pred, lit(false))
-    val rewritten = readFiles(spark, root, hit).select(
-      schema.fields.toIndexedSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) => when(p, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    commit(root, keep ++ writeFiles(rewritten, root))
+    val entries = manifest(root, currentVersion(root))
+    val hit = candidates(root, entries, pred)
+    if (hit.isEmpty) { commit(root, entries); return }
+    val changed = scan(spark, root, hit, located = true).filter(pred)
+      .select(col(FileCol) +: col(PosCol) +: schema.fields.toIndexedSeq.map(f =>
+        set.get(f.name).fold(col(f.name))(_.cast(f.dataType)).as(f.name)): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val deleted = positions(changed)
+      commit(root, markDeleted(entries, deleted) ++
+        (if (deleted.isEmpty) Nil else writeChanged(changed.drop(FileCol, PosCol), root)))
+    } finally changed.unpersist(blocking = false)
   }
 
   /** MERGE (upsert): rows of `source` replace target rows with the same
     * key (WHEN MATCHED THEN UPDATE SET *) and are appended otherwise
     * (WHEN NOT MATCHED THEN INSERT *). Source keys must be unique — the
     * standard MERGE cardinality contract; duplicate source keys would
-    * multiply target rows. Only files containing matched keys are
-    * rewritten; a pure-insert merge rewrites nothing. */
+    * multiply target rows. Matched target rows are marked deleted and
+    * re-appended with the source's values (one per matched target row,
+    * so repeated target keys keep their multiplicity), together with the
+    * unmatched source rows, as one new file; a pure-insert merge marks
+    * nothing. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
       keys: Seq[String], txn: Option[(String, Long)] = None): Unit = {
     val schema = schemaOf(root)
-    // The source is evaluated several times below (dup check, hit-file
-    // semi-join, matched rewrite, insert anti-join) — cache it for the
-    // duration of the merge so an expensive source query (or a streaming
+    // The source is evaluated several times below (key check, the join
+    // with the target, the insert anti-join) — cache it for the duration
+    // of the merge so an expensive source query (or a streaming
     // micro-batch) runs once.
     val src = aligned(source, schema)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -692,112 +786,97 @@ object GraftTable {
   private def mergeImpl(spark: SparkSession, root: String,
       schema: StructType, src: DataFrame, keys: Seq[String],
       txn: Option[(String, Long)]): Unit = {
+    // One aggregate over the cached source answers two questions. (1) The
     // MERGE cardinality contract, enforced loudly: a duplicate source key
-    // would silently multiply matched target rows through the left join
-    // below. Aggregate aliased to a reserved name so a key column named
+    // would silently multiply matched target rows through the join below.
+    // (2) The source's key min/max prunes target files via the manifest
+    // stats — a time-ordered upsert against a time-partitioned table
+    // touches only the recent files' envelopes, never the archive. The
+    // per-key count is aliased to a reserved name so a key column named
     // "count" cannot collide.
-    val dup = src.groupBy(keys.map(col): _*)
+    val statKeys = schema.fields.toSeq
+      .filter(f => keys.contains(f.name) && statEligible(f.dataType))
+    val aggs = max(col("__graft_cnt")) +: statKeys.flatMap(f =>
+      Seq(min(col(f.name)), max(col(f.name))))
+    val summary = src.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__graft_cnt"))
-      .filter(col("__graft_cnt") > 1).limit(1).collect()
-    if (dup.nonEmpty)
+      .agg(aggs.head, aggs.tail: _*).collect().head
+    if (!summary.isNullAt(0) && summary.getLong(0) > 1) {
+      val dup = src.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__graft_cnt"))
+        .filter(col("__graft_cnt") > 1).limit(1).collect()
       throw new IllegalArgumentException(
         s"MERGE source has duplicate keys (e.g. ${dup.head.toSeq.init.mkString(",")}); " +
           "deduplicate per key first (e.g. dropDuplicates or a last-event-wins window)")
-    // Key-membership is a join, not a Column predicate, so the hit set is
-    // computed directly (same shape as affectedFiles: distinct file names
-    // from one semi-join scan, an O(#files) envelope). Before the scan,
-    // the SOURCE's key min/max (one tiny agg over the cached source)
-    // prunes target files via the manifest stats — a time-ordered upsert
-    // against a time-partitioned table touches only the recent files'
-    // envelopes, never the archive.
-    val entries = manifest(root, currentVersion(root))
-    val statKeys = schema.fields.toSeq
-      .filter(f => keys.contains(f.name) && statEligible(f.dataType))
-    val keyRange: Seq[Constraint] =
-      if (statKeys.isEmpty || entries.isEmpty) Nil
-      else {
-        val aggs = statKeys.flatMap(f =>
-          Seq(min(col(f.name)).as(s"__mn_${f.name}"),
-              max(col(f.name)).as(s"__mx_${f.name}")))
-        val r = src.agg(aggs.head, aggs.tail: _*).collect().head
-        statKeys.zipWithIndex.flatMap { case (f, ix) =>
-          (encodeExternal(r.get(ix * 2)).flatMap(decodeStat(_, f.dataType)),
-           encodeExternal(r.get(ix * 2 + 1)).flatMap(decodeStat(_, f.dataType))) match {
-            case (Some(lo), Some(hi)) =>
-              Some(Constraint(f.name, Some(lo), true, Some(hi), true))
-            case _ => None
-          }
-        }
-      }
-    val keyTypes = typeMap(schema)
-    val candidates = entries.filter(canMatch(_, keyRange, keyTypes)).map(entryPath)
-    val hitFiles: Seq[String] =
-      if (candidates.isEmpty) Nil
-      else readFiles(spark, root, candidates)
-        .withColumn("__file", input_file_name())
-        .join(src.select(keys.map(col): _*), keys, "left_semi")
-        .select(col("__file")).distinct().collect()
-        .map(r => relativize(root, r.getString(0))).toSeq.sorted
-    val hitSet = hitFiles.toSet
-    val keep = entries.filterNot(l => hitSet(entryPath(l)))
-    val srcTagged = src
-      .toDF(schema.fieldNames.toIndexedSeq.map(c =>
-        if (keys.contains(c)) c else s"__src_$c"): _*)
-      .withColumn("__matched", lit(true))
-    val updated =
-      if (hitFiles.isEmpty) None
-      else Some(readFiles(spark, root, hitFiles)
-        .join(srcTagged, keys, "left")
-        .select(schema.fields.toIndexedSeq.map { f =>
-          if (keys.contains(f.name)) col(f.name)
-          else when(col("__matched"), col(s"__src_${f.name}"))
-            .otherwise(col(f.name)).as(f.name)
-        }: _*))
-    // Keys absent from the hit files are absent from the table entirely
-    // (that is what made the other files unaffected), so the anti-join for
-    // inserts only needs the hit files' rows.
-    val existingKeys =
-      if (hitFiles.isEmpty) None else Some(readFiles(spark, root, hitFiles))
-    // The USING anti-join puts the key columns first; select back into
-    // schema order, since the union below is by position.
-    val inserts = existingKeys match {
-      case Some(t) => src.join(t.select(keys.map(col): _*), keys, "left_anti")
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      case None => src
     }
-    val newRows = updated.map(_.unionAll(inserts)).getOrElse(inserts)
-    commit(root, keep ++ writeFiles(newRows, root), txn)
+    val keyRange = statKeys.zipWithIndex.flatMap { case (f, ix) =>
+      (encodeExternal(summary.get(1 + ix * 2)).flatMap(decodeStat(_, f.dataType)),
+       encodeExternal(summary.get(2 + ix * 2)).flatMap(decodeStat(_, f.dataType))) match {
+        case (Some(lo), Some(hi)) => Some(Constraint(f.name, Some(lo), true, Some(hi), true))
+        case _ => None
+      }
+    }
+    val entries = manifest(root, currentVersion(root))
+    val keyTypes = typeMap(schema)
+    val hit = entries.filter(canMatch(_, keyRange, keyTypes))
+    // Target side of the join: positions and keys only. Its USING join
+    // keeps the target's key columns and takes every other column from
+    // the source.
+    val matched =
+      if (hit.isEmpty) None
+      else Some(scan(spark, root, hit, located = true)
+        .select((col(FileCol) +: col(PosCol) +: keys.map(col)): _*)
+        .join(src, keys)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
+      val deleted = matched.fold(Map.empty[String, RoaringBitmap])(positions)
+      val inSchema = schema.fieldNames.toIndexedSeq.map(col)
+      // The USING anti-join puts the key columns first; select back into
+      // schema order, since the union is by position.
+      val newRows = matched match {
+        case Some(m) if deleted.nonEmpty => m.select(inSchema: _*).unionAll(
+          src.join(m.select(keys.map(col): _*), keys, "left_anti").select(inSchema: _*))
+        case _ => src
+      }
+      commit(root, markDeleted(entries, deleted) ++ writeChanged(newRows, root), txn)
+    } finally matched.foreach(_.unpersist(blocking = false))
   }
 
   /** Small-file compaction — the repo's compaction theme applied to its
     * own table format (reference analog: VACUUM/checkpointing,
     * `src/execution/operator/helper/physical_vacuum.cpp`; shape modeled
     * on public Delta OPTIMIZE / Iceberg rewrite_data_files). Data files
-    * below `targetBytes` are rewritten into ~`targetBytes`-sized ones as
-    * a NEW version; files already at target size are carried over
-    * untouched (their manifest stats lines included). Invariants: rows
-    * are identical before/after, prior versions stay readable (no file
-    * is deleted — see [[vacuum]] for reclamation), and the rewritten
-    * files get freshly derived min/max stats via the normal write path.
+    * below `targetBytes`, and every file that carries a deletion vector
+    * whatever its size, are rewritten into ~`targetBytes`-sized ones as a
+    * NEW version, their deleted rows dropped (the reference's CHECKPOINT
+    * reclaiming deleted rows); other files are carried over untouched
+    * (their manifest stats lines included). Invariants: live rows are
+    * identical before/after, prior versions stay readable (no file is
+    * deleted — see [[vacuum]] for reclamation), and the rewritten files
+    * get freshly derived min/max stats via the normal write path.
     *
     * Scale posture: the decision layer is manifest + `Files.size`
-    * metadata only (no data read); the rewrite reads ONLY the
-    * sub-threshold files and shuffles them into `ceil(smallBytes /
-    * targetBytes)` output partitions — a point-DML-heavy table with a
-    * long tail of tiny files compacts by touching exactly that tail.
+    * metadata only (no data read); the rewrite reads ONLY the chosen
+    * files and coalesces them, without a shuffle, into `ceil(bytes /
+    * targetBytes)` output files, never more than it reads — a
+    * point-DML-heavy table with a long tail of tiny files compacts by
+    * touching exactly that tail, in one job.
     *
-    * Returns the new version, or the current one unchanged when fewer
-    * than two files are below target (nothing to merge). */
+    * Returns the new version, or the current one unchanged when no file
+    * carries a deletion vector and fewer than two are below target
+    * (nothing to merge). */
   def compact(spark: SparkSession, root: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val v = currentVersion(root)
     val sized = manifest(root, v).map(l =>
       l -> Files.size(Paths.get(abs(root, entryPath(l)))))
-    val (small, large) = sized.partition(_._2 < targetBytes)
-    if (small.size < 2) return v
-    val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
-    val rewritten = readFiles(spark, root, small.map(_._1)).repartition(nOut)
-    commit(root, large.map(_._1) ++ writeFiles(rewritten, root))
+    val hasDv = (l: String) => entryDv(l).isDefined
+    val (chosen, kept) = sized.partition { case (l, n) => n < targetBytes || hasDv(l) }
+    if (chosen.size < 2 && !chosen.exists(c => hasDv(c._1))) return v
+    val nOut = math.min(chosen.size,
+      math.max(1, math.ceil(chosen.map(_._2).sum.toDouble / targetBytes).toInt))
+    val rewritten = scan(spark, root, chosen.map(_._1)).coalesce(nOut)
+    commit(root, kept.map(_._1) ++ writeFiles(rewritten, root))
   }
 
   /** OPTIMIZE … ZORDER BY (the multi-dimensional clustering face of
@@ -890,4 +969,44 @@ object GraftTable {
     }
     removed
   }
+}
+
+/** Per-file deletion bitmaps, looked up by a scan's `_metadata.file_name`.
+  * A scan reads one file at a time, so the last file's bitmap is kept. */
+private[sources] final class Bitmaps(byFile: Map[String, RoaringBitmap]) extends Serializable {
+  @transient private lazy val byName: Map[UTF8String, RoaringBitmap] =
+    byFile.map { case (f, b) => UTF8String.fromString(f) -> b }
+  @transient private var last: (UTF8String, RoaringBitmap) = _
+
+  def contains(file: UTF8String, pos: Long): Boolean = {
+    var l = last
+    if (l == null || l._1 != file) {
+      l = (file.clone(), byName.getOrElse(file, null))
+      last = l
+    }
+    l._2 != null && l._2.contains(pos.toInt)
+  }
+
+  override def toString: String = s"deletion vectors of ${byFile.size} files"
+}
+
+/** TRUE for a row whose `(file, pos)` is in `bitmaps`. One expression for
+  * any number of files: the bitmaps are a reference object, so the plan
+  * does not grow with them, and the generated code compares the scan's
+  * file name bytes without building a Java string per row. */
+private[sources] final case class InBitmaps(file: Expression, pos: Expression, bitmaps: Bitmaps)
+    extends BinaryExpression with Predicate {
+  override def left: Expression = file
+  override def right: Expression = pos
+
+  override protected def nullSafeEval(f: Any, p: Any): Any =
+    bitmaps.contains(f.asInstanceOf[UTF8String], p.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val b = ctx.addReferenceObj("bitmaps", bitmaps)
+    defineCodeGen(ctx, ev, (f, p) => s"$b.contains($f, $p)")
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): InBitmaps =
+    copy(file = l, pos = r)
 }

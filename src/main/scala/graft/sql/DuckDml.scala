@@ -49,8 +49,8 @@ object DuckDml {
   }
 
   /** TRANSACTION surface (reference: DuckDB's BEGIN/COMMIT/ROLLBACK over
-    * its MVCC; `src/transaction/`): the versioned copy-on-write table IS
-    * the undo log. BEGIN opens a transaction; the first mutation of each
+    * its MVCC; `src/transaction/`): the versioned manifest table IS the
+    * undo log. BEGIN opens a transaction; the first mutation of each
     * table inside it records that table's pre-transaction version;
     * ROLLBACK restores every touched table to its recorded version via
     * [[graft.sources.GraftTable.restore]] (a metadata-only commit — no
@@ -242,14 +242,15 @@ object DuckDml {
     *
     * The affected-row set comes from the GraftTable MANIFEST DIFF
     * between the versions the mutation committed ([[GraftTable.changes]]
-    * — only rewritten files are read), never from re-applying the
-    * predicate to the post-image (whose columns may have changed). The
+    * — only the files and positions the mutation touched are read),
+    * never from re-applying the predicate to the post-image (whose
+    * columns may have changed). The
     * RETURNING list supports `*` and dialect-translated expression/alias
     * items over the affected rows.
     *
     * Documented divergence (the [[GraftTable.changes]] contract): an
     * UPDATE assignment that leaves a matched row bit-identical does not
-    * surface (identical rewritten rows cancel in the diff), while DuckDB
+    * surface (identical old and new rows cancel in the diff), while DuckDB
     * returns the row; row ORDER is not DuckDB's insertion order (the
     * engine's distributed scans have no insertion order to preserve). */
   def execReturning(spark: SparkSession, tables: Map[String, String],
@@ -603,7 +604,8 @@ object DuckDml {
       // `src/execution/operator/helper/physical_vacuum.cpp` and the
       // checkpointer's block merge): VACUUM reclaims unreferenced files,
       // CHECKPOINT merges small data files into target-size ones — the
-      // copy-on-write analogs of the reference's storage maintenance.
+      // manifest-table analogs of the reference's storage maintenance
+      // (CHECKPOINT also drops the rows deletion vectors mark).
       case "vacuum" =>
         txnRefuse("VACUUM")
         val r = root(tok(1))

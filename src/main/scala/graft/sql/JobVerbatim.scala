@@ -93,11 +93,18 @@ object JobVerbatim {
     s"WITH ${binds.mkString(", ")} ${queryText(id)}"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Lazy: listing the query dir must not be part of initializing this
+    * object, which [[oracleOf]] does for any entry name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     queryIds.map(id =>
       s"imdb_q$id" -> ((s: SparkSession, _: String) => run(s, id))
     ).toMap
 
   def oracle: Map[String, String] =
     queryIds.map(id => s"imdb_q$id" -> oracleText(id)).toMap
+
+  /** One entry's oracle: lists the query dir only for an `imdb_q` name. */
+  def oracleOf(name: String): Option[String] =
+    Some(name).filter(_.startsWith("imdb_q")).map(_.stripPrefix("imdb_q"))
+      .filter(queryIds.contains).map(oracleText)
 }

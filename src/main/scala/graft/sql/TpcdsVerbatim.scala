@@ -195,11 +195,13 @@ object TpcdsVerbatim {
     s"SELECT $sel FROM ($bound) AS graft_t(${posNames(ncols).mkString(", ")})"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    (1 to 99).map(n =>
-      f"tpcds_q$n%02d" -> ((s: SparkSession, dir: String) => run(s, dir, n))
-    ).toMap
+  private val byName: Map[String, Int] = (1 to 99).map(n => f"tpcds_q$n%02d" -> n).toMap
 
-  def oracle: Map[String, String] =
-    (1 to 99).map(n => f"tpcds_q$n%02d" -> oracleText(n)).toMap
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (k, n) => k -> ((s: SparkSession, dir: String) => run(s, dir, n)) }
+
+  def oracle: Map[String, String] = byName.map { case (k, n) => k -> oracleText(n) }
+
+  /** One entry's oracle: reads that query's text only. */
+  def oracleOf(name: String): Option[String] = byName.get(name).map(oracleText)
 }

@@ -6,7 +6,7 @@ import graft.sources.GraftTable
 
 /** Streaming ingestion into a `GraftTable` — the missing edge between the
   * engine's two round-6 additions: Structured Streaming micro-batches
-  * land as DML commits on the copy-on-write table, giving a queryable,
+  * land as DML commits on the manifest table, giving a queryable,
   * time-travelable, continuously-ingesting table (the streaming face of
   * the reference's INSERT path,
   * `src/execution/operator/persistent/physical_insert.cpp`, whose batch
@@ -20,8 +20,8 @@ import graft.sources.GraftTable
   * filesystem move, so there is no crash window between them — the same
   * txn-in-commit-log design every production table format uses.
   *
-  * Scale posture: each micro-batch appends files (insert) or rewrites
-  * only matched files (upsert); no state is kept on executors beyond the
+  * Scale posture: each micro-batch appends files (insert) or marks the
+  * matched rows deleted and appends one file (upsert); no state is kept on executors beyond the
   * batch, and the driver-side work per batch is O(#files touched).
   */
 object StreamingDml {

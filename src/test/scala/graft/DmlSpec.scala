@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sources.GraftTable
 
-/** GraftTable copy-on-write invariants the DuckDB oracle cannot see:
-  * file-granularity rewrites (unaffected files survive by identity, not by
-  * re-copy), append-only inserts, empty-table behavior, and version
-  * immutability under successive DML. */
+/** GraftTable invariants the DuckDB oracle cannot see: file-granularity
+  * changes (entries of unaffected files survive by identity, not by
+  * re-copy; a delete changes only the matched files' deletion vectors),
+  * append-only inserts, empty-table behavior, and version immutability
+  * under successive DML. Deletion vectors themselves: DeletionVectorSpec. */
 class DmlSpec extends SparkSpec {
 
   private def freshRoot() =

@@ -39,6 +39,12 @@ class SparkEntrySpec extends SparkSpec {
       s"key collision: $total module entries vs ${SparkEntry.queries.size} merged")
   }
 
+  test("dml_* oracle texts resolve without the reference query dirs") {
+    val dml = sources.DmlQueries.queries.keySet
+    assert(SparkEntry.oraclesFor(dml) === sources.DmlQueries.oracle)
+    assert(SparkEntry.oraclesFor(dml).size === 15)
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

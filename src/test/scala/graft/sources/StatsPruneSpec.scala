@@ -327,15 +327,44 @@ class StatsPruneSpec extends SparkSpec {
       "insert: the write's jobs only")
 
     val pred = col("l_orderkey") === 1L
-    val rewritten = GraftTable.read(spark, root).withColumn("l_returnflag",
-      when(coalesce(pred, lit(false)), lit("x")).otherwise(col("l_returnflag")))
+    val changed = GraftTable.read(spark, root).filter(pred)
     val baseline = jobsOf {
-      GraftTable.read(spark, root).withColumn("__file", input_file_name())
-        .filter(pred).select("__file").distinct().collect()
-      rewritten.write.parquet(freshRoot() + "/w")
+      changed.select(col("_metadata.row_index")).collect()
+      changed.withColumn("l_returnflag", lit("x")).coalesce(1).write.parquet(freshRoot() + "/w")
     }
     assert(jobsOf(GraftTable.update(spark, root, pred, Map("l_returnflag" -> lit("x")))) === baseline,
-      "update: the affected-file scan and the write only")
+      "update: the matched-row scan and the write of the changed rows only")
+
+    val gone = col("l_orderkey") === 2L
+    val scanJobs = jobsOf(GraftTable.read(spark, root).filter(gone)
+      .select(col("_metadata.row_index")).collect())
+    assert(jobsOf(GraftTable.delete(spark, root, gone)) === scanJobs,
+      "delete: the matched-row scan only, no write")
+
+    // MERGE: one aggregate over the cached source (duplicate check and
+    // key range), the join of the target's keys with it, one write
+    val keys = Seq("l_orderkey", "l_linenumber")
+    val source = lineitem.filter(col("l_orderkey") === 3L)
+      .withColumn("l_quantity", col("l_quantity") + 1)
+      .unionByName(lineitem.filter(col("l_orderkey") === 3L && col("l_linenumber") === 1)
+        .withColumn("l_linenumber", lit(99)))
+      .dropDuplicates(keys)
+    val mergeBaseline = jobsOf {
+      val src = source.persist()
+      src.groupBy(keys.map(col): _*).count()
+        .agg(max("count"), keys.flatMap(k => Seq(min(k), max(k))): _*).collect()
+      val matched = GraftTable.read(spark, root)
+        .select(col("_metadata.row_index").as("pos"), col(keys(0)), col(keys(1)))
+        .join(src, keys).persist()
+      matched.select("pos").collect()
+      val inSchema = lineitem.columns.toIndexedSeq.map(col)
+      matched.select(inSchema: _*)
+        .unionAll(src.join(matched.select(keys.map(col): _*), keys, "left_anti").select(inSchema: _*))
+        .coalesce(1).write.parquet(freshRoot() + "/w")
+      matched.unpersist(); src.unpersist()
+    }
+    assert(jobsOf(GraftTable.merge(spark, root, source, keys)) === mergeBaseline,
+      "merge: the source aggregate, the matched-row join and the write only")
   }
 
   test("a timestamp column costs one aggregate over that column alone") {
