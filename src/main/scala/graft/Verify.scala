@@ -11,28 +11,26 @@ import scala.collection.immutable.ListMap
   * partial correctness record instead of nothing (round 5's gate recorded
   * `{}` because the JSON was only written at the very end).
   *
-  * TWO-LANE PARALLEL GATE (r17 verdict item 3, guide §2.6): the driver
-  * wall of the serial 646-entry gate (685 s at 8 cpus) was the binding
-  * driver-budget risk. Spark's scheduler happily runs several jobs at
+  * PARALLEL GATE: run serially, the 646-entry gate took 685 s at 8
+  * cpus, the binding risk to its time budget. Spark's scheduler happily runs several jobs at
   * once; entries are independent, so SPARK_GRAFT_VERIFY_THREADS worker
   * threads (default 3 — enough to back-fill stage tails, not enough to
-  * thrash) drain the side-effect-free entries concurrently, EACH WORKER
-  * ON ITS OWN `spark.newSession()` — separate temp-view catalog and
-  * SQLConf over the shared SparkContext, so the verbatim suites'
-  * same-named view registrations (customer, date_dim, …) cannot race.
-  * Entries with JVM-global side effects stay in a SERIAL lane run after
-  * the pool, on the main session, in sorted order:
-  *   - `ducksql_*` (DuckSqlQueries): ATTACH/DETACH and CREATE MACRO
-  *     mutate DuckDialect's process-wide registries, which translate()
-  *     READS for every query — the serial lane runs after the pool so
-  *     pool translations always see the registries empty;
-  *   - `dml_*` (DmlQueries): versioned managed-table dirs + txn state;
-  *   - `join_bucketed`: saveAsTable into the shared external catalog.
-  * Per-entry timings from the pool are contention-inflated relative to a
-  * serial run, so the rotated timings file is tagged with "threads" and
-  * Bench's cross-round diff only compares like-tagged files.
+  * thrash) drain every entry from one queue, EACH WORKER ON ITS OWN
+  * `spark.newSession()` — separate temp-view catalog, SQLConf and SQL
+  * state (`graft.sql.SessionSql`: macros, ATTACH aliases, prepared
+  * statements, the open transaction) over the shared SparkContext, so
+  * the verbatim suites' same-named view registrations (customer,
+  * date_dim, …) and the `ducksql_*` statements cannot race. The `dml_*`
+  * entries write to per-call temp roots and `join_bucketed` to per-call
+  * table names and temp dirs. `threads = 1` is the same pool with one
+  * worker. Per-entry timings from the pool are contention-inflated
+  * relative to a serial run, so the rotated timings file is tagged with
+  * "threads" and Bench's cross-round diff only compares like-tagged
+  * files.
   */
 object Verify {
+  type Entry = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // Engine and oracle must read the SAME staged corpus scale (r16
@@ -41,20 +39,63 @@ object Verify {
     graft.sql.TpcdsVerbatim.pinOracleScale(sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = EngineSession.local(cpus)
+    // SPARK_GRAFT_ONLY=name1,name2 restricts the dump to a subset (a
+    // development aid; the gate leaves it unset and dumps the full map).
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    val entries =
+      if (only.isEmpty) SparkEntry.queries
+      else SparkEntry.queries.filter { case (n, _) => only(n) }
+    val threads = math.max(1,
+      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "3").toInt)
+    val (timings, errors) = run(spark, sfDir, outDir, entries, threads)
+    // Repo-side rotation for cross-round diffing — only for the full map
+    // (a SPARK_GRAFT_ONLY subset would poison the baseline) AT THE
+    // GATE SCALE sf0.01 (sweeps at sf0.1/10× must not rotate the
+    // baseline out from under the cross-round diff): latest
+    // becomes prev, this run becomes latest. Best-effort (read-only cwd
+    // or missing bench_evidence dir is fine).
+    if (only.isEmpty &&
+        new java.io.File(sfDir).getName == "sf0.01") try {
+      val dir = Paths.get("bench_evidence")
+      if (Files.isDirectory(dir)) {
+        val latest = dir.resolve("verify_timings_latest.json")
+        if (Files.exists(latest))
+          Files.move(latest, dir.resolve("verify_timings_prev.json"),
+            StandardCopyOption.REPLACE_EXISTING)
+        // loadavg annotation: a noisy baseline is otherwise only
+        // identifiable by side-channel knowledge, so the box state goes
+        // into the file and a contended run is machine-detectable
+        val load = try {
+          scala.io.Source.fromFile("/proc/loadavg").mkString.trim
+            .split("\\s+").take(3).mkString(" ")
+        } catch { case _: Throwable => "" }
+        Files.writeString(latest, Json.write(ListMap("sf" -> sfDir, "loadavg" -> load,
+          "threads" -> threads, "timings" -> ListMap.from(timings.toSeq.sortBy(_._1)))))
+        System.err.println(s"[verify] timings -> $latest (loadavg $load, threads $threads)")
+      }
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] timings rotation failed: ${e.getMessage}")
+    }
+    if (errors.nonEmpty)
+      System.err.println(
+        s"[verify] ${errors.size} FAILED: ${errors.keys.toSeq.sorted.mkString(", ")}")
+    spark.stop()
+  }
+
+  /** Dump every entry's result under `outDir` with `threads` workers and
+    * write the record files (oracle_sql.json, errors.json,
+    * verify_timings.json) as entries finish. Returns the per-entry wall
+    * times (ms) and the failed entries' messages. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      entries: Map[String, Entry], threads: Int): (Map[String, Long], Map[String, String]) = {
     new java.io.File(outDir).mkdirs()
     // Canonical row order on BOTH sides (sorted column names, NULLS FIRST):
     // makes the dump robust to order-sensitive comparison — group-by output
     // order is engine-specific otherwise.
     import org.apache.spark.sql.functions.col
     val columnsByQuery = scala.collection.mutable.Map.empty[String, Seq[String]]
-    // Dev aid: SPARK_GRAFT_ONLY=name1,name2 restricts the dump to a subset
-    // (the driver never sets it, so the gate always runs the full map).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      (if (only.isEmpty) SparkEntry.queries
-       else SparkEntry.queries.filter { case (n, _) => only(n) })
-        .toSeq.sortBy(_._1) // deterministic order: partial runs are a prefix
+    val selected = entries.toSeq.sortBy(_._1) // deterministic queue order
     // The record files are rewritten after every entry, each atomically
     // (tmp + move), so a crash mid-gate leaves the last complete record.
     def writeAtomic(name: String, v: Any): Unit = {
@@ -115,8 +156,7 @@ object Verify {
       writeAtomic("verify_timings.json", ListMap.from(timings.toSeq.sortBy(_._1)))
     val t0 = System.nanoTime()
     var done = 0
-    def runOne(sess: SparkSession, name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+    def runOne(sess: SparkSession, name: String, fn: Entry): Unit = {
       val tq = System.nanoTime()
       try {
         val df = fn(sess, sfDir)
@@ -157,91 +197,37 @@ object Verify {
           Tables.t(sess, sfDir, n).groupBy().count().collect())
         sess.range(0, 1000, 1, 2).selectExpr("sum(id)").collect()
       } catch { case _: Throwable => }
-    // Serial lane membership is decided by MODULE (the side-effecting
-    // surfaces), not by name heuristics.
-    val serialLane: Set[String] =
-      sql.DuckSqlQueries.queries.keySet ++
-        sources.DmlQueries.queries.keySet + "join_bucketed"
-    val (serialEntries, poolEntries) =
-      selected.partition { case (n, _) => serialLane(n) }
-    val threads = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "3").toInt)
-    warm(spark)
-    if (threads == 1) {
-      // single-session mode — SAME two-lane ORDER as the pooled gate
-      // (pool entries first, serial lane after), so translate() sees the
-      // identical registry state in both modes and gate results are
-      // mode-reproducible; only the concurrency differs.
-      (poolEntries ++ serialEntries).foreach {
-        case (name, fn) => runOne(spark, name, fn) }
-    } else {
-      System.err.println(s"[verify] two-lane gate: ${poolEntries.size} " +
-        s"pooled entries on $threads worker sessions, " +
-        s"${serialEntries.size} serial-lane entries after")
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-        (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-      poolEntries.foreach(queue.add)
-      val workers = (1 to threads).map { i =>
-        val th = new Thread(() => {
-          // The whole body is guarded: a failure OUTSIDE runOne's
-          // per-entry try (session init, enableAqeCompaction) must not
-          // kill the worker silently — a dead pool would make hundreds
-          // of entries VANISH from the record, violating the gate's
-          // failed-rows-never-vanish invariant (round 7).
-          try {
-            val ws = spark.newSession()
-            compaction.Compact.enableAqeCompaction(ws)
-            warm(ws)
-            var e = queue.poll()
-            while (e != null) { runOne(ws, e._1, e._2); e = queue.poll() }
-          } catch { case t: Throwable =>
-            System.err.println(
-              s"[verify] worker-$i died: ${Option(t.getMessage).getOrElse(t.getClass.getName)}")
-          }
-        }, s"verify-worker-$i")
-        th.setDaemon(true)
-        th.start()
-        th
-      }
-      workers.foreach(_.join())
-      // Backstop: anything still queued after every worker exited (all
-      // workers died early) is drained on the MAIN session — slower, but
-      // every entry still lands in the record as dumped or FAILED.
-      var left = queue.poll()
-      while (left != null) { runOne(spark, left._1, left._2); left = queue.poll() }
-      serialEntries.foreach { case (name, fn) => runOne(spark, name, fn) }
+    System.err.println(s"[verify] ${selected.size} entries on $threads worker sessions")
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String, Entry)]()
+    selected.foreach(queue.add)
+    val workers = (1 to threads).map { i =>
+      val th = new Thread(() => {
+        // The whole body is guarded: a failure OUTSIDE runOne's
+        // per-entry try (session init, enableAqeCompaction) must not
+        // kill the worker silently — a dead pool would make hundreds
+        // of entries VANISH from the record, violating the gate's
+        // failed-rows-never-vanish invariant.
+        try {
+          val ws = spark.newSession()
+          compaction.Compact.enableAqeCompaction(ws)
+          warm(ws)
+          var e = queue.poll()
+          while (e != null) { runOne(ws, e._1, e._2); e = queue.poll() }
+        } catch { case t: Throwable =>
+          System.err.println(
+            s"[verify] worker-$i died: ${Option(t.getMessage).getOrElse(t.getClass.getName)}")
+        }
+      }, s"verify-worker-$i")
+      th.setDaemon(true)
+      th.start()
+      th
     }
-    // Repo-side rotation for cross-round diffing — only for the full map
-    // (a SPARK_GRAFT_ONLY subset would poison the baseline) AT THE
-    // DRIVER'S GATE SCALE sf0.01 (builder sweeps at sf0.1/10× must not
-    // rotate the baseline out from under the cross-round diff): latest
-    // becomes prev, this run becomes latest. Best-effort (read-only cwd
-    // or missing bench_evidence dir is fine).
-    if (only.isEmpty &&
-        new java.io.File(sfDir).getName == "sf0.01") try {
-      val dir = Paths.get("bench_evidence")
-      if (Files.isDirectory(dir)) {
-        val latest = dir.resolve("verify_timings_latest.json")
-        if (Files.exists(latest))
-          Files.move(latest, dir.resolve("verify_timings_prev.json"),
-            StandardCopyOption.REPLACE_EXISTING)
-        // loadavg annotation (r16 verdict: a noisy baseline was only
-        // identifiable by side-channel knowledge — record the box state
-        // in the file so a contended run is machine-detectable)
-        val load = try {
-          scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-            .split("\\s+").take(3).mkString(" ")
-        } catch { case _: Throwable => "" }
-        Files.writeString(latest, Json.write(ListMap("sf" -> sfDir, "loadavg" -> load,
-          "threads" -> threads, "timings" -> ListMap.from(timings.toSeq.sortBy(_._1)))))
-        System.err.println(s"[verify] timings -> $latest (loadavg $load, threads $threads)")
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] timings rotation failed: ${e.getMessage}")
-    }
-    if (errors.nonEmpty)
-      System.err.println(
-        s"[verify] ${errors.size} FAILED: ${errors.keys.toSeq.sorted.mkString(", ")}")
-    spark.stop()
+    workers.foreach(_.join())
+    // Backstop: anything still queued after every worker exited (all
+    // workers died early) is drained on the MAIN session — slower, but
+    // every entry still lands in the record as dumped or FAILED.
+    var left = queue.poll()
+    while (left != null) { runOne(spark, left._1, left._2); left = queue.poll() }
+    (timings.toMap, errors.toMap)
   }
 }

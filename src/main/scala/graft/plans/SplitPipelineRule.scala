@@ -41,7 +41,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SplitPipelineRule())
     // DuckDB-dialect fallback: native parse wins; on ParseException the
-    // statement is retried through graft.sql.DuckDialect.translate.
-    e.injectParser((_, parser) => new graft.sql.DuckFallbackParser(parser))
+    // statement is retried through graft.sql.DuckDialect.translate with
+    // the session's macros and ATTACH aliases.
+    e.injectParser((session, parser) => new graft.sql.DuckFallbackParser(session, parser))
   }
 }

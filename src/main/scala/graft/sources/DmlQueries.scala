@@ -222,7 +222,7 @@ object DmlQueries {
     GraftTable.create(s, root, Tables.t(s, dir, "customer")
       .select("c_custkey", "c_mktsegment", "c_acctbal"))
     val cat = Map("cust" -> root)
-    graft.sql.DuckDml.withTxnScope {
+    graft.sql.DuckDml.withTxnScope(s) {
       graft.sql.DuckDml.exec(s, cat, "BEGIN TRANSACTION")
       graft.sql.DuckDml.exec(s, cat,
         "UPDATE cust SET c_acctbal = c_acctbal + 100.0 WHERE c_mktsegment = 'BUILDING'")

@@ -28,7 +28,9 @@ import scala.jdk.CollectionConverters._
   *   _manifests/v<N>.manifest      one data-file entry per line: the
   *                                 relative path, then optional
   *                                 TAB-separated `col=min,max` stats
-  *                                 fields (URL-encoded), then an optional
+  *                                 fields (URL-encoded), a `#rows=<n>`
+  *                                 field (the file's row count, from its
+  *                                 footer), then an optional
   *                                 `#dv=<base64>` field: the file's
   *                                 deletion vector, a serialized
   *                                 RoaringBitmap of deleted
@@ -63,7 +65,10 @@ import scala.jdk.CollectionConverters._
   *    matching rows' `(file, row_index)` positions as per-file bitmaps,
   *    built on the executors. The positions join the files' deletion
   *    vectors; UPDATE and MERGE also append the rows' new values, from
-  *    the same scan, as one new file. A DELETE writes no data at all.
+  *    the same scan, as one new file. A DELETE writes no data at all. A
+  *    file whose vector comes to cover its `#rows=` count leaves the
+  *    manifest at once (an entry without the field stays until
+  *    [[compact]]).
   *  - A read filters each file that carries a deletion vector by one
   *    expression holding all the bitmaps (its plan does not grow with
   *    them); a table without deletion vectors is a plain parquet scan.
@@ -116,6 +121,7 @@ object GraftTable {
   // a table.
 
   private val DvField = "#dv="
+  private val RowsField = "#rows="
   private val FileCol = "__graft_file"
   private val PosCol = "__graft_pos"
 
@@ -141,16 +147,22 @@ object GraftTable {
   private def entryDv(line: String): Option[RoaringBitmap] =
     line.split('\t').find(_.startsWith(DvField)).map(f => decodeDv(f.substring(DvField.length)))
 
-  /** The entry with `deleted` added to its deletion vector. */
-  private def withDeleted(line: String, deleted: RoaringBitmap): String = {
-    val fields = line.split('\t').toSeq
-    val dv = entryDv(line).fold(deleted)(RoaringBitmap.or(_, deleted))
-    (fields.filterNot(_.startsWith(DvField)) :+ (DvField + encodeDv(dv))).mkString("\t")
-  }
+  /** The file's row count, if the entry records one. */
+  private def entryRows(line: String): Option[Long] =
+    line.split('\t').find(_.startsWith(RowsField)).map(_.substring(RowsField.length).toLong)
 
-  /** Entries with the deleted positions of `hits` (file name → rows) added. */
+  /** Entries with the deleted positions of `hits` (file name → rows) added
+    * to their deletion vectors; an entry whose vector then covers its
+    * recorded row count leaves the manifest, so no read opens the file. */
   private def markDeleted(entries: Seq[String], hits: Map[String, RoaringBitmap]): Seq[String] =
-    entries.map(e => hits.get(fileName(e)).fold(e)(withDeleted(e, _)))
+    entries.flatMap { e =>
+      hits.get(fileName(e)).fold(Option(e)) { deleted =>
+        val dv = entryDv(e).fold(deleted)(RoaringBitmap.or(_, deleted))
+        if (entryRows(e).contains(dv.getLongCardinality)) None
+        else Some((e.split('\t').toSeq.filterNot(_.startsWith(DvField)) :+
+          (DvField + encodeDv(dv))).mkString("\t"))
+      }
+    }
 
   /** TRUE for a row whose position is in its file's bitmap. */
   private def inBitmaps(bitmaps: Map[String, RoaringBitmap]): Column = {
@@ -556,27 +568,29 @@ object GraftTable {
     }
   }
 
-  /** Per-file min/max stats for the eligible columns, folded into the
-    * manifest entry lines. They come from the freshly written files'
-    * parquet footers, read in the writing JVM (no Spark job). Only the columns
-    * some footer has no bounds for go through one aggregate over the files
-    * that lack them (the collect is #files × #cols scalars, never rows).
-    * A column that is all-null in a file (or non-comparable: NaN/±Inf)
-    * simply omits its field — readers treat absence as "must keep". */
+  /** Per-file min/max stats for the eligible columns and the file's row
+    * count, folded into the manifest entry lines. They come from the
+    * freshly written files' parquet footers, read in the writing JVM (no
+    * Spark job). Only the columns some footer has no bounds for go through
+    * one aggregate over the files that lack them (the collect is #files ×
+    * #cols scalars, never rows). A column that is all-null in a file (or
+    * non-comparable: NaN/±Inf) simply omits its field — readers treat
+    * absence as "must keep". */
   private def statsLines(spark: SparkSession, root: String, rel: String,
       files: Seq[org.apache.hadoop.fs.FileStatus], schema: StructType): Seq[String] = {
     val relFiles = files.map(st => s"$rel/${st.getPath.getName}")
     val cols = schema.fields.toSeq.filter(f => statEligible(f.dataType))
-    if (cols.isEmpty) return relFiles
     val conf = spark.sparkContext.hadoopConfiguration
     val footers = org.apache.spark.sql.graft.Bridge.parmap(files, "graft-footers", 8) { st =>
       val meta = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
         .readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
           org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-      cols.map(f => f.name -> footerStat(meta, f)).toMap
+      (meta.getBlocks.asScala.map(_.getRowCount).sum,
+        cols.map(f => f.name -> footerStat(meta, f)).toMap)
     }
-    val byFooter = relFiles.zip(footers).toMap
-    val rescanCols = cols.filter(f => footers.exists(_(f.name) == Rescan))
+    val rowCounts = relFiles.zip(footers.map(_._1)).toMap
+    val byFooter = relFiles.zip(footers.map(_._2)).toMap
+    val rescanCols = cols.filter(f => byFooter.values.exists(_(f.name) == Rescan))
     val rescanFiles = relFiles.filter(p => rescanCols.exists(f => byFooter(p)(f.name) == Rescan))
     val rescanned: Map[String, Map[String, FooterStat]] =
       if (rescanFiles.isEmpty) Map.empty
@@ -605,7 +619,7 @@ object GraftTable {
           case _ => None
         }
       }
-      if (fields.isEmpty) p else (p +: fields).mkString("\t")
+      (p +: fields :+ s"$RowsField${rowCounts(p)}").mkString("\t")
     }
   }
 

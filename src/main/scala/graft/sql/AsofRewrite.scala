@@ -185,7 +185,7 @@ object AsofRewrite {
     def resolve(s0: Int, e0: Int): DataFrame = {
       val rel = render(v.slice(s0, e0)).trim
       val body = if (rel.startsWith("(")) rel else s"(SELECT * FROM $rel)"
-      Tables.sql(spark, dir, DuckDialect.translate(s"SELECT * FROM $body __asof_rel"))
+      Tables.sql(spark, dir, DuckDialect.translateIn(spark, s"SELECT * FROM $body __asof_rel"))
     }
     val leftDF = try resolve(lRelS, lRelE) catch { case _: Exception => return None }
     val rightDF0 = try resolve(rRelS, rRelE) catch { case _: Exception => return None }
@@ -251,7 +251,7 @@ object AsofRewrite {
     val view = s"__graft_asof_${System.identityHashCode(joined).toHexString}"
     joined.createOrReplaceTempView(view)
     val outer = s"SELECT ${render(sel2)} FROM $view ${render(tr2)}"
-    try Some(Tables.sql(spark, dir, DuckDialect.translate(outer)))
+    try Some(Tables.sql(spark, dir, DuckDialect.translateIn(spark, outer)))
     catch { case _: Exception => None }
   }
 }

@@ -23,7 +23,7 @@ object Describe {
       if (headWord == "select" || headWord == "with" || rest.startsWith("("))
         rest
       else s"SELECT * FROM $rest"
-    val schema = Tables.sql(spark, dir, DuckDialect.translate(inner)).schema
+    val schema = Tables.sql(spark, dir, DuckDialect.translateIn(spark, inner)).schema
     import spark.implicits._
     schema.fields.toIndexedSeq
       .map(f => (f.name, Summarize.duckTypeName(f.dataType), "YES",

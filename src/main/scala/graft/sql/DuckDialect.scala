@@ -622,100 +622,21 @@ object DuckDialect {
     * `src/parser/parsed_data/create_macro_info.hpp`): DuckDB macros are
     * INLINED at bind time, so the faithful Spark-side treatment is
     * textual inlining before translation — no UDF, the expanded
-    * expression stays inside whole-stage codegen. Registered via
-    * [[registerSqlMacro]] (the `CREATE MACRO` statement face in
-    * `DuckDml.exec` routes here); expansion is arity-checked,
+    * expression stays inside whole-stage codegen. The macros are the
+    * session's ([[SessionSql]]; the `CREATE MACRO` statement face in
+    * `DuckDml.exec` registers them); expansion is arity-checked,
     * parenthesizes every argument substitution (operator precedence
     * cannot leak), supports macro-in-macro bodies, and caps total
-    * expansions to refuse cycles loudly.
-    *
-    * GLOBAL-STATE CONTRACT: the registry is PROCESS-GLOBAL (DuckDB's own
-    * macro catalog is database-global, but this JVM may host many
-    * sessions), so a registered macro changes `translate` results for
-    * every caller until dropped — translation is order-dependent across
-    * registrations. Callers that register macros for a bounded task
-    * (tests, the `ducksql_macro_stmt` gate) must wrap the task in
-    * [[withMacroScope]], which snapshots the registry and restores it on
-    * exit so nothing leaks to unrelated sessions; [[clearSqlMacros]] is
-    * the explicit full reset. Scopes are not isolated across THREADS —
-    * concurrent scoped tasks registering the same macro name race, so
-    * keep scoped names task-unique. */
-  private val sqlMacros =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], Vector[Tok])]()
-
-  def registerSqlMacro(name: String, params: Seq[String], bodySql: String): Unit =
-    sqlMacros.put(name.toLowerCase,
-      (params.map(_.toLowerCase), tokenize(bodySql)))
-
-  def dropSqlMacro(name: String): Unit = sqlMacros.remove(name.toLowerCase)
-
-  /** Remove every registered macro — the explicit global reset. */
-  def clearSqlMacros(): Unit = sqlMacros.clear()
-
-  /** Run `f` with the current macro registry snapshotted and restored on
-    * exit: registrations made inside the scope (and drops of pre-existing
-    * macros) are undone, whether `f` returns or throws. */
-  def withMacroScope[T](f: => T): T = {
-    val snapshot = new java.util.HashMap[String, (Seq[String], Vector[Tok])](sqlMacros)
-    try f
-    finally { sqlMacros.clear(); sqlMacros.putAll(snapshot) }
-  }
-
-  /** ATTACH registry (reference `ATTACH 'file.db' AS name` + `name.table`
-    * qualified resolution): alias → fixture DIRECTORY. The `DuckDml`
-    * ATTACH statement registers the alias (and creates one temp view per
-    * table, named `<alias>__<table>`); [[rewriteAttachedRefs]] rewrites
-    * every `alias.table` qualified reference to that flat view name, so
-    * pasted cross-catalog SQL resolves. Same process-global contract as
-    * [[sqlMacros]] — bound uses via [[withAttachScope]]. A query-local
-    * TABLE alias shadowing an attached catalog name is the caller's
-    * collision to avoid (DuckDB has the same ambiguity). */
-  private val attachedCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def registerAttachment(alias: String, dir: String): Unit =
-    attachedCatalogs.put(alias.toLowerCase, dir)
-
-  def removeAttachment(alias: String): Option[String] =
-    Option(attachedCatalogs.remove(alias.toLowerCase))
-
-  def attachmentDir(alias: String): Option[String] =
-    Option(attachedCatalogs.get(alias.toLowerCase))
-
-  /** Snapshot/restore the ATTACH registry around `f`. */
-  def withAttachScope[T](f: => T): T = {
-    val snap = new java.util.HashMap[String, String](attachedCatalogs)
-    try f
-    finally { attachedCatalogs.clear(); attachedCatalogs.putAll(snap) }
-  }
-
-  /** `alias.table` → `alias__table` for registered attachments. */
-  private def rewriteAttachedRefs(toks0: Vector[Tok]): Vector[Tok] = {
-    if (attachedCatalogs.isEmpty) return toks0
-    val v = toks0
-    val b = Vector.newBuilder[Tok]
-    var i = 0
-    while (i < v.length) {
-      val t = v(i)
-      val n1 = nextIdx(v, i)
-      val n2 = if (n1 < v.length) nextIdx(v, n1) else v.length
-      if (t.kind == 4 && attachedCatalogs.containsKey(t.word) &&
-          n1 < v.length && v(n1).is(".") && n2 < v.length && v(n2).kind == 4) {
-        b += Tok(4, s"${t.word}__${v(n2).word}")
-        i = n2 + 1
-      } else { b += t; i += 1 }
-    }
-    b.result()
-  }
-
-  private def rewriteMacros(toks0: Vector[Tok]): Vector[Tok] = {
-    if (sqlMacros.isEmpty) return toks0
+    * expansions to refuse cycles loudly. */
+  private def rewriteMacros(toks0: Vector[Tok],
+      macros: java.util.Map[String, (Seq[String], Vector[Tok])]): Vector[Tok] = {
+    if (macros.isEmpty) return toks0
     var toks = toks0
     var expansions = 0
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
-      val mac = if (t.kind == 4) sqlMacros.get(t.word) else null
+      val mac = if (t.kind == 4) macros.get(t.word) else null
       val open = if (mac != null) nextIdx(toks, i) else -1
       if (mac != null && open < toks.length && open >= 0 && toks(open).is("(")) {
         expansions += 1
@@ -759,6 +680,33 @@ object DuckDialect {
       } else i += 1
     }
     toks
+  }
+
+  /** ATTACH (reference `ATTACH 'file.db' AS name` + `name.table`
+    * qualified resolution): the `DuckDml` ATTACH statement records the
+    * session's alias → fixture directory and creates one temp view per
+    * table, named `<alias>__<table>`; this rewrite turns every
+    * `alias.table` qualified reference into that flat view name, so
+    * pasted cross-catalog SQL resolves. A query-local TABLE alias
+    * shadowing an attached catalog name is the caller's collision to
+    * avoid (DuckDB has the same ambiguity). */
+  private def rewriteAttachedRefs(toks0: Vector[Tok],
+      attached: java.util.Map[String, String]): Vector[Tok] = {
+    if (attached.isEmpty) return toks0
+    val v = toks0
+    val b = Vector.newBuilder[Tok]
+    var i = 0
+    while (i < v.length) {
+      val t = v(i)
+      val n1 = nextIdx(v, i)
+      val n2 = if (n1 < v.length) nextIdx(v, n1) else v.length
+      if (t.kind == 4 && attached.containsKey(t.word) &&
+          n1 < v.length && v(n1).is(".") && n2 < v.length && v(n2).kind == 4) {
+        b += Tok(4, s"${t.word}__${v(n2).word}")
+        i = n2 + 1
+      } else { b += t; i += 1 }
+    }
+    b.result()
   }
 
   /** Loud refusals for the DuckDB grammar tail this translator does not
@@ -2429,15 +2377,21 @@ object DuckDialect {
 
   // --------------------------------------------------------------- public
 
-  /** DuckDB SQL → Spark SQL. Deterministic, token-level, literal-safe. */
-  def translate(duckSql: String): String = {
+  /** DuckDB SQL → Spark SQL. Deterministic, token-level, literal-safe.
+    * Applies no macros and no ATTACH aliases: those are a session's, see
+    * the two-argument form. */
+  def translate(duckSql: String): String = translate(duckSql, None)
+
+  /** [[translate]] with `session`'s macros inlined and its ATTACH aliases
+    * resolved. */
+  def translate(duckSql: String, session: Option[SessionSql]): String = {
     // Statement-head UNPIVOT is a pure text rewrite (explicit ON list, no
     // schema discovery) — route it here so the session fallback parser
     // rescues it like any other parse-level dialect; PIVOT/SUMMARIZE/
     // DESCRIBE stay session-only in [[run]] (their expansion needs the
     // source schema).
     if (tokenize(duckSql).find(!_.isWs).exists(_.word == "unpivot"))
-      return UnpivotStatement.spell(duckSql)
+      return UnpivotStatement.spell(duckSql, session)
     // COLUMNS(*) / COLUMNS('regex') star expansion is schema-bound; when
     // an ACTIVE session can resolve the statement's table (temp view /
     // catalog table), expand here so `translate` alone behaves like the
@@ -2454,12 +2408,12 @@ object DuckDialect {
       val expanded = org.apache.spark.sql.SparkSession.getActiveSession
         .flatMap(s => ColumnsStar.maybeExpandSession(s, duckSql))
       expanded match {
-        case Some(e) => return translate(e)
+        case Some(e) => return translate(e, session)
         case None => ()
       }
     }
     var toks = toks0
-    toks = rewriteMacros(toks)
+    session.foreach(st => toks = rewriteMacros(toks, st.macros))
     toks = rewriteFromFirst(toks)
     toks = rewriteUnnestZip(toks)
     toks = rewriteUsingSample(toks)
@@ -2480,9 +2434,13 @@ object DuckDialect {
     toks = rewriteAsof(toks)
     toks = rewriteBlocks(toks)
     toks = rewriteQuotedIdents(toks)
-    toks = rewriteAttachedRefs(toks)
+    session.foreach(st => toks = rewriteAttachedRefs(toks, st.attached))
     renderFinal(toks)
   }
+
+  /** [[translate]] with the state of `spark`'s session. */
+  private[sql] def translateIn(spark: SparkSession, duckSql: String): String =
+    translate(duckSql, Some(SessionSql.of(spark)))
 
   /** A trailing depth-0 `LIMIT <n> PERCENT` / `LIMIT <n>%` clause →
     * (statement without the clause, percent). Execution needs a count —
@@ -2516,10 +2474,10 @@ object DuckDialect {
     else if (head == "pivot") PivotStatement.run(spark, dir, duckSql)
     else if (head == "unpivot") UnpivotStatement.run(spark, dir, duckSql)
     else if (head == "execute")
-      // EXECUTE name(args) — bind the stored PREPARE text (DuckDml holds
-      // the registry; PREPARE itself is a DuckDml.exec statement) and run
-      // the bound SQL through the normal translation path
-      run(spark, dir, DuckDml.resolveExecute(duckSql).get)
+      // EXECUTE name(args) — bind the session's stored PREPARE text
+      // (PREPARE itself is a DuckDml.exec statement) and run the bound
+      // SQL through the normal translation path
+      run(spark, dir, DuckDml.resolveExecute(SessionSql.of(spark), duckSql).get)
     // schema-aware ASOF scale rewrite: the canonical single-join shape
     // reroutes through Joins.asofJoin (union+window — one shuffle, no
     // domain product); anything else falls through to the faithful
@@ -2534,13 +2492,13 @@ object DuckDialect {
       case Some(expanded) => run(spark, dir, expanded)
       case None => splitLimitPercent(duckSql) match {
       case Some((inner, pct)) =>
-        val df = Tables.sql(spark, dir, translate(inner))
+        val df = Tables.sql(spark, dir, translateIn(spark, inner))
         // the reference truncates the DOUBLE percent*count
         // (`physical_limit_percent.cpp:119`); limit is Int-typed in Spark
         val k = math.min(math.max((pct / 100.0 * df.count()).toLong, 0L),
           Int.MaxValue.toLong).toInt
         df.limit(k)
-      case None => Tables.sql(spark, dir, translate(duckSql))
+      case None => Tables.sql(spark, dir, translateIn(spark, duckSql))
       }
     }
     }

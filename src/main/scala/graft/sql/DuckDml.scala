@@ -23,84 +23,56 @@ import DuckDialect.{GraftSqlException, Tok, tokenize}
   * statements, duplicate SET targets, CREATE over an existing table —
   * throws `GraftSqlException`, never a raw parser/index error. The
   * DataFrame API (`GraftTable.merge`) covers MERGE.
+  *
+  * PREPARE (reference `src/main/client_context.cpp:520-560`
+  * PendingStatementOrPreparedStatement / `EXECUTE` routing): DuckDB
+  * binds at PREPARE time; here the session's [[SessionSql]] stores the
+  * RAW statement text and binds it at EXECUTE time — translation sees
+  * the substituted literals, so dialect rewrites (which may depend on
+  * literal-ness, e.g. strftime) behave exactly as if the user had pasted
+  * the bound SQL.
+  *
+  * TRANSACTION surface (reference: DuckDB's BEGIN/COMMIT/ROLLBACK over
+  * its MVCC; `src/transaction/`): the versioned manifest table IS the
+  * undo log. BEGIN opens a transaction on the session; the first
+  * mutation of each table inside it records that table's
+  * pre-transaction version; ROLLBACK restores every touched table to
+  * its recorded version via [[graft.sources.GraftTable.restore]] (a
+  * metadata-only commit — no data movement); COMMIT simply forgets the
+  * recorded versions (statements apply eagerly, so reads inside the
+  * transaction see its own writes). Scope: DML only
+  * (INSERT/DELETE/UPDATE); transactional DDL, VACUUM, and CHECKPOINT
+  * inside a transaction are refused loudly (file reclamation is not
+  * restorable). Two sessions writing the SAME table are not isolated
+  * from each other: a ROLLBACK restores the table's recorded version
+  * whatever another session wrote since.
   */
 object DuckDml {
 
   private def words(toks: Vector[Tok]): Vector[Tok] = toks.filterNot(_.isWs)
 
-  /** PREPARE registry (reference `src/main/client_context.cpp:520-560`
-    * PendingStatementOrPreparedStatement / `EXECUTE` routing): DuckDB
-    * binds at PREPARE time; here the RAW statement text is stored and
-    * bound at EXECUTE time — translation sees the substituted literals,
-    * so dialect rewrites (which may depend on literal-ness, e.g.
-    * strftime) behave exactly as if the user had pasted the bound SQL.
-    * Same process-global contract as DuckDialect.sqlMacros (documented
-    * there): scope bounded uses with [[withPreparedScope]]. */
-  private val preparedStmts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def clearPrepared(): Unit = preparedStmts.clear()
-
-  /** Snapshot/restore the PREPARE registry around `f`. */
-  def withPreparedScope[T](f: => T): T = {
-    val snap = new java.util.HashMap[String, String](preparedStmts)
-    try f
-    finally { preparedStmts.clear(); preparedStmts.putAll(snap) }
-  }
-
-  /** TRANSACTION surface (reference: DuckDB's BEGIN/COMMIT/ROLLBACK over
-    * its MVCC; `src/transaction/`): the versioned manifest table IS the
-    * undo log. BEGIN opens a transaction; the first mutation of each
-    * table inside it records that table's pre-transaction version;
-    * ROLLBACK restores every touched table to its recorded version via
-    * [[graft.sources.GraftTable.restore]] (a metadata-only commit — no
-    * data movement); COMMIT simply forgets the recorded versions
-    * (statements apply eagerly, so reads inside the transaction see its
-    * own writes — read-committed within one driver). Scope: DML only
-    * (INSERT/DELETE/UPDATE); transactional DDL, VACUUM, and CHECKPOINT
-    * inside a transaction are refused loudly (file reclamation is not
-    * restorable). Same process-global contract as the PREPARE registry:
-    * bound uses via [[withTxnScope]]. */
-  private var txnVersions: Option[scala.collection.mutable.Map[String, Int]] = None
-
-  private def txnTouch(root: String): Unit = synchronized {
-    txnVersions.foreach { m =>
-      if (!m.contains(root))
-        m(root) = graft.sources.GraftTable.currentVersion(root)
-    }
-  }
-
-  private def txnRefuse(what: String): Unit = synchronized {
-    if (txnVersions.isDefined)
-      throw new GraftSqlException(
-        s"$what inside a transaction is not supported — COMMIT or ROLLBACK first")
-  }
-
-  /** ROLL BACK any transaction still open after `f` (test hygiene AND
-    * abort semantics — an exception between BEGIN and COMMIT must not
+  /** ROLL BACK any transaction of `spark`'s session still open after `f`
+    * (abort semantics — an exception between BEGIN and COMMIT must not
     * leave eagerly-applied uncommitted writes in place, so scope exit
     * with a dangling transaction restores every touched table to its
     * recorded pre-transaction version, exactly like an explicit
     * ROLLBACK). */
-  def withTxnScope[T](f: => T): T =
+  def withTxnScope[T](spark: SparkSession)(f: => T): T =
     try f
-    finally synchronized {
+    finally SessionSql.of(spark).end().foreach(_.foreach { case (r, v) =>
       // Each restore is individually guarded: a failing restore (e.g. a
       // missing version file) thrown from this finally-block would MASK
       // the original exception from f — the root cause the caller needs
       // (r16 advice). Log and keep rolling the remaining tables back.
-      txnVersions.foreach(_.foreach { case (r, v) =>
-        try graft.sources.GraftTable.restore(r, v)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"[graft] txn-scope rollback of $r to version $v FAILED " +
-                s"(${e.getClass.getSimpleName}: ${e.getMessage}) — " +
-                "continuing so the original exception propagates")
-        }
-      })
-      txnVersions = None
-    }
+      try graft.sources.GraftTable.restore(r, v)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[graft] txn-scope rollback of $r to version $v FAILED " +
+              s"(${e.getClass.getSimpleName}: ${e.getMessage}) — " +
+              "continuing so the original exception propagates")
+      }
+    })
 
   /** Bind an EXECUTE argument list into a prepared statement's text:
     * `$n` positional slots take the nth argument, bare `?` slots bind in
@@ -156,17 +128,18 @@ object DuckDml {
     out.toString
   }
 
-  /** Resolve `EXECUTE name(args…)` to the bound statement text, or None
-    * if `sql` is not an EXECUTE. Shared by the query face
-    * (`DuckDialect.run`) and the DML face ([[exec]]). */
-  private[sql] def resolveExecute(sql: String): Option[String] = {
+  /** Resolve `EXECUTE name(args…)` against the session's prepared
+    * statements to the bound statement text, or None if `sql` is not an
+    * EXECUTE. Shared by the query face (`DuckDialect.run`) and the DML
+    * face ([[exec]]). */
+  private[sql] def resolveExecute(st: SessionSql, sql: String): Option[String] = {
     val toks = words(tokenize(sql.stripSuffix(";")))
     if (toks.isEmpty || toks(0).word != "execute") return None
     if (toks.length < 2 || (toks(1).kind != 4 && toks(1).kind != 3))
       throw new GraftSqlException("EXECUTE needs a prepared-statement name")
     val name = (if (toks(1).kind == 3)
       toks(1).text.substring(1, toks(1).text.length - 1) else toks(1).text).toLowerCase
-    val text = preparedStmts.get(name)
+    val text = st.prepared.get(name)
     if (text == null)
       throw new GraftSqlException(
         s"no prepared statement named '$name' — PREPARE it first")
@@ -288,7 +261,7 @@ object DuckDml {
     if (retList == "*") affected
     else affected.selectExpr(
       splitTop(tokenize(retList), ",").map(item =>
-        DuckDialect.translate(item.map(_.text).mkString)): _*)
+        DuckDialect.translateIn(spark, item.map(_.text).mkString)): _*)
   }
 
   /** Strip surrounding double-quote / backtick from an identifier token's
@@ -299,6 +272,7 @@ object DuckDml {
 
   /** Execute one DML statement; returns the table root it mutated. */
   def exec(spark: SparkSession, tables: Map[String, String], sql: String): String = {
+    val st = SessionSql.of(spark)
     // a RETURNING statement reaching the row-less face would otherwise
     // surface as an opaque predicate/source parse failure — route loudly
     val headWord = tokenize(sql).find(!_.isWs).map(_.word).getOrElse("")
@@ -340,7 +314,7 @@ object DuckDml {
       throw new GraftSqlException("statement ended unexpectedly") // unreachable
     }
     def sourceQuery(fromTok: Int): DataFrame = {
-      val src = DuckDialect.translate(rest(fromTok))
+      val src = DuckDialect.translateIn(spark, rest(fromTok))
       tables.get("__dir") match {
         case Some(dir) => graft.Tables.sql(spark, dir, src)
         case None => spark.sql(src)
@@ -349,25 +323,25 @@ object DuckDml {
     w(0) match {
       case "prepare" =>
         // PREPARE name AS <statement> — stores the RAW text; binding and
-        // dialect translation happen at EXECUTE (see preparedStmts)
+        // dialect translation happen at EXECUTE
         val name = identText(tok(1)).toLowerCase
         if (w(2) != "as")
           throw new GraftSqlException("PREPARE name AS <statement>")
-        preparedStmts.put(name, rest(3))
+        st.prepared.put(name, rest(3))
         s"prepared $name (${"$"}n/? slots bind at EXECUTE)"
       case "deallocate" =>
         val name = identText(tok(if (w(1) == "prepare") 2 else 1)).toLowerCase
-        if (preparedStmts.remove(name) == null)
+        if (st.prepared.remove(name) == null)
           throw new GraftSqlException(s"no prepared statement named '$name'")
         s"deallocated $name"
       case "execute" =>
         // EXECUTE of a prepared DML statement — the query face is
         // DuckDialect.run, which resolves EXECUTE for SELECTs
-        exec(spark, tables, resolveExecute(sql).get)
+        exec(spark, tables, resolveExecute(st, sql).get)
       case "create" =>
         // CREATE [OR REPLACE] MACRO name(params) AS body → registered as
-        // a SQL-text macro, inlined by DuckDialect.translate at every
-        // call site (reference `create_macro_info.hpp`; DuckDB macros
+        // a SQL-text macro of the session, inlined by DuckDialect.translate
+        // at every call site (reference `create_macro_info.hpp`; DuckDB macros
         // inline at bind time — textual inlining is the faithful twin,
         // and the expansion stays inside whole-stage codegen)
         val macroAt =
@@ -389,7 +363,7 @@ object DuckDml {
           }
           if (w(i + 1) != "as")
             throw new GraftSqlException("CREATE MACRO name(params) AS <expression>")
-          graft.sql.DuckDialect.registerSqlMacro(name, params.result(), rest(i + 2))
+          st.registerMacro(name, params.result(), rest(i + 2))
           return s"macro $name registered (${params.result().length} params, inlined at call sites)"
         }
         // CREATE TABLE <name> AS <query> — materializes version 1 at the
@@ -407,7 +381,7 @@ object DuckDml {
           throw new GraftSqlException(
             s"table '${tok(2).text}' already exists at $r — DROP it (remove the root) first; " +
               "CREATE OR REPLACE is not supported")
-        txnRefuse("CREATE TABLE")
+        st.refuseInTxn("CREATE TABLE")
         GraftTable.create(spark, r, sourceQuery(4))
         r
       case "insert" =>
@@ -420,7 +394,7 @@ object DuckDml {
               "GraftTable.merge with explicit key columns")
         if (w(1) != "into") throw new GraftSqlException("INSERT must be INSERT INTO")
         val r = root(tok(2))
-        txnTouch(r)
+        st.touch(r)
         // ON CONFLICT (reference `physical_insert.cpp` DO NOTHING /
         // DO UPDATE): the conflict clause is parsed AFTER the source
         // query span is bounded, below
@@ -446,7 +420,7 @@ object DuckDml {
         val df0 =
           if (conflictIdx < 0) sourceQuery(i)
           else {
-            val srcSql = DuckDialect.translate(
+            val srcSql = DuckDialect.translateIn(spark, 
               toks.slice(i, conflictIdx).map(_.text).mkString(" "))
             tables.get("__dir") match {
               case Some(dir) => graft.Tables.sql(spark, dir, srcSql)
@@ -552,12 +526,12 @@ object DuckDml {
         val r = root(tok(2))
         if (w(3) != "where")
           throw new GraftSqlException("DELETE without WHERE is refused; use WHERE true to empty a table")
-        txnTouch(r)
-        GraftTable.delete(spark, r, expr(DuckDialect.translate(rest(4))))
+        st.touch(r)
+        GraftTable.delete(spark, r, expr(DuckDialect.translateIn(spark, rest(4))))
         r
       case "update" =>
         val r = root(tok(1))
-        txnTouch(r)
+        st.touch(r)
         if (w(2) != "set") throw new GraftSqlException("UPDATE must be UPDATE <table> SET")
         // assignments: depth-0 comma-separated `col = expr`, up to WHERE
         val setAt = indexOfWord(full, "set")
@@ -585,7 +559,7 @@ object DuckDml {
           val target = canon.getOrElse(colName.toLowerCase,
             throw new GraftSqlException(
               s"unknown column '$colName' in UPDATE SET (table has ${schema.fieldNames.mkString(", ")})"))
-          target -> expr(DuckDialect.translate(
+          target -> expr(DuckDialect.translateIn(spark, 
             item.drop(eq + 1).map(_.text).mkString))
         }
         // duplicate targets would silently last-win through toMap; DuckDB
@@ -596,7 +570,7 @@ object DuckDml {
           s"multiple assignments to column '$c' in UPDATE SET"))
         val pred =
           if (whereAt < 0) expr("true")
-          else expr(DuckDialect.translate(
+          else expr(DuckDialect.translateIn(spark, 
             full.drop(whereAt + 1).map(_.text).mkString))
         GraftTable.update(spark, r, pred, assigns.toMap)
         r
@@ -607,7 +581,7 @@ object DuckDml {
       // manifest-table analogs of the reference's storage maintenance
       // (CHECKPOINT also drops the rows deletion vectors mark).
       case "vacuum" =>
-        txnRefuse("VACUUM")
+        st.refuseInTxn("VACUUM")
         val r = root(tok(1))
         val keep =
           if (w(2) == "keep") {
@@ -623,7 +597,7 @@ object DuckDml {
         val removed = graft.sources.GraftTable.vacuum(r, keep)
         s"vacuum: removed $removed data files, kept $keep version(s)"
       case "checkpoint" =>
-        txnRefuse("CHECKPOINT")
+        st.refuseInTxn("CHECKPOINT")
         val r = root(tok(1))
         val targetMb =
           if (toks.length > 2) {
@@ -638,8 +612,8 @@ object DuckDml {
         // ATTACH '<dir>' AS <alias> (reference `ATTACH 'file.db' AS
         // name`): a directory of fixture parquet IS a catalog here —
         // registers one `<alias>__<table>` temp view per table present
-        // and the alias for DuckDialect's qualified-ref rewrite, so
-        // pasted `alias.table` SQL resolves cross-catalog.
+        // and the session's alias for DuckDialect's qualified-ref
+        // rewrite, so pasted `alias.table` SQL resolves cross-catalog.
         val p = tok(1)
         if (p.kind != 2)
           throw new GraftSqlException("ATTACH needs a quoted directory path")
@@ -647,7 +621,7 @@ object DuckDml {
         if (w(2) != "as")
           throw new GraftSqlException("ATTACH '<dir>' AS <alias>")
         val alias = identText(tok(3)).toLowerCase
-        if (DuckDialect.attachmentDir(alias).isDefined)
+        if (st.attached.containsKey(alias))
           throw new GraftSqlException(s"catalog '$alias' is already attached")
         val found = graft.Tables.names.filter(n =>
           java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/$n.parquet")))
@@ -655,24 +629,21 @@ object DuckDml {
           throw new GraftSqlException(s"no fixture tables found under $dir")
         found.foreach(n =>
           graft.Tables.t(spark, dir, n).createOrReplaceTempView(s"${alias}__$n"))
-        DuckDialect.registerAttachment(alias, dir)
+        st.attached.put(alias, dir)
         s"attached $dir AS $alias (${found.length} tables)"
       case "detach" =>
         val alias = identText(tok(1)).toLowerCase
-        DuckDialect.removeAttachment(alias) match {
-          case Some(_) =>
-            graft.Tables.names.foreach(n =>
-              spark.catalog.dropTempView(s"${alias}__$n"))
-            s"detached $alias"
-          case None =>
-            throw new GraftSqlException(s"no attached catalog named '$alias'")
-        }
+        if (st.attached.remove(alias) == null)
+          throw new GraftSqlException(s"no attached catalog named '$alias'")
+        graft.Tables.names.foreach(n =>
+          spark.catalog.dropTempView(s"${alias}__$n"))
+        s"detached $alias"
       case "export" =>
         // EXPORT DATABASE '<outdir>' (reference `EXPORT DATABASE`):
         // every fixture table of the session dir → parquet under
         // <outdir> plus a load.sql of view definitions — the re-import
         // script DuckDB's EXPORT also writes.
-        txnRefuse("EXPORT DATABASE")
+        st.refuseInTxn("EXPORT DATABASE")
         if (w(1) != "database")
           throw new GraftSqlException("EXPORT must be EXPORT DATABASE '<dir>'")
         val o = tok(2)
@@ -695,27 +666,17 @@ object DuckDml {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/load.sql"), load)
         s"exported ${exported.length} tables to $outDir"
-      case "begin" | "start" => synchronized {
+      case "begin" | "start" =>
         // BEGIN [TRANSACTION|WORK] / START TRANSACTION
-        if (txnVersions.isDefined)
-          throw new GraftSqlException("a transaction is already active")
-        txnVersions = Some(scala.collection.mutable.Map.empty)
+        st.begin()
         "BEGIN"
-      }
-      case "commit" | "end" => synchronized {
-        if (txnVersions.isEmpty)
-          throw new GraftSqlException("no transaction is active")
-        val n = txnVersions.get.size
-        txnVersions = None
-        s"COMMIT ($n table(s))"
-      }
-      case "rollback" | "abort" => synchronized {
-        val m = txnVersions.getOrElse(
-          throw new GraftSqlException("no transaction is active"))
+      case "commit" | "end" =>
+        val m = st.end().getOrElse(throw new GraftSqlException("no transaction is active"))
+        s"COMMIT (${m.size} table(s))"
+      case "rollback" | "abort" =>
+        val m = st.end().getOrElse(throw new GraftSqlException("no transaction is active"))
         m.foreach { case (r, v) => graft.sources.GraftTable.restore(r, v) }
-        txnVersions = None
         s"ROLLBACK (${m.size} table(s) restored)"
-      }
       case other =>
         throw new GraftSqlException(
           s"unsupported DML statement '$other' — supported: INSERT INTO, DELETE FROM, " +

@@ -1,5 +1,6 @@
 package graft.sql
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
@@ -35,14 +36,19 @@ import scala.util.control.NonFatal
   * fractional `//` (never reaches here when `/` parses) and
   * fractional→int cast rounding. Users pasting DuckDB verbatim should
   * go through `DuckDialect.run`/`translate`, which guards all of these.
+  *
+  * The translation applies `session`'s macros and ATTACH aliases
+  * ([[SessionSql]]), so `spark.sql` sees exactly what `DuckDialect.run`
+  * on the same session sees.
   */
-class DuckFallbackParser(delegate: ParserInterface) extends ParserInterface {
+class DuckFallbackParser(session: SparkSession, delegate: ParserInterface)
+    extends ParserInterface {
 
   private def withFallback(sqlText: String, f: String => LogicalPlan): LogicalPlan =
     try f(sqlText) catch {
       case pe: ParseException =>
         val translated =
-          try DuckDialect.translate(sqlText)
+          try DuckDialect.translate(sqlText, Some(SessionSql.of(session)))
           catch { case NonFatal(_) => throw pe }
         if (translated == sqlText) throw pe
         try f(translated) catch { case NonFatal(_) => throw pe }

@@ -651,22 +651,20 @@ object DuckSqlQueries {
     "ducksql_qualify_alias" -> via(qualifyAliasSql),
     "ducksql_qualify_distinct" -> via(qualifyDistinctSql),
     "ducksql_describe" -> via("DESCRIBE events"),
-    "ducksql_macro_stmt" -> ((s, dir) => DuckDialect.withMacroScope {
-      // scoped: the 'taxed' registration must not leak into every later
-      // translate() in this JVM (see the sqlMacros global-state contract)
+    "ducksql_macro_stmt" -> ((s, dir) => {
       DuckDml.exec(s, Map.empty, macroStmtCreate)
       DuckDialect.run(s, dir, macroStmtSql)
     }),
-    "ducksql_prepare_stmt" -> ((s, dir) => DuckDml.withPreparedScope {
+    "ducksql_prepare_stmt" -> ((s, dir) => {
       DuckDml.exec(s, Map.empty, prepareStmtCreate)
       DuckDialect.run(s, dir, prepareStmtExec)
     }),
-    "ducksql_attach" -> ((s, dir) => DuckDialect.withAttachScope {
-      // translation happens NOW (eager), so the scope can restore the
-      // alias registry after the plan is built; the views persist for
-      // the lazy execution and are harmlessly session-local
+    "ducksql_attach" -> ((s, dir) => {
+      // run() analyzes eagerly, so the plan keeps the views after DETACH,
+      // and the entry can run again on the same session
       DuckDml.exec(s, Map.empty, s"ATTACH '$dir' AS aux")
-      DuckDialect.run(s, dir, attachQuerySql)
+      try DuckDialect.run(s, dir, attachQuerySql)
+      finally DuckDml.exec(s, Map.empty, "DETACH aux")
     }),
     "ducksql_export" -> ((s, dir) => {
       val out = java.nio.file.Files.createTempDirectory("graft_export_").toString

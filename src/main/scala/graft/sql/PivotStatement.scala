@@ -98,7 +98,7 @@ object PivotStatement {
         Some(gs.result())
       } else if (i < nw.length) refuse(s"unexpected trailing tokens: ${nw(i).text}")
       else None
-    val src = Tables.sql(spark, dir, DuckDialect.translate(srcSql))
+    val src = Tables.sql(spark, dir, DuckDialect.translateIn(spark, srcSql))
     // implicit grouping (DuckDB default): every column not referenced in
     // ON or USING — detected by scanning the aggregate's identifiers.
     // Function-call NAMES (identifier followed by '(') are NOT column
@@ -118,7 +118,7 @@ object PivotStatement {
       refuse("no grouping columns remain — every column is consumed by ON/USING")
     val pivoted = src.groupBy(groups.map(col): _*)
       .pivot(pivotCol)
-      .agg(expr(DuckDialect.translate(aggSql)))
+      .agg(expr(DuckDialect.translateIn(spark, aggSql)))
     // DuckDB's pivot yields 0 (not NULL) for absent combinations of a
     // count aggregate; Spark leaves NULL — align the cells
     if (aggSql.toLowerCase.matches("""count\s*\(.*"""))

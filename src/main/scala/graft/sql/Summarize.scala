@@ -46,7 +46,7 @@ object Summarize {
           headWord == "values" || rest.startsWith("("))
         rest
       else s"SELECT * FROM $rest"
-    summarize(Tables.sql(spark, dir, DuckDialect.translate(inner)))
+    summarize(Tables.sql(spark, dir, DuckDialect.translateIn(spark, inner)))
   }
 
   /** Spark type → the DuckDB type name SUMMARIZE would print. */

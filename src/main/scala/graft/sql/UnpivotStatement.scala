@@ -29,12 +29,13 @@ import DuckDialect.{GraftSqlException, Tok}
 object UnpivotStatement {
 
   def run(spark: SparkSession, dir: String, stmt: String): DataFrame =
-    Tables.sql(spark, dir, spell(stmt))
+    Tables.sql(spark, dir, spell(stmt, Some(SessionSql.of(spark))))
 
   /** The schema-free text rewrite alone — also the path
     * `DuckDialect.translate` (hence the session fallback parser) takes
-    * for statement-head UNPIVOT, which needs no session at all. */
-  def spell(stmt: String): String = {
+    * for statement-head UNPIVOT, which needs no session beyond the
+    * source query's macros and aliases. */
+  def spell(stmt: String, session: Option[SessionSql]): String = {
     val toks = DuckDialect.tokenize(stmt).filterNot(t => t.kind == 1)
     def refuse(msg: String): Nothing = throw new GraftSqlException(
       s"UNPIVOT: $msg — or use Dataset.unpivot(ids, values, variableColumnName, valueColumnName)")
@@ -96,7 +97,7 @@ object UnpivotStatement {
       refuse("multi-column VALUE lists are unsupported (per-row column " +
         "stacking has no Spark UNPIVOT equivalent)")
     if (i < nw.length) refuse(s"unexpected trailing tokens: ${nw(i).text}")
-    s"""SELECT * FROM (${DuckDialect.translate(srcSql)}) graft_unpivot_src
+    s"""SELECT * FROM (${DuckDialect.translate(srcSql, session)}) graft_unpivot_src
        |UNPIVOT (`$valueCol` FOR `$nameCol` IN (${onCols.map(c => s"`$c`").mkString(", ")}))""".stripMargin
   }
 }

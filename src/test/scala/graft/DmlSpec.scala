@@ -123,6 +123,7 @@ class DmlSpec extends SparkSpec {
     val root = freshRoot()
     GraftTable.create(spark, root, spark.range(5).toDF("id"))
     GraftTable.delete(spark, root, lit(true))
+    assert(manifestFiles(root, 2).isEmpty, "a file with every row deleted leaves the manifest")
     val empty = GraftTable.read(spark, root)
     assert(empty.count() === 0)
     assert(empty.schema.fieldNames.toSeq === Seq("id"))
@@ -254,7 +255,7 @@ class DmlSpec extends SparkSpec {
     val cat = Map("na" -> rootA, "re" -> rootB)
     val (a0, b0) = (GraftTable.read(spark, rootA).count(),
       GraftTable.read(spark, rootB).count())
-    DuckDml.withTxnScope {
+    DuckDml.withTxnScope(spark) {
       DuckDml.exec(spark, cat, "BEGIN")
       DuckDml.exec(spark, cat, "DELETE FROM na WHERE n_nationkey >= 0")
       DuckDml.exec(spark, cat, "DELETE FROM re WHERE r_regionkey >= 3")
@@ -264,7 +265,7 @@ class DmlSpec extends SparkSpec {
     }
     assert(GraftTable.read(spark, rootA).count() === a0, "table A restored")
     assert(GraftTable.read(spark, rootB).count() === b0, "table B restored")
-    DuckDml.withTxnScope {
+    DuckDml.withTxnScope(spark) {
       DuckDml.exec(spark, cat, "BEGIN TRANSACTION")
       DuckDml.exec(spark, cat, "DELETE FROM re WHERE r_regionkey = 0")
       DuckDml.exec(spark, cat, "COMMIT")
@@ -278,7 +279,7 @@ class DmlSpec extends SparkSpec {
     val root = freshRoot()
     GraftTable.create(spark, root, Tables.t(spark, sf(), "region"))
     val cat = Map("re" -> root)
-    DuckDml.withTxnScope {
+    DuckDml.withTxnScope(spark) {
       assert(intercept[GraftSqlException] {
         DuckDml.exec(spark, cat, "COMMIT")
       }.getMessage.contains("no transaction is active"))
@@ -297,7 +298,7 @@ class DmlSpec extends SparkSpec {
       }.getMessage.contains("inside a transaction"))
     }
     // withTxnScope aborted the dangling transaction — a fresh one opens
-    DuckDml.withTxnScope {
+    DuckDml.withTxnScope(spark) {
       assert(DuckDml.exec(spark, cat, "BEGIN") === "BEGIN")
       DuckDml.exec(spark, cat, "COMMIT")
     }
@@ -312,7 +313,7 @@ class DmlSpec extends SparkSpec {
     val cat = Map("re" -> root)
     val n0 = GraftTable.read(spark, root).count()
     intercept[RuntimeException] {
-      DuckDml.withTxnScope {
+      DuckDml.withTxnScope(spark) {
         DuckDml.exec(spark, cat, "BEGIN")
         DuckDml.exec(spark, cat, "DELETE FROM re WHERE r_regionkey >= 0")
         assert(GraftTable.read(spark, root).count() === 0) // eager apply
@@ -322,7 +323,7 @@ class DmlSpec extends SparkSpec {
     assert(GraftTable.read(spark, root).count() === n0,
       "uncommitted DELETE rolled back by scope exit")
     // and the registry is clean: a new transaction opens normally
-    DuckDml.withTxnScope {
+    DuckDml.withTxnScope(spark) {
       assert(DuckDml.exec(spark, cat, "BEGIN") === "BEGIN")
       DuckDml.exec(spark, cat, "COMMIT")
     }
@@ -340,7 +341,7 @@ class DmlSpec extends SparkSpec {
     GraftTable.create(spark, root, Tables.t(spark, sf(), "nation"))
     val cat = Map("na" -> root)
     val before = GraftTable.read(spark, root).collect().map(_.toString).sorted
-    DuckDml.withTxnScope {
+    DuckDml.withTxnScope(spark) {
       DuckDml.exec(spark, cat, "BEGIN")
       DuckDml.exec(spark, cat,
         "UPDATE na SET n_name = 'REDACTED' WHERE n_regionkey = 0")

@@ -125,6 +125,29 @@ class DeletionVectorSpec extends SparkSpec {
     assert(delta(4, 4).isEmpty)
   }
 
+  test("a file whose every row is deleted leaves the manifest; changes, time travel and restore stay exact") {
+    val root = table(20L, 2) // files hold 0..9 and 10..19
+    val Seq(first, second) = manifestLines(root, 1).map(path)
+    assert(manifestLines(root, 1).forall(_.contains("\t#rows=10")))
+    GraftTable.delete(spark, root, col("id") < 5L) // v2
+    GraftTable.delete(spark, root, col("id") === 12L) // v3
+    GraftTable.delete(spark, root, col("id") < 10L) // v4: the rest of the first file
+    assert(manifestLines(root, 3).map(path) === Seq(first, second))
+    assert(manifestLines(root, 4).map(path) === Seq(second))
+    assert(dvs(root, 4) === Map(second -> Set(2)))
+    assert(ids(GraftTable.read(spark, root)) === (10L until 20L).filterNot(_ == 12L))
+    assert(ids(GraftTable.read(spark, root, Some(3))) === (5L until 20L).filterNot(_ == 12L))
+    def delta(a: Int, b: Int): Set[(Long, Long, String)] =
+      GraftTable.changes(spark, root, a, b).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(delta(3, 4) === (5L until 10L).map(i => (i, i * 3, "delete")).toSet)
+    assert(delta(4, 3) === (5L until 10L).map(i => (i, i * 3, "insert")).toSet)
+    assert(delta(1, 4) === ((0L until 10L) :+ 12L).map(i => (i, i * 3, "delete")).toSet)
+    assert(GraftTable.restore(root, 2) === 5)
+    assert(manifestLines(root, 5) === manifestLines(root, 2))
+    assert(ids(GraftTable.read(spark, root)) === (5L until 20L))
+  }
+
   test("compact folds deletion vectors, a single file's included") {
     // one file: below target but alone, it is rewritten for its vector
     val root = table(100L, 1)

@@ -220,18 +220,18 @@ class StatsPruneSpec extends SparkSpec {
   // ------------------------------------------ footer stats vs. a rescan
 
   /** The per-file aggregate the stats used to come from: min/max of every
-    * eligible column per file, encoded as the manifest encodes them. The
-    * oracle for the footer-derived lines. */
+    * eligible column per file, encoded as the manifest encodes them, and
+    * the file's row count. The oracle for the footer-derived lines. */
   private def scannedLines(root: String): Seq[String] = {
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     val schema = GraftTable.schemaOf(root)
     val files = manifestLines(root, 1).map(_.takeWhile(_ != '\t'))
     val cols = schema.fields.toSeq.filter(f => GraftTable.statEligible(f.dataType))
-    val aggs = cols.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
+    val aggs = cols.flatMap(f => Seq(min(col(f.name)), max(col(f.name)))) :+ count(lit(1))
     val rows = spark.read.schema(schema).parquet(files.map(f => s"$root/$f"): _*)
       .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect()
     files.map { p =>
-      rows.find(_.getString(0).endsWith(p)).fold(p) { r =>
+      rows.find(_.getString(0).endsWith(p)).fold(s"$p\t#rows=0") { r =>
         val fields = cols.zipWithIndex.flatMap { case (f, ix) =>
           (GraftTable.encodeExternal(r.get(1 + ix * 2)),
            GraftTable.encodeExternal(r.get(2 + ix * 2))) match {
@@ -241,7 +241,7 @@ class StatsPruneSpec extends SparkSpec {
             case _ => None
           }
         }
-        (p +: fields).mkString("\t")
+        (p +: fields :+ s"#rows=${r.getLong(1 + cols.size * 2)}").mkString("\t")
       }
     }
   }

@@ -559,22 +559,6 @@ class DuckDialectSpec extends AnyFunSuite {
       translate("SELECT strftime(a, b) FROM t"))
   }
 
-  test("withMacroScope restores the registry; clearSqlMacros empties it") {
-    DuckDialect.registerSqlMacro("outer_m", Seq("x"), "(x) + 1")
-    try {
-      DuckDialect.withMacroScope {
-        DuckDialect.registerSqlMacro("inner_m", Seq("y"), "(y) * 2")
-        assert(translate("SELECT inner_m(3) FROM t").contains("* 2"))
-        // shadowing a pre-existing macro inside the scope…
-        DuckDialect.registerSqlMacro("outer_m", Seq("x"), "(x) - 9")
-        assert(translate("SELECT outer_m(3) FROM t").contains("- 9"))
-      }
-      // …is undone on exit: inner gone, outer restored to its original body
-      assert(!translate("SELECT inner_m(3) FROM t").contains("* 2"))
-      assert(translate("SELECT outer_m(3) FROM t").contains("+ 1"))
-    } finally DuckDialect.dropSqlMacro("outer_m")
-  }
-
   test("LIMIT n PERCENT: trailing clause splits for run(); nested refuses") {
     import DuckDialect.splitLimitPercent
     assert(splitLimitPercent("SELECT a FROM t ORDER BY a LIMIT 7 PERCENT")
@@ -590,29 +574,28 @@ class DuckDialectSpec extends AnyFunSuite {
   }
 
   test("SQL macros inline at call sites with precedence-safe parens") {
-    import DuckDialect.{registerSqlMacro, dropSqlMacro}
-    registerSqlMacro("dd_add", Seq("a", "b"), "a + b")
-    registerSqlMacro("dd_twice", Seq("x"), "dd_add(x, x)")
-    registerSqlMacro("dd_loop", Seq("x"), "dd_loop(x)")
-    try {
-      def tight(s: String) = s.replaceAll("\\s+", "")
-      // argument substitution parenthesizes: 1, 2 * 3 must not reassociate
-      assert(tight(translate("SELECT dd_add(1, 2) * 3 FROM t")) ==
-        "SELECT((1)+(2))*3FROMt")
-      // macro-in-macro expands transitively (each layer adds its
-      // precedence parens; harmless and value-identical)
-      assert(tight(translate("SELECT dd_twice(y) FROM t")) ==
-        "SELECT((((y))+((y))))FROMt")
-      // arity mismatch and cycles refuse loudly
-      assert(intercept[GraftSqlException](translate("SELECT dd_add(1) FROM t"))
-        .getMessage.contains("expects 2"))
-      assert(intercept[GraftSqlException](translate("SELECT dd_loop(1) FROM t"))
-        .getMessage.contains("cyclic"))
-      // a bare identifier with a macro's name is untouched
-      assert(norm(translate("SELECT dd_add FROM t")) == "SELECT dd_add FROM t")
-    } finally {
-      dropSqlMacro("dd_add"); dropSqlMacro("dd_twice"); dropSqlMacro("dd_loop")
-    }
+    val st = new SessionSql
+    st.registerMacro("dd_add", Seq("a", "b"), "a + b")
+    st.registerMacro("dd_twice", Seq("x"), "dd_add(x, x)")
+    st.registerMacro("dd_loop", Seq("x"), "dd_loop(x)")
+    def translate(sql: String) = DuckDialect.translate(sql, Some(st))
+    // translation without the session state leaves the call alone
+    assert(DuckDialect.translate("SELECT dd_add(1, 2) FROM t").contains("dd_add(1, 2)"))
+    def tight(s: String) = s.replaceAll("\\s+", "")
+    // argument substitution parenthesizes: 1, 2 * 3 must not reassociate
+    assert(tight(translate("SELECT dd_add(1, 2) * 3 FROM t")) ==
+      "SELECT((1)+(2))*3FROMt")
+    // macro-in-macro expands transitively (each layer adds its
+    // precedence parens; harmless and value-identical)
+    assert(tight(translate("SELECT dd_twice(y) FROM t")) ==
+      "SELECT((((y))+((y))))FROMt")
+    // arity mismatch and cycles refuse loudly
+    assert(intercept[GraftSqlException](translate("SELECT dd_add(1) FROM t"))
+      .getMessage.contains("expects 2"))
+    assert(intercept[GraftSqlException](translate("SELECT dd_loop(1) FROM t"))
+      .getMessage.contains("cyclic"))
+    // a bare identifier with a macro's name is untouched
+    assert(norm(translate("SELECT dd_add FROM t")) == "SELECT dd_add FROM t")
   }
 
   test("FROM-first queries normalize to standard SELECT form") {

@@ -22,48 +22,48 @@ class DuckDmlSpec extends SparkSpec {
     GraftTable.read(spark, root).as[(Long, String, Double)].collect().toSet
 
   test("PREPARE/EXECUTE: $n and ? binding, arity and mixing refusals, DEALLOCATE") {
-    DuckDml.withPreparedScope {
-      // $n positional slots, bound as a SELECT through the query face
-      DuckDml.exec(spark, Map.empty,
-        "PREPARE padd AS SELECT CAST($1 AS INT) + CAST($2 AS INT) AS s")
-      val r = DuckDialect.run(spark, sf(), "EXECUTE padd(40, 2)").head()
-      assert(r.getInt(0) == 42)
-      // the same slot may repeat; arguments can be expressions/literals
-      DuckDml.exec(spark, Map.empty,
-        "PREPARE ptwice AS SELECT CAST($1 AS INT) * CAST($1 AS INT) AS sq")
-      assert(DuckDialect.run(spark, sf(), "EXECUTE ptwice(6)").head().getInt(0) == 36)
-      // ? ordinal style
-      DuckDml.exec(spark, Map.empty,
-        "PREPARE pq AS SELECT CAST(? AS INT) - CAST(? AS INT) AS d")
-      assert(DuckDialect.run(spark, sf(), "EXECUTE pq(50, 8)").head().getInt(0) == 42)
-      // arity refusals, both styles
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE padd(1)"))
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE pq(1)"))
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE pq(1, 2, 3)"))
-      // mixing $n and ? refuses
-      DuckDml.exec(spark, Map.empty, "PREPARE pmix AS SELECT $1 + ? AS x")
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE pmix(1, 2)"))
-      // surplus arguments refuse in $n style too (DuckDB raises a
-      // parameter-count error; round-10 advice — was silently ignored)
-      intercept[GraftSqlException](
-        DuckDialect.run(spark, sf(), "EXECUTE padd(1, 2, 3)"))
-      intercept[GraftSqlException](
-        DuckDialect.run(spark, sf(), "EXECUTE ptwice(1, 2)"))
-      // a malformed slot ($2.5) is a TYPED refusal, not a raw
-      // NumberFormatException (the fail-loudly contract)
-      DuckDml.exec(spark, Map.empty, "PREPARE pbad AS SELECT $2.5 AS x")
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE pbad(1, 2)"))
-      // empty argument spans refuse at EXECUTE-split time: trailing,
-      // doubled, and leading commas each name the malformation
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE padd(1,)"))
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE padd(1,,2)"))
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE padd(,1)"))
-      // unknown name refuses; DEALLOCATE removes
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE nosuch(1)"))
-      DuckDml.exec(spark, Map.empty, "DEALLOCATE padd")
-      intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE padd(1, 2)"))
-    }
-    // the scope restored the registry: nothing prepared leaks out
+    // on a session of its own: its prepared statements stay there
+    val s = spark.newSession()
+    // $n positional slots, bound as a SELECT through the query face
+    DuckDml.exec(s, Map.empty,
+      "PREPARE padd AS SELECT CAST($1 AS INT) + CAST($2 AS INT) AS s")
+    val r = DuckDialect.run(s, sf(), "EXECUTE padd(40, 2)").head()
+    assert(r.getInt(0) == 42)
+    // the same slot may repeat; arguments can be expressions/literals
+    DuckDml.exec(s, Map.empty,
+      "PREPARE ptwice AS SELECT CAST($1 AS INT) * CAST($1 AS INT) AS sq")
+    assert(DuckDialect.run(s, sf(), "EXECUTE ptwice(6)").head().getInt(0) == 36)
+    // ? ordinal style
+    DuckDml.exec(s, Map.empty,
+      "PREPARE pq AS SELECT CAST(? AS INT) - CAST(? AS INT) AS d")
+    assert(DuckDialect.run(s, sf(), "EXECUTE pq(50, 8)").head().getInt(0) == 42)
+    // arity refusals, both styles
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE padd(1)"))
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE pq(1)"))
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE pq(1, 2, 3)"))
+    // mixing $n and ? refuses
+    DuckDml.exec(s, Map.empty, "PREPARE pmix AS SELECT $1 + ? AS x")
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE pmix(1, 2)"))
+    // surplus arguments refuse in $n style too (DuckDB raises a
+    // parameter-count error; these were once silently ignored)
+    intercept[GraftSqlException](
+      DuckDialect.run(s, sf(), "EXECUTE padd(1, 2, 3)"))
+    intercept[GraftSqlException](
+      DuckDialect.run(s, sf(), "EXECUTE ptwice(1, 2)"))
+    // a malformed slot ($2.5) is a TYPED refusal, not a raw
+    // NumberFormatException (the fail-loudly contract)
+    DuckDml.exec(s, Map.empty, "PREPARE pbad AS SELECT $2.5 AS x")
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE pbad(1, 2)"))
+    // empty argument spans refuse at EXECUTE-split time: trailing,
+    // doubled, and leading commas each name the malformation
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE padd(1,)"))
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE padd(1,,2)"))
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE padd(,1)"))
+    // unknown name refuses; DEALLOCATE removes
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE nosuch(1)"))
+    DuckDml.exec(s, Map.empty, "DEALLOCATE padd")
+    intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE padd(1, 2)"))
+    // nothing prepared on `s` is visible to another session
     intercept[GraftSqlException](DuckDialect.run(spark, sf(), "EXECUTE ptwice(3)"))
   }
 
@@ -261,27 +261,27 @@ class DuckDmlSpec extends SparkSpec {
   }
 
   test("ATTACH/DETACH lifecycle: qualified refs resolve, detach unresolves") {
-    DuckDialect.withAttachScope {
-      DuckDml.exec(spark, Map.empty, s"ATTACH '${sf()}' AS aux2")
-      val df = DuckDialect.run(spark, sf(),
-        "SELECT count(*) AS n FROM nation n JOIN aux2.region r ON n.n_regionkey = r.r_regionkey")
-      assert(df.head().getLong(0) === 25)
-      assert(intercept[GraftSqlException](
-        DuckDml.exec(spark, Map.empty, s"ATTACH '${sf()}' AS aux2"))
-        .getMessage.contains("already attached"))
-      DuckDml.exec(spark, Map.empty, "DETACH aux2")
-      // after detach the qualifier no longer rewrites: translation leaves
-      // aux2.region alone and Spark has no such relation
-      intercept[Exception] {
-        DuckDialect.run(spark, sf(), "SELECT count(*) AS n FROM aux2.region").collect()
-      }
-      assert(intercept[GraftSqlException](
-        DuckDml.exec(spark, Map.empty, "DETACH aux2"))
-        .getMessage.contains("no attached catalog"))
-      assert(intercept[GraftSqlException](
-        DuckDml.exec(spark, Map.empty, "ATTACH '/nonexistent/nowhere' AS ghost"))
-        .getMessage.contains("no fixture tables"))
+    // on a session of its own: the alias and its views stay there
+    val s = spark.newSession()
+    DuckDml.exec(s, Map.empty, s"ATTACH '${sf()}' AS aux2")
+    val df = DuckDialect.run(s, sf(),
+      "SELECT count(*) AS n FROM nation n JOIN aux2.region r ON n.n_regionkey = r.r_regionkey")
+    assert(df.head().getLong(0) === 25)
+    assert(intercept[GraftSqlException](
+      DuckDml.exec(s, Map.empty, s"ATTACH '${sf()}' AS aux2"))
+      .getMessage.contains("already attached"))
+    DuckDml.exec(s, Map.empty, "DETACH aux2")
+    // after detach the qualifier no longer rewrites: translation leaves
+    // aux2.region alone and Spark has no such relation
+    intercept[Exception] {
+      DuckDialect.run(s, sf(), "SELECT count(*) AS n FROM aux2.region").collect()
     }
+    assert(intercept[GraftSqlException](
+      DuckDml.exec(s, Map.empty, "DETACH aux2"))
+      .getMessage.contains("no attached catalog"))
+    assert(intercept[GraftSqlException](
+      DuckDml.exec(s, Map.empty, "ATTACH '/nonexistent/nowhere' AS ghost"))
+      .getMessage.contains("no fixture tables"))
   }
 
   test("EXPORT DATABASE writes parquet + load.sql and the rows round-trip") {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.parser.ParseException
 class DuckFallbackParserSpec extends SparkSpec {
 
   private lazy val parser =
-    new DuckFallbackParser(spark.sessionState.sqlParser)
+    new DuckFallbackParser(spark, spark.sessionState.sqlParser)
 
   test("native Spark SQL parses unchanged") {
     parser.parsePlan("SELECT a, count(*) FROM t GROUP BY a")
@@ -67,27 +67,27 @@ class DuckFallbackParserSpec extends SparkSpec {
     //    the engine's own ATTACH statements (DuckDmlSpec covers those);
     //    only its final SELECT is shared surface — parse that.
     val viaAsofRewrite = Set("ducksql_asof_right", "ducksql_asof_full")
-    DuckDml.withPreparedScope {
-      for ((name, raw) <- DuckSqlQueries.oracle.toSeq.sortBy(_._1))
-        withClue(name) {
-          if (viaAsofRewrite(name))
-            assert(AsofRewrite.maybeRun(spark, sf(), raw).isDefined,
-              s"$name must take the AsofRewrite fast path")
-          else for (stmt <- splitStatements(raw)) {
-            val head = stmt.takeWhile(!_.isWhitespace).toLowerCase
-            head match {
-              case "prepare" | "deallocate" =>
-                DuckDml.exec(spark, Map.empty, stmt)
-              case "execute" =>
-                val bound = DuckDml.resolveExecute(stmt).getOrElse(
-                  fail(s"$name: EXECUTE did not resolve"))
-                parser.parsePlan(bound)
-              case "attach" | "create" if name == "ducksql_attach" => ()
-              case _ => parser.parsePlan(stmt)
-            }
+    // PREPARE registers on a session of its own
+    val s = spark.newSession()
+    for ((name, raw) <- DuckSqlQueries.oracle.toSeq.sortBy(_._1))
+      withClue(name) {
+        if (viaAsofRewrite(name))
+          assert(AsofRewrite.maybeRun(spark, sf(), raw).isDefined,
+            s"$name must take the AsofRewrite fast path")
+        else for (stmt <- splitStatements(raw)) {
+          val head = stmt.takeWhile(!_.isWhitespace).toLowerCase
+          head match {
+            case "prepare" | "deallocate" =>
+              DuckDml.exec(s, Map.empty, stmt)
+            case "execute" =>
+              val bound = DuckDml.resolveExecute(SessionSql.of(s), stmt).getOrElse(
+                fail(s"$name: EXECUTE did not resolve"))
+              parser.parsePlan(bound)
+            case "attach" | "create" if name == "ducksql_attach" => ()
+            case _ => parser.parsePlan(stmt)
           }
         }
-    }
+      }
   }
 
   test("garbage still raises ParseException (not a translator error)") {
