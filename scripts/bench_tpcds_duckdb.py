@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB twin of `graft.VerbatimBench tpcds [scale]`: run the reference's 99
-verbatim TPC-DS query texts over the SAME staged parquet fixtures
+verbatim TPC-DS query texts (fixtures/tpcds/queries, or
+SPARK_GRAFT_TPCDS_QUERIES) over the SAME staged parquet fixtures
 (fixtures/tpcds/<scale>/), warm best-of-N, one JSON line out — the
 same-box apples-to-apples baseline for the engine's verbatim suite.
 
@@ -18,7 +19,7 @@ import duckdb
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 QUERIES = os.environ.get(
     "SPARK_GRAFT_TPCDS_QUERIES",
-    "/root/reference/extension/tpcds/dsdgen/queries")
+    os.path.join(ROOT, "fixtures", "tpcds", "queries"))
 TABLES = (
     "call_center catalog_page catalog_returns catalog_sales customer "
     "customer_address customer_demographics date_dim household_demographics "

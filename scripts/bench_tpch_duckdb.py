@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB twin of `graft.VerbatimBench tpch [scale]`: run the reference's 22
-verbatim TPC-H query texts over the SAME staged parquet fixtures
+verbatim TPC-H query texts (fixtures/tpch/queries, or
+SPARK_GRAFT_TPCH_QUERIES) over the SAME staged parquet fixtures
 (fixtures/tpch/<scale>/), warm best-of-N, one JSON line out — the
 same-box apples-to-apples baseline for the engine's verbatim suite.
 
@@ -17,7 +18,7 @@ import duckdb
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 QUERIES = os.environ.get(
     "SPARK_GRAFT_TPCH_QUERIES",
-    "/root/reference/extension/tpch/dbgen/queries")
+    os.path.join(ROOT, "fixtures", "tpch", "queries"))
 TABLES = "region nation customer supplier part partsupp orders lineitem".split()
 
 

@@ -11,9 +11,13 @@ convention (scripts/stage_tpch.py): both engines then read identical
 doubles and the gate's rel-1e-12 float tolerance absorbs
 summation-order rounding. Dates stay DATE, keys BIGINT, text VARCHAR.
 
-Also emits fixtures/tpcds/meta.json: for each of the reference's 99
-verbatim query texts, the RESULT arity and DuckDB column types (probed
-by running the query over the staged sf0.01 parquet). TpcdsVerbatim
+Also writes the 99 query texts DuckDB's tpcds extension ships
+(`SELECT query FROM tpcds_queries()`, the texts the reference keeps under
+extension/tpcds/dsdgen/queries) byte for byte to
+fixtures/tpcds/queries/NN.sql, with a sha256sum-format SHA256SUMS, and
+emits fixtures/tpcds/meta.json: for each of those 99 query texts, the
+RESULT arity and DuckDB column types (probed by running the query over
+the staged sf0.01 parquet). TpcdsVerbatim
 needs the arity to alias result columns positionally (many TPC-DS
 outputs are unaliased expressions whose auto-names differ per engine)
 and the types to cast DuckDB HUGEINT sums to BIGINT at the comparison
@@ -28,14 +32,14 @@ import sys
 
 import duckdb
 
+from stage_tpch import stage_queries
+
 TABLES = (
     "call_center catalog_page catalog_returns catalog_sales customer "
     "customer_address customer_demographics date_dim household_demographics "
     "income_band inventory item promotion reason ship_mode store "
     "store_returns store_sales time_dim warehouse web_page web_returns "
     "web_sales web_site").split()
-
-QUERIES_DIR = "/root/reference/extension/tpcds/dsdgen/queries"
 
 
 def stage(sf: float, root: str) -> str:
@@ -67,7 +71,7 @@ def probe_meta(fixdir: str, root: str) -> None:
                     f"read_parquet('{fixdir}/{t}.parquet')")
     meta = {}
     for n in range(1, 100):
-        qf = os.path.join(QUERIES_DIR, f"{n:02d}.sql")
+        qf = os.path.join(root, "queries", f"{n:02d}.sql")
         sql = open(qf).read().strip().rstrip(";")
         rel = con.sql(sql)
         types = [str(t) for t in rel.types]  # DuckDB logical types
@@ -88,6 +92,7 @@ if __name__ == "__main__":
     root = os.environ.get("GRAFT_TPCDS_ROOT") or os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "fixtures", "tpcds")
+    stage_queries(root, "tpcds_queries", "{:02d}.sql")
     for sf in sfs:
         key = sf if sf != int(sf) else int(sf)
         stage(key, root)

@@ -48,6 +48,14 @@ object Verify {
       else SparkEntry.queries.filter { case (n, _) => only(n) }
     val threads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "3").toInt)
+    // A corpus whose texts are absent has no entries to dump: list it
+    // (unavailable.json, always written) so the gate reads it as
+    // skipped, not as passed.
+    SparkEntry.unavailable.toSeq.sorted.foreach { case (corpus, why) =>
+      System.err.println(s"[verify] $corpus UNAVAILABLE: $why") }
+    new java.io.File(outDir).mkdirs()
+    Json.writeFile(s"$outDir/unavailable.json",
+      ListMap.from(SparkEntry.unavailable.toSeq.sorted))
     val (timings, errors) = run(spark, sfDir, outDir, entries, threads)
     // Repo-side rotation for cross-round diffing — only for the full map
     // (a SPARK_GRAFT_ONLY subset would poison the baseline) AT THE

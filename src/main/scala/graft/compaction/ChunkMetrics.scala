@@ -120,18 +120,25 @@ object ChunkMetrics {
 
   /** Runs `work` with a fresh [[ChunkMetrics]] installed, waits until the
     * listener bus has delivered every event the work posted, and returns
-    * the work's result with the metrics. If the bus does not drain within
-    * the budget, says so and returns the metrics seen so far. */
+    * the work's result with the metrics. The bus is drained before the
+    * metrics are installed too: a listener added while events of an
+    * earlier job are still queued would count that job's tasks. If the
+    * bus does not drain within the budget, says so and returns the
+    * metrics seen so far. */
   def measure[T](spark: SparkSession)(work: => T): (T, ChunkMetrics) = {
+    drain(spark, "metrics may include earlier jobs")
     val m = new ChunkMetrics().install(spark)
     try {
       val out = work
-      try org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext, DrainBudgetMs)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println(s"[chunk-metrics] listener bus not drained after " +
-          s"${DrainBudgetMs / 1000} s; metrics may be incomplete")
-      }
+      drain(spark, "metrics may be incomplete")
       (out, m)
     } finally spark.sparkContext.removeSparkListener(m)
   }
+
+  private def drain(spark: SparkSession, risk: String): Unit =
+    try org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext, DrainBudgetMs)
+    catch { case _: java.util.concurrent.TimeoutException =>
+      System.err.println(s"[chunk-metrics] listener bus not drained after " +
+        s"${DrainBudgetMs / 1000} s; $risk")
+    }
 }

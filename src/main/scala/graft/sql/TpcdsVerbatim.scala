@@ -17,6 +17,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DECIMAL money columns exported as DOUBLE so both engines do
   * identical double arithmetic).
   *
+  * The texts are committed as `fixtures/tpcds/queries/01.sql..99.sql`
+  * (with a `SHA256SUMS`), written byte for byte by `scripts/stage_tpcds.py`
+  * from DuckDB 1.0.0's `SELECT query FROM tpcds_queries()`: its tpcds
+  * extension is built from the same `extension/tpcds/dsdgen/queries` files. Run by
+  * DuckDB over `fixtures/tpcds/sf0.01`, all 99 reproduce
+  * `fixtures/tpcds/meta.json` byte for byte — arity, DuckDB types and
+  * row counts, which the staging script had probed from the reference's
+  * own files — and 32 of them start with WITH. Wherever a reference
+  * checkout sits next to the repository, `QueryTextsSpec` compares them
+  * with its files.
+  *
   * TPC-DS differs from TPC-H at the comparison boundary in one
   * mechanical way: many query outputs are UNALIASED expressions
   * (`round(sun_sales1/sun_sales2, 2)`, bare `count(*)`, …) whose
@@ -62,15 +73,11 @@ object TpcdsVerbatim {
       else "/root/repo/fixtures/tpcds"
     }
 
-  /** Directory holding the reference's verbatim query texts. */
+  /** Directory holding the 99 verbatim query texts: the committed
+    * `queries` dir under [[fixtureRoot]] unless SPARK_GRAFT_TPCDS_QUERIES
+    * names another. */
   def queriesDir: String =
-    sys.env.get("SPARK_GRAFT_TPCDS_QUERIES").getOrElse {
-      val ref = new java.io.File(
-        "/root/reference/extension/tpcds/dsdgen/queries")
-      if (ref.isDirectory) ref.getAbsolutePath
-      else throw new IllegalStateException(
-        "reference TPC-DS query dir not found — set SPARK_GRAFT_TPCDS_QUERIES")
-    }
+    sys.env.getOrElse("SPARK_GRAFT_TPCDS_QUERIES", s"$fixtureRoot/queries")
 
   /** Map the driver's testdata dir to the matching fixture scale.
     * SPARK_GRAFT_TPCDS_FORCE_SCALE pins a staged scale for bench

@@ -18,6 +18,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DOUBLE to match the driver-testdata convention so both engines do
   * identical double arithmetic).
   *
+  * The texts are committed as `fixtures/tpch/queries/q01.sql..q22.sql`
+  * (with a `SHA256SUMS`), written byte for byte by `scripts/stage_tpch.py`
+  * from DuckDB 1.0.0's `SELECT query FROM tpch_queries()`: its tpch
+  * extension is built from the same `extension/tpch/dbgen/queries`
+  * files. All 22 hash to exactly `perfbench/tpch/SHA256SUMS`, and
+  * wherever a reference checkout sits next to the repository
+  * `QueryTextsSpec` compares them with its files.
+  *
   * The oracle is the SAME verbatim text, prefixed with a WITH clause
   * binding the 8 table names to `read_parquet` over the staged fixture
   * files — CTE names shadow any same-named fixture views the gate
@@ -44,15 +52,11 @@ object TpchVerbatim {
       else "/root/repo/fixtures/tpch"
     }
 
-  /** Directory holding the reference's verbatim query texts. */
+  /** Directory holding the 22 verbatim query texts: the committed
+    * `queries` dir under [[fixtureRoot]] unless SPARK_GRAFT_TPCH_QUERIES
+    * names another. */
   def queriesDir: String =
-    sys.env.get("SPARK_GRAFT_TPCH_QUERIES").getOrElse {
-      val ref = new java.io.File(
-        "/root/reference/extension/tpch/dbgen/queries")
-      if (ref.isDirectory) ref.getAbsolutePath
-      else throw new IllegalStateException(
-        "reference TPC-H query dir not found — set SPARK_GRAFT_TPCH_QUERIES")
-    }
+    sys.env.getOrElse("SPARK_GRAFT_TPCH_QUERIES", s"$fixtureRoot/queries")
 
   /** Map the driver's testdata dir to the matching fixture scale.
     * SPARK_GRAFT_TPCH_FORCE_SCALE pins a specific staged scale (e.g. a

@@ -45,6 +45,21 @@ class SparkEntrySpec extends SparkSpec {
     assert(SparkEntry.oraclesFor(dml).size === 15)
   }
 
+  test("an absent corpus registers no entries and is listed unavailable with its reason") {
+    val imdb = (SparkEntry.queries.keySet ++ SparkEntry.oracleSql.keySet)
+      .filter(_.startsWith("imdb_q"))
+    sql.JobVerbatim.unavailable match {
+      case Some(why) =>
+        assert(why.contains("JOB query dir not found"))
+        assert(SparkEntry.unavailable === Map("imdb_q*" -> why))
+        assert(imdb.isEmpty)
+        assert(SparkEntry.oraclesFor(Set("imdb_q01a")).isEmpty)
+      case None =>
+        assert(SparkEntry.unavailable.isEmpty)
+        assert(imdb.size === sql.JobVerbatim.queryIds.size)
+    }
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -69,6 +69,22 @@ class ChunkMetricsSpec extends SparkSpec {
     assert(m.smallTaskFraction(1501) === 1.0)
   }
 
+  test("measure counts only its work's tasks, not the still-queued events of an earlier job") {
+    // a slow listener holds the shared bus queue, so the earlier job's
+    // task-end events are still queued when measure installs its metrics
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Thread.sleep(200)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      spark.range(0, 30, 1, 3).write.format("noop").mode("overwrite").save()
+      val (_, m) = ChunkMetrics.measure(spark)(
+        spark.range(0, 20, 1, 2).write.format("noop").mode("overwrite").save())
+      assert(m.snapshot.values.map(_.tasks).toSeq === Seq(2L))
+    } finally spark.sparkContext.removeSparkListener(slow)
+  }
+
   test("a retried stage attempt keeps its own stats, apart from the first attempt's") {
     import org.apache.spark.graft.ListenerEvents.{stageCompleted, taskEnd}
     val m = new ChunkMetrics
