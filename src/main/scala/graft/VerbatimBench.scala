@@ -25,35 +25,42 @@ import scala.collection.immutable.ListMap
   * `bench_evidence/` record.
   *
   * Run: `sbt "runMain graft.VerbatimBench <tpch|tpcds|imdb> [scale]"`
-  * (scale = the fixture scale, sf0.01 or sf0.1, default sf0.1; ignored by imdb).
+  * (scale = one of the suite's staged fixture dirs, e.g. sf0.01 or sf0.1,
+  * default sf0.1; a scale with no staged dir is refused with the list of
+  * staged ones; ignored by imdb).
   */
 object VerbatimBench {
 
   private type Run = SparkSession => DataFrame
   private val Runs = 3
 
-  /** Per suite: the metric name, the record path, and its queries as
-    * (JSON key, runner) for a fixture dir. */
-  private case class Suite(metric: String, out: String, queries: String => Seq[(String, Run)])
+  /** Per suite: the corpus, the metric name and the record path. */
+  private case class Suite(corpus: sql.VerbatimCorpus, metric: String, out: String)
 
   private val suites = Map(
-    "tpch" -> Suite("tpch_verbatim_total", "bench_evidence/r16_tpch_verbatim.json",
-      dir => (1 to 22).map(n => f"q$n%02d" -> (sql.TpchVerbatim.run(_: SparkSession, dir, n)))),
-    "tpcds" -> Suite("tpcds_verbatim_total", "bench_evidence/r17_tpcds_verbatim.json",
-      dir => (1 to 99).map(n => f"q$n%02d" -> (sql.TpcdsVerbatim.run(_: SparkSession, dir, n)))),
-    "imdb" -> Suite("imdb_verbatim_total", "bench_evidence/r17_imdb_verbatim.json",
-      _ => sql.JobVerbatim.queryIds.map(id => s"q$id" -> (sql.JobVerbatim.run(_: SparkSession, id)))))
+    "tpch" -> Suite(sql.TpchVerbatim, "tpch_verbatim_total", "bench_evidence/r16_tpch_verbatim.json"),
+    "tpcds" -> Suite(sql.TpcdsVerbatim, "tpcds_verbatim_total", "bench_evidence/r17_tpcds_verbatim.json"),
+    "imdb" -> Suite(sql.JobVerbatim, "imdb_verbatim_total", "bench_evidence/r17_imdb_verbatim.json"))
+
+  /** The fixture scale to time: `arg` when the corpus has it staged. */
+  private[graft] def stagedScale(corpus: sql.VerbatimCorpus, arg: String): String = {
+    require(!corpus.scaled || corpus.stagedScales.contains(arg),
+      s"no ${corpus.corpus} scale $arg staged under ${corpus.fixtureRoot}; " +
+        s"staged: ${corpus.stagedScales.mkString(", ")}")
+    arg
+  }
 
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("")
     val suite = suites.getOrElse(name, throw new IllegalArgumentException(
       s"usage: VerbatimBench <${suites.keys.toSeq.sorted.mkString("|")}> [scale]"))
-    val scale = args.lift(1).getOrElse("sf0.1")
+    val corpus = suite.corpus
+    val scale = stagedScale(corpus, args.lift(1).getOrElse("sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = BenchConf.session(cpus, 32)
     BenchConf.verbatim(spark)
-    // only the name of the fixture dir argument is read: it selects the scale
-    val queries = suite.queries(scale)
+    // the scale is passed where entries take their testdata dir: its name selects the staged dir
+    val queries = corpus.queryIds.map(id => s"q$id" -> (corpus.run(_: SparkSession, scale, id)))
     def once(q: Run): Double = {
       val t0 = System.nanoTime()
       Bench.noop(q(spark))
@@ -61,7 +68,7 @@ object VerbatimBench {
     }
     (1 to 2).foreach(_ => queries.foreach(q => once(q._2)))
     val best = queries.map { case (k, q) => k -> (1 to Runs).map(_ => once(q)).min }
-    val scope = if (name == "imdb") "fixtures" -> sql.JobVerbatim.fixtureRoot else "scale" -> scale
+    val scope = if (corpus.scaled) "scale" -> scale else "fixtures" -> corpus.fixtureRoot
     val record = ListMap("metric" -> suite.metric, "value" -> Bench.r3(best.map(_._2).sum),
       "unit" -> "sec", "runs" -> Runs, scope,
       "queries" -> ListMap.from(best.map { case (k, t) => k -> Bench.r3(t) }))

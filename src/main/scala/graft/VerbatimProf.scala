@@ -14,36 +14,20 @@ object VerbatimProf {
     def ms(f: => Unit): Long = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1000000L
     }
+    val corpus = if (suite == "imdb") graft.sql.JobVerbatim else graft.sql.TpcdsVerbatim
+    val queryIds = if (suite == "imdb") ids else ids.map(id => f"${id.toInt}%02d")
+    val fixDir = corpus.fixtureDir("sf0.01")
     // one warm pass so JVM/codegen are hot, as in the mid-gate regime
-    ids.foreach { id =>
-      val n = if (suite == "imdb") s"imdb_q$id" else f"tpcds_q${id.toInt}%02d"
-      SparkEntry.queries(n)(spark, "/root/testdata/sf0.01")
-        .write.format("noop").mode("overwrite").save()
-    }
-    for (_ <- 1 to 3; id <- ids) {
+    queryIds.foreach(id =>
+      corpus.run(spark, "sf0.01", id).write.format("noop").mode("overwrite").save())
+    for (_ <- 1 to 3; id <- queryIds) {
       var df: org.apache.spark.sql.DataFrame = null
       var sql: String = null
-      val (reg, trans, analyze, exec) = suite match {
-        case "imdb" =>
-          val r = ms(graft.sql.JobVerbatim.tables.foreach(t =>
-            Tables.registerView(spark, t,
-              Tables.t(spark, graft.sql.JobVerbatim.fixtureRoot, t))))
-          val t = ms { sql = graft.sql.DuckDialect.translate(
-            graft.sql.JobVerbatim.queryText(id)) }
-          val a = ms { df = spark.sql(sql) }
-          val e = ms(df.write.format("noop").mode("overwrite").save())
-          (r, t, a, e)
-        case _ =>
-          val n = id.toInt
-          val fixDir = s"${graft.sql.TpcdsVerbatim.fixtureRoot}/sf0.01"
-          val r = ms(graft.sql.TpcdsVerbatim.tables.foreach(t =>
-            Tables.registerView(spark, t, Tables.t(spark, fixDir, t))))
-          val t = ms { sql = graft.sql.DuckDialect.translate(
-            graft.sql.TpcdsVerbatim.queryText(n)) }
-          val a = ms { df = spark.sql(sql) }
-          val e = ms(df.write.format("noop").mode("overwrite").save())
-          (r, t, a, e)
-      }
+      val reg = ms(corpus.tables.foreach(t =>
+        Tables.registerView(spark, t, Tables.t(spark, fixDir, t))))
+      val trans = ms { sql = graft.sql.DuckDialect.translate(corpus.queryText(id)) }
+      val analyze = ms { df = spark.sql(sql) }
+      val exec = ms(df.write.format("noop").mode("overwrite").save())
       System.err.println(
         s"[prof] $suite $id register=${reg}ms translate=${trans}ms " +
           s"analyze=${analyze}ms execute=${exec}ms")

@@ -29,14 +29,10 @@ import scala.collection.immutable.ListMap
   * files.
   */
 object Verify {
-  type Entry = (SparkSession, String) => org.apache.spark.sql.DataFrame
+  type Entry = SparkEntry.Entry
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Engine and oracle must read the SAME staged corpus scale (r16
-    // advice): pin the dir-derived scale before any oracle SQL is built.
-    graft.sql.TpchVerbatim.pinOracleScale(sfDir)
-    graft.sql.TpcdsVerbatim.pinOracleScale(sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = EngineSession.local(cpus)
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump to a subset (a
@@ -143,9 +139,10 @@ object Verify {
     // Emit oracles only for queries dumped SO FAR this run: queries not
     // yet (or never) dumped have no columnsByQuery entry (no ORDER BY
     // wrapper) and possibly stale parquet in a reused outDir — emitting
-    // them would invite spurious order-dependent mismatches.
+    // them would invite spurious order-dependent mismatches. The oracles
+    // read the corpus scale the entries read: both follow sfDir.
     def writeOracleJson(): Unit = writeAtomic("oracle_sql.json", ListMap.from(
-      SparkEntry.oraclesFor(columnsByQuery.keySet.toSet)
+      SparkEntry.oraclesFor(columnsByQuery.keySet.toSet, sfDir)
         .toSeq.sortBy(_._1).map { case (k, v) => k -> wrapped(k, v) }))
     // Gate integrity: a thrown query must surface as a FAILED row, never a
     // vanished one (round 7: four regressions silently dropped out of the

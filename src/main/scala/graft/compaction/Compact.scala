@@ -56,18 +56,6 @@ object Compact {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize")
 
-  /** The production-default AQE posture: parallelism-first coalescing
-    * (the advisory size is a floor, not a binding target). This is the
-    * configuration the engine ships with — and, as of round 8's flood
-    * measurements, the one every bound arm must beat to earn its keep. */
-  def enableAqeDefault(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", (64L << 20).toString)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", (1L << 20).toString)
-  }
-
   /** Snapshot the AQE conf keys, run `body`, restore them — episode
     * isolation for tuning loops (state must not bleed between arms). */
   def withAqeConfRestored[T](spark: SparkSession)(body: => T): T = {

@@ -111,7 +111,7 @@ object CompactionBench {
       val acc = scala.collection.mutable.Map.empty[String, (Double, Double)]
       for (_ <- 1 to 2; (name, t) <- cfgs) {
         val ((sec, _), m) = Compact.withAqeConfRestored(spark) {
-          t.fold(Compact.enableAqeDefault(spark))(
+          t.fold(Compact.enableAqeCompaction(spark))(
             Compact.enableAqeCompaction(spark, _, bindTarget = true))
           ChunkMetrics.measure(spark)(timed(w(spark)))
         }

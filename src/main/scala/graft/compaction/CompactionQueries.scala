@@ -9,7 +9,7 @@ import graft.Tables
   * while the partition layout collapses from fragment-per-input-split to
   * size-targeted chunks.
   */
-object CompactionQueries {
+object CompactionQueries extends graft.EntryModule {
 
   /** Selective filter (≈0.5% pass) → compact → aggregate. Oracle-equal to
     * the plain filter+aggregate; the compaction sits between filter and

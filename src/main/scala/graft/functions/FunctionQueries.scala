@@ -10,7 +10,7 @@ import graft.functions.{GraftFunctions => G}
   * math, date, generic; `extension/json/`; the §2.7 gap list implemented as
   * custom expressions in this package). Every query is oracle-checked.
   */
-object FunctionQueries {
+object FunctionQueries extends graft.EntryModule {
 
   /** String functions (reference `src/core_functions/scalar/string/`). */
   def fnString(s: SparkSession, dir: String): DataFrame =

@@ -19,7 +19,7 @@ import graft.Tables
   * macro boundary, exactly like DuckDB's inlining and unlike an opaque
   * UDF. The registry adds the by-name indirection (late binding,
   * redefinition) that `CREATE MACRO` provides over plain `def`s. */
-object GraftMacros {
+object GraftMacros extends graft.EntryModule {
 
   private val scalars =
     new scala.collection.concurrent.TrieMap[String, Seq[Column] => Column]()

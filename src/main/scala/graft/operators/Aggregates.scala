@@ -15,7 +15,7 @@ import graft.Tables
   * HashAggregateExec (map-side combine) applies everywhere — the property
   * that keeps these queries one-shuffle at 100 TB.
   */
-object Aggregates {
+object Aggregates extends graft.EntryModule {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 

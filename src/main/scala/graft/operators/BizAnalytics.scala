@@ -11,7 +11,7 @@ import graft.Tables
   * product-analytics tranche in [[OlapSuites]]. Everything is
   * engineered integer-or-decimal-exact before any division, so both
   * engines agree bitwise (the established determinism contract). */
-object BizAnalytics {
+object BizAnalytics extends graft.EntryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
 

@@ -17,7 +17,7 @@ import graft.Tables
   * across engines and across cluster sizes. At 100 TB a float sum would be
   * non-deterministic run-to-run; decimal keeps results stable.
   */
-object CoreQueries {
+object CoreQueries extends graft.EntryModule {
 
   /** Exact money: cast to DECIMAL(18,2) before arithmetic. */
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))

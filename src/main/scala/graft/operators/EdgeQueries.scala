@@ -24,7 +24,7 @@ import graft.Tables
   * (2.7 → 2); users must round() explicitly before casting for portable
   * results.
   */
-object EdgeQueries {
+object EdgeQueries extends graft.EntryModule {
 
   /** Ungrouped aggregate over ZERO rows: count 0, every other agg NULL
     * (reference `test/sql/aggregate/aggregates/test_aggregate_types.test`

@@ -37,7 +37,7 @@ import graft.Tables
   * key. The BFS is level-synchronous (Spark 4.1 UnionLoop), the same
   * bounded-depth plan `cte_khop_graph` pins.
   */
-object GraphShapes {
+object GraphShapes extends graft.EntryModule {
 
   /** connectsTo: consecutive same-user events, (ts, event_id) total order. */
   private def connectsTo(s: SparkSession, dir: String): DataFrame = {

@@ -52,7 +52,7 @@ import graft.Tables
   * `floor()` before the INT cast because Spark truncates double→int
   * while DuckDB rounds — `floor` is the one spelling both agree on.
   */
-object HolisticWindows {
+object HolisticWindows extends graft.EntryModule {
 
   /** Shared base: bounded slice of orders with an integer measure and a
     * coarse partition key; o_orderkey is the unique total order. */

@@ -16,7 +16,7 @@ import graft.Tables
   * driver-side collection. Dimension sides are marked `broadcast` where the
   * table stays small at any scale factor (nation/region, filtered dims).
   */
-object Joins {
+object Joins extends graft.EntryModule {
 
   /** LEFT OUTER with an extra non-key predicate in the ON clause —
     * exercises null-extension of unmatched probe rows

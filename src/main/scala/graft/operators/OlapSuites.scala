@@ -13,7 +13,7 @@ import graft.Tables
   * key at varying cardinality, median+sd per group, top-2 per group via
   * row_number, corr² per group, uniq counts, ordered LIMIT) — these two
   * entries pin the shapes those families DON'T hit. */
-object OlapSuites {
+object OlapSuites extends graft.EntryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
 

@@ -20,7 +20,7 @@ import graft.Tables
   *    parallel balance (the AQE skew-join fallback for when runtime stats
   *    arrive too late, e.g. under a single straggler key).
   */
-object ScaleJoins {
+object ScaleJoins extends graft.EntryModule {
 
   /** Equi-band join: rows (l, r) with l.key === r.key (optional) and
     * |l.x − r.x| ≤ width. `leftX`/`rightX` must be numeric (µs for

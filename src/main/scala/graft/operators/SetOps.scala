@@ -10,7 +10,7 @@ import graft.Tables
   * `src/execution/operator/set/physical_{union,cte,recursive_cte}.cpp`;
   * subquery decorrelation `src/planner/subquery/flatten_dependent_join.cpp`).
   */
-object SetOps {
+object SetOps extends graft.EntryModule {
 
   def setUnionAll(s: SparkSession, dir: String): DataFrame = {
     val c = Tables.t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))

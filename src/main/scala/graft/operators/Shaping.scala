@@ -13,7 +13,7 @@ import graft.Tables
   * `physical_expression_scan.cpp`, JSON functions
   * `extension/json/json_functions.cpp`).
   */
-object Shaping {
+object Shaping extends graft.EntryModule {
 
   /** LIST→rows unnest: word histogram over documents (Catalyst Generate). */
   def shapeUnnest(s: SparkSession, dir: String): DataFrame =

@@ -19,7 +19,7 @@ import graft.Tables
   * parity: exact under any partitioning/order); month keys are cast to
   * DATE on both sides (Spark date_trunc yields TIMESTAMP, DuckDB DATE).
   */
-object TpcdsShapes {
+object TpcdsShapes extends graft.EntryModule {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 

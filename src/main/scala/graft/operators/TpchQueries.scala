@@ -24,7 +24,7 @@ import graft.Tables
   * comparisons are cross-multiplied into exact DECIMAL arithmetic so
   * results are bit-stable under any partitioning or AQE re-plan.
   */
-object TpchQueries {
+object TpchQueries extends graft.EntryModule {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
   private val one: Column = lit(1).cast(DecimalType(18, 2))

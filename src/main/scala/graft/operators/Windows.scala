@@ -16,7 +16,7 @@ import graft.Tables
   * windowed sums go through DECIMAL so frame evaluation is exact and
   * identical across engines and partitionings.
   */
-object Windows {
+object Windows extends graft.EntryModule {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 

@@ -28,7 +28,7 @@ import graft.Tables
   * pair, so the merge sequence is a pure function of the word counts
   * under any partitioning.
   */
-object Bpe {
+object Bpe extends graft.EntryModule {
 
   /** Word-count table of the normalized corpus (words of ≥2 chars —
     * single-char words carry no pairs and never change under merges). */

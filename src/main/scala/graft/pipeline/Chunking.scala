@@ -17,7 +17,7 @@ import graft.Tables
   * the explode fan-out is bounded by ceil(tokens/stride) per document.
   * At 100 TB this is embarrassingly parallel over parquet splits.
   */
-object Chunking {
+object Chunking extends graft.EntryModule {
 
   /** Window of `size` tokens every `stride` tokens (overlap = size −
     * stride). chunk_id is 0-based; the last chunk may be short, never

@@ -29,7 +29,7 @@ import graft.functions.{GraftFunctions => G}
   * clustering for. The driver loop is bounded by ITERS, mirroring
   * [[Dedup.connectedComponents]]' bounded-iteration contract.
   */
-object Clustering {
+object Clustering extends graft.EntryModule {
 
   val K = 4
   val ITERS = 3

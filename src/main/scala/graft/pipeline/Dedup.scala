@@ -17,7 +17,7 @@ import graft.Tables
   * generation joins on band buckets (never all-pairs), and only verified
   * pairs survive. No driver-side collection anywhere.
   */
-object Dedup {
+object Dedup extends graft.EntryModule {
 
   /** Width probe for the [[shingleHashes]] repartition gate WITHOUT
     * forcing query-stage materialization (round-10 advice): `.rdd` under

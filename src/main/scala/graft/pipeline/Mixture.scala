@@ -43,7 +43,7 @@ import graft.Tables
   * scan's codegen stage, and a map-side-combining per-domain count. No
   * corpus-sized shuffle anywhere.
   */
-object Mixture {
+object Mixture extends graft.EntryModule {
 
   private val Ppm = 1000000L
 

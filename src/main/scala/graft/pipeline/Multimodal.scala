@@ -15,7 +15,7 @@ import graft.Tables
   * the feature-struct shape — is real and tested, so swapping in a true
   * decoder is a one-function change.
   */
-object Multimodal {
+object Multimodal extends graft.EntryModule {
 
   case class MediaRow(doc_id: Long, kind: String, payload: Array[Byte])
   case class MediaFeatures(

@@ -13,7 +13,7 @@ import graft.functions.{GraftFunctions => G}
   * the bucket join touches ~1/2^planes of the corpus per probe instead of
   * all of it.
   */
-object Similarity {
+object Similarity extends graft.EntryModule {
 
   /** Deterministic pseudo-random hyperplanes: plane j, dim d ←
     * hash(seed, j·dim+d) mapped to an INTEGER weight in [-512, 512).

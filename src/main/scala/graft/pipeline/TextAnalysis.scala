@@ -11,7 +11,7 @@ import graft.functions.{GraftFunctions => G}
   * until the final aggregation), which is what keeps them viable over
   * billions of documents.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.EntryModule {
 
   private def words(text: Column): Column = split(Dedup.normalized(text), " ")
 

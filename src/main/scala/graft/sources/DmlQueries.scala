@@ -12,7 +12,7 @@ import graft.Tables
   * untouched fixtures (INSERT ≡ UNION ALL, DELETE ≡ negated-predicate
   * filter, UPDATE ≡ CASE projection, MERGE ≡ FULL OUTER JOIN), so DuckDB
   * value-checks the entire post-DML table state. */
-object DmlQueries {
+object DmlQueries extends graft.EntryModule {
 
   private def tmpRoot(): String =
     java.nio.file.Files.createTempDirectory("graft_dml_").toString

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * on purpose: the entries double as a regression net for the
   * passthrough claim in the DuckDialect scaladoc.
   */
-object DuckSqlQueries {
+object DuckSqlQueries extends graft.EntryModule {
 
   /** QUALIFY → windowed top-k per group, the dominant real-world use
     * (reference grammar: third_party/libpg_query qualify clause). */

@@ -2,7 +2,8 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The reference's REAL TPC-DS benchmark corpus, executed VERBATIM.
+/** The reference's REAL TPC-DS benchmark corpus, executed VERBATIM (see
+  * [[VerbatimCorpus]]).
   *
   * The reference ships the genuine dsdgen + all 99 official query texts
   * (reference `extension/tpcds/dsdgen/queries/01.sql..99.sql`, driven by
@@ -41,13 +42,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * documents for its q12. Neither rename nor cast touches the verbatim
   * query text itself.
   *
-  * The oracle binds the 24 table names to `read_parquet` over the
-  * staged fixture files with a WITH prefix; for the 32 queries that
-  * already START with a WITH clause the binding CTEs are merged into
-  * the query's own CTE list (`WITH binds, original_ctes …`) — CTE names
-  * shadow any same-named views the gate registers, so the oracle
-  * provably reads the TPC-DS corpus.
-  *
   * At 100 TB the physical plans are the ones Catalyst picks with AQE:
   * date_dim/item/store/… dims broadcast, the seven fact tables
   * (store_sales/_returns, catalog_sales/_returns, web_sales/_returns,
@@ -55,72 +49,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * map-side — the same posture the `ds_*` analogs plan-pin. This
   * module's job is SQL-surface parity over the reference's own corpus.
   */
-object TpcdsVerbatim {
-
-  val tables: Seq[String] = Seq(
+object TpcdsVerbatim extends VerbatimCorpus("tpcds", "tpcds_q", Seq(
     "call_center", "catalog_page", "catalog_returns", "catalog_sales",
     "customer", "customer_address", "customer_demographics", "date_dim",
     "household_demographics", "income_band", "inventory", "item",
     "promotion", "reason", "ship_mode", "store", "store_returns",
     "store_sales", "time_dim", "warehouse", "web_page", "web_returns",
-    "web_sales", "web_site")
+    "web_sales", "web_site"), filePrefix = "", scaled = true) {
 
-  /** Root of the staged dsdgen fixtures (committed to the repo). */
-  def fixtureRoot: String =
-    sys.env.get("SPARK_GRAFT_TPCDS_FIXTURES").getOrElse {
-      val local = new java.io.File("fixtures/tpcds")
-      if (local.isDirectory) local.getAbsolutePath
-      else "/root/repo/fixtures/tpcds"
-    }
+  override lazy val queryIds: Seq[String] = (1 to 99).map(n => f"$n%02d")
 
-  /** Directory holding the 99 verbatim query texts: the committed
-    * `queries` dir under [[fixtureRoot]] unless SPARK_GRAFT_TPCDS_QUERIES
-    * names another. */
-  def queriesDir: String =
-    sys.env.getOrElse("SPARK_GRAFT_TPCDS_QUERIES", s"$fixtureRoot/queries")
+  def queryText(n: Int): String = queryText(f"$n%02d")
 
-  /** Map the driver's testdata dir to the matching fixture scale.
-    * SPARK_GRAFT_TPCDS_FORCE_SCALE pins a staged scale for bench
-    * sweeps (e.g. a tmpfs-staged sf1). */
-  private[sql] def scaleFor(testdataDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_TPCDS_FORCE_SCALE",
-      if (new java.io.File(testdataDir).getName == "sf0.1") "sf0.1" else "sf0.01")
+  def run(spark: SparkSession, dir: String, n: Int): DataFrame = run(spark, dir, f"$n%02d")
 
-  /** Single scale source for the oracle side — pinned by Verify from
-    * the SAME testdata dir the engine entries receive (the r16-advice
-    * contract [[TpchVerbatim.pinOracleScale]] established). */
-  @volatile private var pinnedOracleScale: Option[String] = None
-  def pinOracleScale(testdataDir: String): Unit =
-    pinnedOracleScale = Some(scaleFor(testdataDir))
-
-  def queryText(n: Int): String = {
-    val f = java.nio.file.Paths.get(queriesDir, f"$n%02d.sql")
-    val raw = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-    raw.trim.stripSuffix(";")
-  }
+  def oracleText(n: Int): String = oracleText(f"$n%02d")
 
   /** Staging-time probe of each query's result arity + DuckDB types
     * (scripts/stage_tpcds.py → fixtures/tpcds/meta.json). */
-  private lazy val meta: Map[Int, (Int, Vector[String])] = {
-    val f = java.nio.file.Paths.get(fixtureRoot, "meta.json")
-    val txt = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-    val entry =
-      """"(\d\d)":\s*\{([^}]*)\}""".r
-    val ncolsRe = """"ncols":\s*(\d+)""".r
-    val typesRe = """"types":\s*\[([^\]]*)\]""".r
-    entry.findAllMatchIn(txt).map { m =>
-      val n = m.group(1).toInt
-      val body = m.group(2)
-      val ncols = ncolsRe.findFirstMatchIn(body).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"meta.json entry $n lacks ncols"))
-      val types = typesRe.findFirstMatchIn(body).map(_.group(1))
-        .getOrElse(throw new IllegalStateException(
-          s"meta.json entry $n lacks types"))
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toVector
+  private lazy val meta: Map[String, (Int, Vector[String])] = {
+    import scala.jdk.CollectionConverters._
+    val root = graft.Json.read(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(fixtureRoot, "meta.json")))
+    root.fieldNames.asScala.map { id =>
+      val e = root.get(id)
+      require(e.has("ncols") && e.has("types"), s"meta.json entry $id lacks ncols or types")
+      val ncols = e.get("ncols").asInt
+      val types = e.get("types").elements.asScala.map(_.asText).toVector
       require(types.length == ncols,
-        s"meta.json entry $n: ${types.length} types vs ncols $ncols")
-      n -> (ncols, types)
+        s"meta.json entry $id: ${types.length} types vs ncols $ncols")
+      id -> (ncols, types)
     }.toMap
   }
 
@@ -152,20 +110,16 @@ object TpcdsVerbatim {
     *  - q78's `round(qty_ratio, 2)`: decimal(?,2) in Spark vs DOUBLE in
     *    DuckDB — "4.00" vs "4.0" under the driver's exact hash. Scale 2
     *    is the query's own grid (no value change, type parity only). */
-  private val roundShims: Map[Int, Map[Int, Int]] = Map(
-    18 -> (4 to 10).map(_ -> 3).toMap,
-    61 -> (0 to 2).map(_ -> 2).toMap,
-    78 -> Map(3 -> 2))
+  private val roundShims: Map[String, Map[Int, Int]] = Map(
+    "18" -> (4 to 10).map(_ -> 3).toMap,
+    "61" -> (0 to 2).map(_ -> 2).toMap,
+    "78" -> Map(3 -> 2))
 
-  /** Run verbatim query `n` over the staged corpus for `dir`'s scale,
-    * result columns renamed positionally (see scaladoc). */
-  def run(spark: SparkSession, dir: String, n: Int): DataFrame = {
-    val fixDir = s"$fixtureRoot/${scaleFor(dir)}"
-    tables.foreach(t =>
-      graft.Tables.registerView(spark, t, graft.Tables.t(spark, fixDir, t)))
-    val df = spark.sql(DuckDialect.translate(queryText(n)))
+  /** The engine's result renamed positionally to c0..cN (see scaladoc),
+    * with the round-grid shims applied. */
+  override protected def shapeResult(id: String, df: DataFrame): DataFrame = {
     val renamed = df.toDF(posNames(df.columns.length): _*)
-    roundShims.get(n) match {
+    roundShims.get(id) match {
       case None => renamed
       case Some(shims) =>
         import org.apache.spark.sql.functions.{col, round}
@@ -175,25 +129,14 @@ object TpcdsVerbatim {
     }
   }
 
-  /** Oracle: the verbatim text with the 24 tables bound via a WITH
-    * prefix (merged into the query's own WITH list when it has one),
-    * wrapped in a positional rename + HUGEINT→BIGINT comparison casts. */
-  def oracleText(n: Int): String = {
-    val scale = sys.env.getOrElse("SPARK_GRAFT_TPCDS_ORACLE_SCALE",
-      pinnedOracleScale.getOrElse("sf0.01"))
-    val binds = tables.map(t =>
-      s"$t AS (SELECT * FROM read_parquet('$fixtureRoot/$scale/$t.parquet'))")
-      .mkString(", ")
-    val qt = queryText(n)
-    val bound =
-      if (qt.take(4).equalsIgnoreCase("with"))
-        s"WITH $binds, ${qt.drop(4).trim}"
-      else s"WITH $binds $qt"
-    val (ncols, types) = meta.getOrElse(n, throw new IllegalStateException(
-      s"fixtures/tpcds/meta.json has no entry for query $n — re-run " +
+  /** The bound oracle wrapped in a positional rename + the round-grid
+    * and HUGEINT→BIGINT comparison casts. */
+  override protected def shapeOracle(id: String, bound: String): String = {
+    val (ncols, types) = meta.getOrElse(id, throw new IllegalStateException(
+      s"fixtures/tpcds/meta.json has no entry for query ${id.toInt} — re-run " +
         "scripts/stage_tpcds.py"))
     val sel = (0 until ncols).map { i =>
-      roundShims.get(n).flatMap(_.get(i)) match {
+      roundShims.get(id).flatMap(_.get(i)) match {
         case Some(k) => s"CAST(ROUND(c$i, $k) AS DOUBLE) AS c$i"
         case None if types(i) == "HUGEINT" => s"CAST(c$i AS BIGINT) AS c$i"
         case None => s"c$i"
@@ -201,14 +144,4 @@ object TpcdsVerbatim {
     }.mkString(", ")
     s"SELECT $sel FROM ($bound) AS graft_t(${posNames(ncols).mkString(", ")})"
   }
-
-  private val byName: Map[String, Int] = (1 to 99).map(n => f"tpcds_q$n%02d" -> n).toMap
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    byName.map { case (k, n) => k -> ((s: SparkSession, dir: String) => run(s, dir, n)) }
-
-  def oracle: Map[String, String] = byName.map { case (k, n) => k -> oracleText(n) }
-
-  /** One entry's oracle: reads that query's text only. */
-  def oracleOf(name: String): Option[String] = byName.get(name).map(oracleText)
 }

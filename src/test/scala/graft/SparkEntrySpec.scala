@@ -12,48 +12,38 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("query names are unique across modules (no silent override)") {
-    val all = Seq(
-      operators.CoreQueries.queries, operators.TpchQueries.queries,
-      operators.TpcdsShapes.queries, operators.OlapSuites.queries,
-      operators.GraphShapes.queries, operators.BizAnalytics.queries,
-      operators.Joins.queries, operators.ScaleJoins.queries,
-      operators.Aggregates.queries,
-      operators.Windows.queries, operators.HolisticWindows.queries,
-      operators.SetOps.queries,
-      operators.Shaping.queries, operators.EdgeQueries.queries,
-      sql.DuckSqlQueries.queries,
-      sql.TpchVerbatim.queries,
-      sql.TpcdsVerbatim.queries,
-      sql.JobVerbatim.queries,
-      functions.FunctionQueries.queries,
-      functions.GraftMacros.queries,
-      pipeline.Dedup.queries, pipeline.Similarity.queries,
-      pipeline.Clustering.queries,
-      pipeline.TextAnalysis.queries, pipeline.Mixture.queries,
-      pipeline.Bpe.queries, pipeline.Chunking.queries,
-      pipeline.Multimodal.queries,
-      sources.DmlQueries.queries,
-      compaction.CompactionQueries.queries)
-    val total = all.map(_.size).sum
+    val total = SparkEntry.modules.map(_.queries.size).sum
     assert(total == SparkEntry.queries.size,
       s"key collision: $total module entries vs ${SparkEntry.queries.size} merged")
   }
 
+  test("building the registry throws on a name two modules register, naming it") {
+    def module(names: String*): EntryModule = new EntryModule {
+      val queries: Map[String, SparkEntry.Entry] =
+        names.map(n => n -> ((s: org.apache.spark.sql.SparkSession, _: String) => s.range(1).toDF())).toMap
+      val oracle: Map[String, String] = Map.empty
+    }
+    assert(SparkEntry.index(Seq(module("a", "b"), module("c"))).keySet === Set("a", "b", "c"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.index(Seq(module("a", "dup_entry"), module("dup_entry"))))
+    assert(e.getMessage.contains("dup_entry"), e.getMessage)
+  }
+
   test("dml_* oracle texts resolve without the reference query dirs") {
     val dml = sources.DmlQueries.queries.keySet
-    assert(SparkEntry.oraclesFor(dml) === sources.DmlQueries.oracle)
-    assert(SparkEntry.oraclesFor(dml).size === 15)
+    assert(SparkEntry.oraclesFor(dml, sf()) === sources.DmlQueries.oracle)
+    assert(SparkEntry.oraclesFor(dml, sf()).size === 15)
   }
 
   test("an absent corpus registers no entries and is listed unavailable with its reason") {
     val imdb = (SparkEntry.queries.keySet ++ SparkEntry.oracleSql.keySet)
       .filter(_.startsWith("imdb_q"))
-    sql.JobVerbatim.unavailable match {
+    sql.JobVerbatim.missing match {
       case Some(why) =>
         assert(why.contains("JOB query dir not found"))
         assert(SparkEntry.unavailable === Map("imdb_q*" -> why))
         assert(imdb.isEmpty)
-        assert(SparkEntry.oraclesFor(Set("imdb_q01a")).isEmpty)
+        assert(SparkEntry.oraclesFor(Set("imdb_q01a"), sf()).isEmpty)
       case None =>
         assert(SparkEntry.unavailable.isEmpty)
         assert(imdb.size === sql.JobVerbatim.queryIds.size)

@@ -239,7 +239,7 @@ class AdaptiveCompactSpec extends SparkSpec {
 
   test("closed loop: every episode sets the advisory size and records cost") {
     val ac = new AdaptiveCompact(spark)
-    val target = ac.tune(n = 4) { s =>
+    val (target, _) = ac.tuneMetered(n = 4) { s =>
       graft.Tables.t(s, sf(), "lineitem")
         .filter($"l_quantity" > 45)
         .groupBy($"l_returnflag").count().collect()
@@ -273,7 +273,7 @@ class AdaptiveCompactSpec extends SparkSpec {
   test("tune restores caller AQE conf except the settled arm's application") {
     val before = Compact.AqeConfKeys.map(k => k -> spark.conf.getOption(k)).toMap
     val ac = new AdaptiveCompact(spark)
-    val target = ac.tune(n = 2) { s => s.range(100).count() }
+    val (target, _) = ac.tuneMetered(n = 2) { s => s.range(100).count() }
     // whatever the settled arm is, the conf now reflects exactly its
     // application on top of the restored baseline — spot-check that a
     // non-arm key wasn't clobbered by intermediate episodes
@@ -282,6 +282,23 @@ class AdaptiveCompactSpec extends SparkSpec {
         "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     before.foreach { case (k, _) => assert(spark.conf.getOption(k).nonEmpty) }
+  }
+
+  test("settling on the default arm leaves the AQE conf EngineSession.local ships") {
+    def aqe = Compact.AqeConfKeys.map(k => k -> spark.conf.getOption(k))
+    // EngineSession.local re-configures this suite's running session:
+    // read the shipped AQE conf, then put back every runtime key it changed
+    val saved = spark.conf.getAll
+    val shipped = try { graft.EngineSession.local(2); aqe }
+    finally spark.conf.getAll.keys.filter(spark.conf.isModifiable).foreach(k =>
+      saved.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+    Compact.withAqeConfRestored(spark) {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+      val ac = new AdaptiveCompact(spark, new CompactTuner(IndexedSeq(CompactTuner.DefaultArm)))
+      val (target, _) = ac.tuneMetered(n = 1) { s => s.range(100).count() }
+      assert(target == CompactTuner.DefaultArm)
+      assert(aqe === shipped)
+    }
   }
 }
 
