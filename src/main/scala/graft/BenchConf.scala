@@ -20,15 +20,11 @@ import org.apache.spark.sql.functions.{col, expr, lit, translate}
   */
 object BenchConf {
 
-  /** A benchmark session. 13–99 queries × ~10 whole-stage-codegen classes
-    * each overflow the default 100-entry generated-class cache; with
-    * interleaved sampling that means a janino recompile per sample —
-    * raise it so compiled classes stay hot across the round-robin
-    * (static conf: must be set before the session executes anything). */
+  /** A benchmark session: the engine's own session at `cpus` cores and
+    * `shufflePartitions`, with its generated-class cache
+    * ([[EngineSession.CodegenCacheEntries]]). */
   def session(cpus: Int, shufflePartitions: Int): SparkSession = {
-    val spark = EngineSession.builder(s"local[$cpus]", shufflePartitions)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = EngineSession.builder(s"local[$cpus]", shufflePartitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
