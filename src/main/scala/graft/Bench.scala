@@ -25,8 +25,11 @@ import scala.util.Try
   *                       the scale trend, not just the toy point.
   * Each block is data ([[Block]]) run through the one interleaved timing
   * loop ([[timeBlock]]); results are case classes serialized by [[Json]].
-  * The compaction-bandit experiment and the 10× stage/encode profiles are
-  * not headline blocks: `graft.compaction.CompactionBench` runs them.
+  * After the timed blocks, [[Profile.record]] profiles each headliner
+  * (untimed) into `bench_profile.json`; the deep-join small-task fractions
+  * come from those records. The compaction-bandit experiment and the 10×
+  * stage/encode profiles are not headline blocks:
+  * `graft.compaction.CompactionBench` runs them.
   */
 object Bench {
 
@@ -61,6 +64,8 @@ object Bench {
   private val LoadWaitBudgetMs = 600000L
   private val EvidenceDir = "bench_evidence"
   private val Sidecar = "bench_dispersion.json"
+  /** One [[Profile.Record]] per headliner, and the compacted deep join. */
+  private val ProfileFile = "bench_profile.json"
 
   /** Benchmark JVMs need a PINNED pre-touched heap: with a floating heap,
     * G1 repeatedly uncommits after concurrent cycles and re-commits under
@@ -280,8 +285,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     reexecPinned().foreach(c => sys.exit(c))
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val sfDir = BenchConf.sfDir
+    val cpus = EngineSession.cores
     // 10×-scale block: copies of the corpus (0 disables; default 10).
     val inflate = sys.env.getOrElse("SPARK_GRAFT_BENCH_INFLATE", "10").toInt
     val spark = BenchConf.session(cpus, 8)
@@ -325,21 +330,26 @@ object Bench {
       finally scala.reflect.io.Path(bigDir).deleteRecursively() // tmpfs is shared with the OS
     }
 
-    // Compaction metrology on the paper's motivating shape: fraction of
-    // tasks under the reference's dynamic-compaction trigger size for one
-    // instrumented (untimed) run of the JOB-style deep join (reference
-    // `src/execution/physical_operator.cpp:266` — `chunk.size() <
-    // compact_threshold`; ChunkMetrics is the ZebraProfiler analog).
+    // Untimed profiles of the headliners under the tuned conf, plus
+    // `job_deep_join` once more under AQE compaction. The two deep-join
+    // records' small-task fractions are the compaction metrology on the
+    // paper's motivating shape: the share of tasks under the reference's
+    // dynamic-compaction trigger (see Profile.SmallTaskRecords).
     // UNCOMPACTED is the tuned conf (AQE off, 8 static shuffle partitions:
     // every post-agg exchange task carries ~1 row); the headline COMPACTED
-    // number adds Compact.enableAqeCompaction — AQE coalescing IS the
-    // engine's dynamic compactor and its production posture.
-    def stfRun(): Double = compaction.ChunkMetrics.measure(spark)(
-      noop(SparkEntry.queries("job_deep_join")(spark, dir)))._2.smallTaskFraction(1024)
+    // number adds Compact.enableAqeCompaction, the engine's dynamic
+    // compactor and its production posture.
     BenchConf.tuned(spark)
-    val stfUncompacted = stfRun()
+    val tunedProfiles = fns.map { case (n, fn) => Profile.record(spark, n)(fn(spark, dir)) }
     compaction.Compact.enableAqeCompaction(spark)
-    val stf = stfRun()
+    val compacted = Profile.record(spark, "job_deep_join+aqe_compaction")(
+      SparkEntry.queries("job_deep_join")(spark, dir))
+    val stfUncompacted = tunedProfiles(Headline.indexOf("job_deep_join")).small_task_fraction
+    val stf = compacted.small_task_fraction
+    mark("profiled")
+    Try(Json.writeFile(ProfileFile, tunedProfiles :+ compacted)).fold(
+      e => System.err.println(s"[bench] $ProfileFile write failed (${e.getMessage})"),
+      _ => System.err.println(s"[bench] headline profiles -> $ProfileFile"))
 
     // Clean-reference slots, PER BLOCK (round-14 verdict #8): a shared box's
     // external load oscillates faster than a full run, so each block whose

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr, lit, translate}
 
 /** Every session conf and data layout the timing mains use, in one place:
-  * the staged layout Bench, BenchExplain, StfProbe and the probes time
-  * against, the tuned and production conf sets Bench's blocks alternate
-  * between, and the verbatim-suite conf. No main keeps its own copy.
+  * the staged layout Bench and the probes time against, the tuned and
+  * production conf sets Bench's blocks alternate between (and profile
+  * its headliners under), and the verbatim-suite conf. No main keeps its
+  * own copy.
   *
   * The input fixtures are single-row-group snappy parquet files, which
   * caps scan parallelism at 1 task/table — a layout no real deployment
@@ -19,6 +20,10 @@ import org.apache.spark.sql.functions.{col, expr, lit, translate}
   * `benchmark/tpch/sf1/tpch_sf1.benchmark.in` loads via dbgen first).
   */
 object BenchConf {
+
+  /** The fixture dir the timing mains stage from: `SPARK_GRAFT_SF_DIR`,
+    * default the sf0.1 testdata. The one place a main reads the variable. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
   /** A benchmark session: the engine's own session at `cpus` cores and
     * `shufflePartitions`, with its generated-class cache

@@ -9,9 +9,7 @@ import org.apache.spark.sql.functions.col
   */
 object BenchTune {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = EngineSession.local(cpus)
+    val spark = EngineSession.local(EngineSession.cores)
 
     // the headline minus its two slowest entries, so a sweep stays short
     val headline = Bench.Headline.filterNot(Set("job_deep_join", "dedup_minhash"))
@@ -23,7 +21,7 @@ object BenchTune {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_stage").toString
       spark.conf.set("spark.sql.parquet.compression.codec", codec)
       Tables.names.foreach { n =>
-        val df = Tables.t(spark, sfDir, n)
+        val df = Tables.t(spark, BenchConf.sfDir, n)
         val p = if (Tables.broadcastable(n)) 1 else parts
         val out = sortCols.get(n) match {
           case Some(c) => df.repartitionByRange(p, col(c))

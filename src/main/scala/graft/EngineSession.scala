@@ -33,6 +33,11 @@ object EngineSession {
     * peak RSS read 4949 MB at 100 and 4657 MB at 10000 (one run each). */
   val CodegenCacheEntries = 10000
 
+  /** Cores for a main's session: `SPARK_GRAFT_CPUS` when set, else the
+    * machine's. The one place a main reads the variable. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

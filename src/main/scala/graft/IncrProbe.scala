@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions.col
 object IncrProbe {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = EngineSession.cores
     val copiesList = sys.env.getOrElse("SPARK_GRAFT_INCR_COPIES", "10,20,40")
       .split(",").map(_.trim.toInt).toSeq
     val out = sys.env.getOrElse("SPARK_GRAFT_INCR_OUT",
@@ -35,7 +34,7 @@ object IncrProbe {
 
     val rows = copiesList.map { c =>
       val t0 = System.nanoTime()
-      val dir = BenchConf.stageFixtures(spark, sfDir, cpus,
+      val dir = BenchConf.stageFixtures(spark, BenchConf.sfDir, cpus,
         copies = c, moneyDecimals = false)
       val docs = Tables.t(spark, dir, "documents")
       // fixed batch: the base copy's ≡0 (mod 10) ids — identical docs at

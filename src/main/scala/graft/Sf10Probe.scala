@@ -45,9 +45,9 @@ object Sf10Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = BenchConf.sfDir
     val copies = sys.env.getOrElse("SPARK_GRAFT_PROBE_COPIES", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = EngineSession.cores
     // Default roster (round-15 verdict item 7): the round-15 ten plus the
     // next-heaviest ten — 20 entries spanning dedup, OLAP-suite heavies,
     // graph, embeddings, search, streams-twins, packing, and the new

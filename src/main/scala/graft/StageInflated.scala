@@ -12,7 +12,7 @@ package graft
 object StageInflated {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, copiesStr) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = EngineSession.cores
     val spark = EngineSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val dir = BenchConf.stageFixtures(spark, sfDir, cpus,

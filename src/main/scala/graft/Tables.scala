@@ -23,7 +23,7 @@ object Tables {
   /** Catalog analog: table schemas resolved once per path, then supplied
     * to every subsequent read. Without this, each query pays a footer
     * schema-inference Spark job PER TABLE PER EXECUTION (~30 ms each —
-    * measured via BenchExplain: 6 such stages dominated q5's wall time).
+    * measured per stage: 6 such stages dominated q5's wall time).
     * The reference keeps table metadata in its catalog for the same
     * reason (reference `src/function/table/table_scan.cpp` binds against
     * catalog types, not per-query file sniffing).

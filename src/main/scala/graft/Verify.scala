@@ -33,8 +33,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = EngineSession.local(cpus)
+    val spark = EngineSession.local(EngineSession.cores)
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump to a subset (a
     // development aid; the gate leaves it unset and dumps the full map).
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -33,8 +33,12 @@ class ChunkMetrics extends SparkListener {
       var shuffleReadRecords: Long = 0L,
       var shuffleWriteRecords: Long = 0L,
       var shuffleWriteBytes: Long = 0L,
-      var wallMillis: Long = 0L,
+      var submittedMs: Long = 0L,
+      var completedMs: Long = 0L,
       taskRecords: ArrayBuffer[Long] = ArrayBuffer.empty[Long]) {
+
+    /** Submission to completion of this attempt; 0 until it completes. */
+    def wallMillis: Long = completedMs - submittedMs
 
     /** Tasks per log2 bucket of records processed, from `taskRecords`. */
     def histogram: Array[Long] = synchronized {
@@ -58,10 +62,9 @@ class ChunkMetrics extends SparkListener {
   override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
     val info = ev.stageInfo
     val st = stages.getOrElseUpdate((info.stageId, info.attemptNumber()), StageStats())
-    st.synchronized {
-      st.wallMillis = (for {
-        s <- info.submissionTime; c <- info.completionTime
-      } yield c - s).getOrElse(0L)
+    for (s <- info.submissionTime; c <- info.completionTime) st.synchronized {
+      st.submittedMs = s
+      st.completedMs = c
     }
   }
 

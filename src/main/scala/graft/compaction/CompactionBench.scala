@@ -1,6 +1,6 @@
 package graft.compaction
 
-import graft.{Bench, BenchConf, Json, SparkEntry, Tables}
+import graft.{Bench, BenchConf, EngineSession, Json, SparkEntry, Tables}
 import graft.Bench.r3
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -153,14 +153,13 @@ object CompactionBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = EngineSession.cores
     val inflate = sys.env.getOrElse("SPARK_GRAFT_BENCH_INFLATE", "10").toInt
     val spark = BenchConf.session(cpus, 8)
     Compact.enableAqeCompaction(spark)
     BenchConf.staged(spark)
     BenchConf.tuned(spark) // staging itself shouldn't pay AQE re-plans
-    val dir = BenchConf.stageFixtures(spark, sfDir, cpus, copies = inflate)
+    val dir = BenchConf.stageFixtures(spark, BenchConf.sfDir, cpus, copies = inflate)
     BenchConf.production(spark, cpus)
     val record = try {
       (1 to 2).foreach(_ => Bench.noop(SparkEntry.queries("dedup_minhash")(spark, dir))) // warm

@@ -210,7 +210,7 @@ class CurationExtrasSpec extends SparkSpec {
   }
 
   // ---- plan-shape pins for the session-3 operators: the claimed scale
-  // postures, asserted on the physical plan (the PlanCheck discipline) ----
+  // postures, asserted on the physical plan (as `graft.Profile` flags plan smells) ----
 
   private def formatted(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(

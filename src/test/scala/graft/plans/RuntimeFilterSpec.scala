@@ -15,15 +15,6 @@ import org.apache.spark.sql.functions._
   * plan, not row counts. */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("selective dim filter injects might_contain into the fact side of a shuffle join") {
     withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
