@@ -292,6 +292,14 @@ object Bench {
     val spark = BenchConf.session(cpus, 8)
     compaction.Compact.enableAqeCompaction(spark)
     val dir = BenchConf.stageFixtures(spark, sfDir, cpus)
+    try measure(spark, sfDir, dir, cpus, inflate)
+    finally scala.reflect.io.Path(dir).deleteRecursively() // tmpfs is shared with the OS
+    spark.stop()
+  }
+
+  /** The timed blocks, profiles and result record over the staged `dir`. */
+  private def measure(spark: SparkSession, sfDir: String, dir: String, cpus: Int,
+      inflate: Int): Unit = {
     BenchConf.staged(spark)
     val fns = Headline.map(n => n -> SparkEntry.queries(n))
 
@@ -392,6 +400,5 @@ object Bench {
     }, _ => System.err.println(s"[bench] full dispersion record -> $Sidecar"))
     val line = Json.write(result.headline)
     println(if (line.length <= 1900) line else Json.write(result.headline - "queries"))
-    spark.stop()
   }
 }

@@ -17,13 +17,13 @@ import org.apache.spark.internal.Logging
   * re-planning point (runtime stats → join strategy switch / skew split) —
   * the same lever the reference pulls for bushy-plan experiments.
   *
-  * Like the reference (not in its default optimizer pass list), this is
-  * OFF by default; enable with `spark.graft.splitPipelines=true`.
+  * Like the reference (not in its default optimizer pass list), no
+  * session runs it by default: a session opts in by adding it to
+  * `spark.experimental.extraOptimizations`, and then it always rewrites.
   */
 case class SplitPipelineRule() extends Rule[LogicalPlan] with Logging {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.splitPipelines", "false").toBoolean) return plan
     val n = conf.numShufflePartitions
     plan.transformUp {
       // join whose left input is itself a join → break the chain; transformUp
@@ -39,7 +39,6 @@ case class SplitPipelineRule() extends Rule[LogicalPlan] with Logging {
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => SplitPipelineRule())
     // DuckDB-dialect fallback: native parse wins; on ParseException the
     // statement is retried through graft.sql.DuckDialect.translate with
     // the session's macros and ATTACH aliases.

@@ -30,27 +30,12 @@ import graft.operators.Joins
   *   - the select list has no `*` (DuckDB's ASOF star includes the right
   *     side's key columns — the lateral form preserves that faithfully);
   *   - every qualified column reference uses one of the two aliases.
+  *
+  * Unbalanced brackets raise `GraftSqlException`, as on every other
+  * dialect face.
   */
 object AsofRewrite {
-  import DuckDialect.{Tok, tokenize}
-
-  private def nextIdx(v: Vector[Tok], from: Int): Int = {
-    var i = from + 1
-    while (i < v.length && v(i).isWs) i += 1
-    i
-  }
-
-  private def matching(v: Vector[Tok], open: Int): Int = {
-    var d = 0; var i = open
-    while (i < v.length) {
-      if (v(i).is("(")) d += 1
-      else if (v(i).is(")")) { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    v.length - 1
-  }
-
-  private def render(toks: Seq[Tok]): String = toks.map(_.text).mkString
+  import DuckDialect.{Tok, firstTop, matching, nextIdx, render, scopeEnd, splitTop, tokenize}
 
   private val clauseKw = Set("where", "group", "having", "order", "limit",
     "offset", "union", "intersect", "except", "qualify", "window")
@@ -99,13 +84,7 @@ object AsofRewrite {
     val first = v.find(!_.isWs).map(_.word).getOrElse("")
     if (first != "select") return None
     // no star anywhere in the select list (checked below); find depth-0 FROM
-    var d = 0; var fromAt = -1; var i = 0
-    while (i < v.length && fromAt < 0) {
-      if (v(i).is("(")) d += 1
-      else if (v(i).is(")")) d -= 1
-      else if (d == 0 && v(i).kind == 4 && v(i).word == "from") fromAt = i
-      i += 1
-    }
+    val fromAt = firstTop(v)(_.word == "from")
     if (fromAt < 0) return None
     val selStart = v.indexWhere(t => t.kind == 4 && t.word == "select") + 1
     val sel = v.slice(selStart, fromAt)
@@ -127,36 +106,16 @@ object AsofRewrite {
     var onAt = afterR
     while (onAt < v.length && v(onAt).isWs) onAt += 1
     if (onAt >= v.length || v(onAt).word != "on") return None
-    // condition span to depth-0 clause keyword / comma / another join
-    var e = onAt + 1; d = 0; var condEnd = -1
-    while (e < v.length && condEnd < 0) {
-      val t = v(e)
-      if (t.is("(")) d += 1
-      else if (t.is(")")) { d -= 1; if (d < 0) condEnd = e }
-      else if (d == 0 && ((t.kind == 4 && (clauseKw(t.word) || joinKw(t.word))) ||
-        t.is(","))) condEnd = e
-      if (condEnd < 0) e += 1
-    }
-    if (condEnd >= 0 && condEnd < v.length &&
-        (v(condEnd).is(",") || v(condEnd).is(")") ||
-          (v(condEnd).kind == 4 && joinKw(v(condEnd).word)))) return None
-    val cEnd = if (condEnd < 0) v.length else condEnd
+    // condition span to depth-0 clause keyword; a comma, another join or
+    // the end of an enclosing bracket is outside the shape
+    val scope = scopeEnd(v, onAt + 1)
+    val stop = firstTop(v, onAt + 1, scope)(t =>
+      clauseKw(t.word) || joinKw(t.word) || t.is(","))
+    val cEnd = if (stop < 0) scope else stop
+    if (cEnd < v.length && !clauseKw(v(cEnd).word)) return None
     val cond = v.slice(onAt + 1, cEnd)
     val trailing = v.slice(cEnd, v.length)
-    // split at depth-0 AND
-    val conjuncts = {
-      val out = Vector.newBuilder[Vector[Tok]]
-      var cd = 0; var s0 = 0
-      for (x <- cond.indices) {
-        if (cond(x).is("(")) cd += 1
-        else if (cond(x).is(")")) cd -= 1
-        else if (cd == 0 && cond(x).kind == 4 && cond(x).word == "and") {
-          out += cond.slice(s0, x); s0 = x + 1
-        }
-      }
-      out += cond.slice(s0, cond.length)
-      out.result()
-    }
+    val conjuncts = splitTop(cond)(_.word == "and")
     // each conjunct: alias.col <cmp> alias.col
     case class Cj(lsAlias: String, lsCol: String, cmp: String,
       rsAlias: String, rsCol: String)

@@ -2,7 +2,8 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 import graft.Tables
-import DuckDialect.{tokenize, GraftSqlException, Tok}
+import DuckDialect.{GraftSqlException, Tok, firstTop, matching, nextIdx, render, splitTop,
+  tokenize}
 
 /** Schema-aware expansion of DuckDB's `COLUMNS(*)` / `COLUMNS('regex')`
   * star expressions (reference
@@ -58,34 +59,16 @@ object ColumnsStar {
   private def expandWith(schemaOf: String => Option[Seq[String]],
       sql: String, refuseOnMissing: Boolean): Option[String] = {
     val toks = tokenize(sql)
-    def nxt(i: Int): Int = {
-      var j = i + 1; while (j < toks.length && toks(j).isWs) j += 1; j
-    }
-    def matching(open: Int): Int = {
-      var d = 0; var j = open
-      while (j < toks.length) {
-        if (toks(j).is("(")) d += 1
-        else if (toks(j).is(")")) { d -= 1; if (d == 0) return j }
-        j += 1
-      }
-      refuse("unbalanced parens")
-    }
     val colsAt = toks.indices.filter(i => toks(i).word == "columns" &&
-      { val n = nxt(i); n < toks.length && toks(n).is("(") })
+      { val n = nextIdx(toks, i); n < toks.length && toks(n).is("(") })
     if (colsAt.isEmpty) return None
 
     // statement shape: SELECT <items> FROM <table> [tail clauses]
     val first = toks.indexWhere(!_.isWs)
     if (first < 0 || toks(first).word != "select") refuse("not a plain SELECT")
-    var d = 0
-    var fromIdx = -1
-    for (j <- toks.indices if fromIdx < 0) {
-      if (toks(j).is("(")) d += 1
-      else if (toks(j).is(")")) d -= 1
-      else if (d == 0 && toks(j).word == "from") fromIdx = j
-    }
+    val fromIdx = firstTop(toks)(_.word == "from")
     if (fromIdx < 0) refuse("no FROM clause")
-    val tblIdx = nxt(fromIdx)
+    val tblIdx = nextIdx(toks, fromIdx)
     if (tblIdx >= toks.length || toks(tblIdx).kind != 4)
       refuse("FROM must be a single plain table name")
     val schemaOpt = schemaOf(toks(tblIdx).word)
@@ -94,50 +77,34 @@ object ColumnsStar {
         "not resolvable in this catalog")
       return None
     }
-    val afterTbl = nxt(tblIdx)
+    val afterTbl = nextIdx(toks, tblIdx)
     val tailKw = Set("where", "group", "having", "qualify", "window",
       "order", "limit", "offset")
     if (afterTbl < toks.length && !tailKw(toks(afterTbl).word))
       refuse("joins/aliases/multiple relations are unsupported")
     if (colsAt.exists(_ > fromIdx))
       refuse("COLUMNS outside the select list")
-    val afterSelect = nxt(first)
+    val afterSelect = nextIdx(toks, first)
     if (afterSelect < toks.length &&
         (toks(afterSelect).word == "distinct" || toks(afterSelect).word == "all"))
       refuse("DISTINCT/ALL quantifiers are unsupported with COLUMNS")
     val schema = schemaOpt.get
 
-    // split the select list into depth-0 items
-    val items = scala.collection.mutable.Buffer.empty[Vector[Tok]]
-    var cur = Vector.newBuilder[Tok]
-    d = 0
-    for (j <- (first + 1) until fromIdx) {
-      val t = toks(j)
-      if (t.is("(")) d += 1
-      else if (t.is(")")) d -= 1
-      if (d == 0 && t.is(",")) { items += cur.result(); cur = Vector.newBuilder }
-      else cur += t
-    }
-    items += cur.result()
-
-    def render(ts: Seq[Tok]): String = ts.map(_.text).mkString.trim
+    val items = splitTop(toks, first + 1, fromIdx)(_.is(","))
     val expanded = items.flatMap { item =>
       // indices are local to the item vector now
       val hits = item.indices.filter { k =>
         item(k).word == "columns" && {
-          var j = k + 1; while (j < item.length && item(j).isWs) j += 1
+          val j = nextIdx(item, k)
           j < item.length && item(j).is("(")
         }
       }
-      if (hits.isEmpty) Seq(render(item))
+      if (hits.isEmpty) Seq(render(item).trim)
       else if (hits.length > 1) refuse("multiple COLUMNS in one item (zip)")
       else {
         val k = hits.head
-        var open = k + 1; while (item(open).isWs) open += 1
-        var dd = 0; var close = open
-        while ({ if (item(close).is("(")) dd += 1
-                 else if (item(close).is(")")) dd -= 1
-                 dd != 0 }) close += 1
+        val open = nextIdx(item, k)
+        val close = matching(item, open)
         val arg = item.slice(open + 1, close).filterNot(_.isWs)
         val matched: Seq[String] = arg match {
           case Vector(t) if t.is("*") => schema
@@ -149,24 +116,17 @@ object ColumnsStar {
         }
         if (matched.isEmpty) refuse("regex matched no columns")
         // an explicit alias cannot name N replicas
-        val hasAlias = {
-          var dd2 = 0
-          item.exists { t =>
-            if (t.is("(")) dd2 += 1 else if (t.is(")")) dd2 -= 1
-            dd2 == 0 && t.word == "as"
-          }
-        }
+        val hasAlias = firstTop(item)(_.word == "as") >= 0
         if (hasAlias && matched.length > 1)
           refuse("an AS alias cannot name multiple expanded columns")
         // bare = the item is nothing but the COLUMNS(...) call itself
         val bare = item.count(!_.isWs) == item.slice(k, close + 1).count(!_.isWs)
         matched.map { c =>
           val repl = item.take(k) ++ Vector(Tok(4, c)) ++ item.drop(close + 1)
-          if (bare) c else s"${render(repl)} AS $c"
+          if (bare) c else s"${render(repl).trim} AS $c"
         }
       }
     }
-    Some("SELECT " + expanded.mkString(", ") + " " +
-      toks.drop(fromIdx).map(_.text).mkString)
+    Some("SELECT " + expanded.mkString(", ") + " " + render(toks.drop(fromIdx)))
   }
 }

@@ -1,5 +1,6 @@
 package graft.sql
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 
@@ -38,6 +39,14 @@ import graft.Tables
   * QUALIFY / DISTINCT ON are rewritten recursively inside every
   * parenthesized subquery and CTE body (innermost first), so they
   * compose with joins and WITH chains.
+  *
+  * Token walking lives in one place, next to `tokenize`: `depthDelta`,
+  * `matching`, `topIndices` / `firstTop` / `splitTop`, `scopeEnd`,
+  * `nextIdx` / `prevIdx`, `render` and `identText`. Every rewrite here,
+  * and `DuckDml`, `AsofRewrite`, `ColumnsStar` and the PIVOT / UNPIVOT
+  * statements, asks them what is top level, and all three bracket
+  * families nest alike (`(` `[` `{` open, `)` `]` `}` close): the commas
+  * of a list, struct or map literal never split a call's arguments.
   *
   * Documented contracts (throw `GraftSqlException` where detectable):
   *   - QUALIFY with SELECT DISTINCT is unsupported (the injected helper
@@ -151,7 +160,100 @@ object DuckDialect {
     out.result()
   }
 
-  private def render(toks: Seq[Tok]): String = toks.map(_.text).mkString
+  // ------------------------------------------------------ token walking
+
+  private[sql] def depthDelta(t: Tok): Int =
+    if (t.kind != 6) 0
+    else if (t.text == "(" || t.text == "[" || t.text == "{") 1
+    else if (t.text == ")" || t.text == "]" || t.text == "}") -1
+    else 0
+
+  private[sql] def nextIdx(v: collection.IndexedSeq[Tok], from: Int): Int = {
+    var j = from + 1
+    while (j < v.length && v(j).isWs) j += 1
+    j
+  }
+  private[sql] def prevIdx(v: collection.IndexedSeq[Tok], from: Int): Int = {
+    var j = from - 1
+    while (j >= 0 && v(j).isWs) j -= 1
+    j
+  }
+
+  private val closer = Map("(" -> ")", "[" -> "]", "{" -> "}")
+
+  /** Index of the bracket closing the opener at `open`. */
+  private[sql] def matching(v: collection.IndexedSeq[Tok], open: Int): Int = {
+    val close = closer.getOrElse(v(open).text, "")
+    var d = 0; var j = open
+    while (j < v.length) {
+      d += depthDelta(v(j))
+      if (d == 0) {
+        if (v(j).is(close)) return j
+        j = v.length
+      }
+      j += 1
+    }
+    throw new GraftSqlException(
+      if (close == ")") "unbalanced parentheses in SQL" else s"unbalanced ${v(open).text} $close in SQL")
+  }
+
+  /** Calls `f` on each index in [from, until) whose token is not a
+    * bracket and sits at depth 0, counted from `from`; stops early when
+    * `f` returns false. */
+  private def walkTop(v: collection.IndexedSeq[Tok], from: Int, until: Int)(f: Int => Boolean): Unit = {
+    var d = 0; var i = from
+    val end = math.min(until, v.length)
+    while (i < end) {
+      val delta = depthDelta(v(i))
+      d += delta
+      if (d == 0 && delta == 0 && !f(i)) return
+      i += 1
+    }
+  }
+
+  /** The depth-0 indices in [from, until) whose token satisfies `p`. */
+  private[sql] def topIndices(v: collection.IndexedSeq[Tok], from: Int = 0,
+      until: Int = Int.MaxValue)(p: Tok => Boolean): Vector[Int] = {
+    val out = Vector.newBuilder[Int]
+    walkTop(v, from, until) { i => if (p(v(i))) out += i; true }
+    out.result()
+  }
+
+  /** The first of [[topIndices]], or -1. */
+  private[sql] def firstTop(v: collection.IndexedSeq[Tok], from: Int = 0,
+      until: Int = Int.MaxValue)(p: Tok => Boolean): Int = {
+    var at = -1
+    walkTop(v, from, until) { i => if (p(v(i))) at = i; at < 0 }
+    at
+  }
+
+  /** [from, until) cut at its depth-0 tokens satisfying `p`, which are
+    * dropped; an empty span yields one empty piece. */
+  private[sql] def splitTop(v: Vector[Tok], from: Int = 0,
+      until: Int = Int.MaxValue)(p: Tok => Boolean): Vector[Vector[Tok]] = {
+    val end = math.min(until, v.length)
+    val cuts = topIndices(v, from, end)(p)
+    ((from - 1) +: cuts).zip(cuts :+ end).map { case (a, b) => v.slice(a + 1, b) }
+  }
+
+  /** Index of the closer that ends the bracket scope `from` sits in, or
+    * `v.length` at the top level. */
+  private[sql] def scopeEnd(v: collection.IndexedSeq[Tok], from: Int): Int = {
+    var d = 0; var i = from
+    while (i < v.length) {
+      d += depthDelta(v(i))
+      if (d < 0) return i
+      i += 1
+    }
+    v.length
+  }
+
+  private[sql] def render(toks: Seq[Tok]): String = toks.map(_.text).mkString
+
+  /** An identifier token's name: quotes stripped from a quoted one. */
+  private[sql] def identText(t: Tok): String =
+    if (t.kind == 3 && t.text.length >= 2) t.text.substring(1, t.text.length - 1)
+    else t.text
 
   /** FINAL render only (the single exit of [[translate]]): convert each
     * string-literal token from DuckDB convention to Spark convention.
@@ -167,28 +269,6 @@ object DuckDialect {
   private def renderFinal(toks: Seq[Tok]): String = toks.map { t =>
     if (t.kind == 2) t.text.replace("\\", "\\\\") else t.text
   }.mkString
-
-  private def nextIdx(toks: Vector[Tok], from: Int): Int = {
-    var j = from + 1
-    while (j < toks.length && toks(j).isWs) j += 1
-    j
-  }
-  private def prevIdx(toks: Vector[Tok], from: Int): Int = {
-    var j = from - 1
-    while (j >= 0 && toks(j).isWs) j -= 1
-    j
-  }
-
-  /** Index of the `)` matching the `(` at `open` (same vector). */
-  private def matching(toks: Vector[Tok], open: Int): Int = {
-    var d = 0; var j = open
-    while (j < toks.length) {
-      if (toks(j).is("(")) d += 1
-      else if (toks(j).is(")")) { d -= 1; if (d == 0) return j }
-      j += 1
-    }
-    throw new GraftSqlException("unbalanced parentheses in SQL")
-  }
 
   // ------------------------------------------------------- flat rewrites
 
@@ -360,20 +440,6 @@ object DuckDialect {
     *     stays untranslated.
     */
   private def rewriteListFns(toks: Vector[Tok]): Vector[Tok] = {
-    // depth-1 comma-split argument spans of the call opening at `open`
-    def argSpans(v: Vector[Tok], open: Int, close: Int): Vector[Vector[Tok]] = {
-      val out = Vector.newBuilder[Vector[Tok]]
-      var d = 0; var s = open + 1
-      for (j <- open to close) {
-        val t = v(j)
-        if (t.is("(") || t.is("[") || t.is("{")) d += 1
-        else if (t.is(")") || t.is("]") || t.is("}")) {
-          d -= 1; if (d == 0) { out += v.slice(s, j) }
-        }
-        else if (d == 1 && t.is(",")) { out += v.slice(s, j); s = j + 1 }
-      }
-      out.result()
-    }
     def intLit(span: Vector[Tok]): Option[Long] =
       span.filterNot(_.isWs) match {
         case Vector(n) if n.kind == 5 && n.text.forall(_.isDigit) =>
@@ -393,8 +459,8 @@ object DuckDialect {
           "list_reverse_sort", "array_to_string")(t.word)) {
         val open = nextIdx(v, i)
         val close = matching(v, open)
-        val args = argSpans(v, open, close).map(a => render(a).trim)
-        val spans = argSpans(v, open, close)
+        val spans = splitTop(v, open + 1, close)(_.is(","))
+        val args = spans.map(a => render(a).trim)
         val repl: Option[String] = t.word match {
           case "list_slice" if args.length == 3 =>
             (intLit(spans(1)), intLit(spans(2))) match {
@@ -450,7 +516,7 @@ object DuckDialect {
   }
 
   private def rewriteFunctions(toks: Vector[Tok]): Vector[Tok] = {
-    val out = toks.toBuffer
+    val out = ArrayBuffer.from(toks)
     var i = 0
     while (i < out.length) {
       val t = out(i)
@@ -460,28 +526,21 @@ object DuckDialect {
       // live column name in the documents fixture, and DuckDB users cast
       // with ::VARCHAR overwhelmingly.)
       if (t.kind == 4 && t.word == "varchar" &&
-          !(nextIdx(out.toVector, i) < out.length && out(nextIdx(out.toVector, i)).is("("))) {
+          !(nextIdx(out, i) < out.length && out(nextIdx(out, i)).is("("))) {
         out(i) = word("STRING")
       } else if (t.kind == 4 && fnRename.contains(t.word)) {
-        val j = nextIdx(out.toVector, i)
+        val j = nextIdx(out, i)
         if (j < out.length && out(j).is("(")) {
           val orig = t.word
           out(i) = word(fnRename(orig))
           if (plainSepFns(orig)) {
             // regex-escape a literal separator (second argument)
-            val v = out.toVector
-            val close = matching(v, j)
-            var d = 0; var k = j; var commaAt = -1
-            while (k < close && commaAt < 0) {
-              if (v(k).is("(")) d += 1
-              else if (v(k).is(")")) d -= 1
-              else if (v(k).is(",") && d == 1) commaAt = k
-              k += 1
-            }
+            val close = matching(out, j)
+            val commaAt = firstTop(out, j + 1, close)(_.is(","))
             if (commaAt >= 0) {
-              val a = nextIdx(v, commaAt)
-              if (a < close && v(a).kind == 2 && nextIdx(v, a) == close)
-                out(a) = Tok(2, regexEscapeLiteral(v(a).text))
+              val a = nextIdx(out, commaAt)
+              if (a < close && out(a).kind == 2 && nextIdx(out, a) == close)
+                out(a) = Tok(2, regexEscapeLiteral(out(a).text))
             }
           }
         }
@@ -553,15 +612,7 @@ object DuckDialect {
         val open = nextIdx(v, i)
         if (open < v.length && v(open).is("(")) {
           val close = matching(v, open)
-          // top-level commas, in order
-          var d = 0; val commasB = Vector.newBuilder[Int]; var k = open
-          while (k < close) {
-            if (v(k).is("(")) d += 1
-            else if (v(k).is(")")) d -= 1
-            else if (v(k).is(",") && d == 1) commasB += k
-            k += 1
-          }
-          val cs = commasB.result()
+          val cs = topIndices(v, open + 1, close)(_.is(","))
           // index of an argument span that is exactly ONE string literal
           def singleLit(afterTok: Int, endTok: Int): Int = {
             val a = nextIdx(v, afterTok)
@@ -645,17 +696,9 @@ object DuckDialect {
             s"macro expansion exceeded 100 substitutions at '${t.text}' — " +
               "cyclic macro definitions?")
         val close = matching(toks, open)
-        // split top-level args
-        val b = Vector.newBuilder[Vector[Tok]]
-        var d = 0; var s = open + 1; var j = open + 1
-        while (j < close) {
-          if (toks(j).is("(") || toks(j).is("[")) d += 1
-          else if (toks(j).is(")") || toks(j).is("]")) d -= 1
-          else if (d == 0 && toks(j).is(",")) { b += toks.slice(s, j); s = j + 1 }
-          j += 1
-        }
-        if (close > open + 1) b += toks.slice(s, close)
-        val rawArgs = b.result()
+        val rawArgs =
+          if (close > open + 1) splitTop(toks, open + 1, close)(_.is(","))
+          else Vector.empty
         if (rawArgs.exists(_.forall(_.isWs)))
           throw new GraftSqlException(
             s"empty argument in macro call '${t.text}'")
@@ -820,47 +863,25 @@ object DuckDialect {
     * Nested literals rewrite naturally — the loop re-examines inner
     * braces after the outer rewrite. */
   private def rewriteBraces(toks: Vector[Tok]): Vector[Tok] = {
-    val out = toks.toBuffer
+    val out = ArrayBuffer.from(toks)
     var i = 0
     while (i < out.length) {
       if (out(i).is("{")) {
-        // matching close brace (nesting over every bracket family)
-        var d = 0; var j = i; var close = -1
-        while (j < out.length && close < 0) {
-          val tj = out(j)
-          if (tj.is("{") || tj.is("(") || tj.is("[")) d += 1
-          else if (tj.is("}") || tj.is(")") || tj.is("]")) { d -= 1; if (d == 0) close = j }
-          j += 1
-        }
-        if (close < 0 || !out(close).is("}"))
-          throw new GraftSqlException("unbalanced { } in SQL")
-        // validate + rewrite depth-1 `key : value` items
-        var k = i + 1; var depth = 1; var expectKey = true
-        while (k < close) {
-          val tk = out(k)
-          if (tk.is("{") || tk.is("(") || tk.is("[")) depth += 1
-          else if (tk.is("}") || tk.is(")") || tk.is("]")) depth -= 1
-          else if (depth == 1 && expectKey && !tk.isWs) {
-            if (tk.kind != 2)
+        val close = matching(out, i)
+        // validate + rewrite the top-level `key : value` items
+        val cuts = (i +: topIndices(out, i + 1, close)(_.is(","))) :+ close
+        cuts.indices.init.foreach { c =>
+          val key = nextIdx(out, cuts(c))
+          if (key < cuts(c + 1)) {
+            if (out(key).kind != 2)
               throw new GraftSqlException(
                 "struct/map literal keys must be string literals, got " +
-                  s"`${tk.text}` — write {'key': value}")
-            expectKey = false
-          } else if (depth == 1 && tk.is(":")) {
-            out(k) = sym(",") // key : value → key , value
-            // skip the value until the next depth-1 comma
-            var v = k + 1; var dv = 1
-            while (v < close && !(dv == 1 && out(v).is(","))) {
-              if (out(v).is("{") || out(v).is("(") || out(v).is("[")) dv += 1
-              else if (out(v).is("}") || out(v).is(")") || out(v).is("]")) dv -= 1
-              v += 1
-            }
-            k = v // lands on the separating comma (or close)
-            expectKey = true
+                  s"`${out(key).text}` — write {'key': value}")
+            val colon = firstTop(out, key + 1, cuts(c + 1))(_.is(":"))
+            if (colon >= 0) out(colon) = sym(",") // key : value → key , value
           }
-          k += 1
         }
-        val p = prevIdx(out.toVector, i)
+        val p = prevIdx(out, i)
         if (p >= 0 && out(p).word == "map") {
           out(close) = sym(")")
           out(i) = sym("(")
@@ -908,17 +929,7 @@ object DuckDialect {
     *    access — key-based, identical semantics on both engines).
     */
   private def rewriteBrackets(toks: Vector[Tok]): Vector[Tok] = {
-    val out = toks.toBuffer
-    // index of the `]` matching the `[` at `open`
-    def closing(open: Int): Int = {
-      var d = 0; var j = open
-      while (j < out.length) {
-        if (out(j).is("[")) d += 1
-        else if (out(j).is("]")) { d -= 1; if (d == 0) return j }
-        j += 1
-      }
-      throw new GraftSqlException("unbalanced [ ] in SQL")
-    }
+    val out = ArrayBuffer.from(toks)
     var i = 0
     while (i < out.length) {
       if (out(i).is("[")) {
@@ -931,7 +942,7 @@ object DuckDialect {
         val isSubscript = !isLiteral && p >= 0 &&
           (out(p).kind == 3 || out(p).kind == 4 || out(p).is(")") || out(p).is("]"))
         if (isLiteral) {
-          val close = closing(i)
+          val close = matching(out, i)
           // list COMPREHENSION `[expr FOR x IN list (IF pred)?]` — the
           // literal single-variable form translates structurally
           // (reference src/parser/transform/expression/ parses it into
@@ -942,14 +953,7 @@ object DuckDialect {
           // Nested comprehensions in e/l rewrite naturally on later
           // iterations (the scanner does not advance past the
           // replacement). Non-literal variable forms refuse loudly.
-          var d2 = 0; var k = i
-          var kFor = -1
-          while (k < close && kFor < 0) {
-            if (out(k).is("[") || out(k).is("(")) d2 += 1
-            else if (out(k).is("]") || out(k).is(")")) d2 -= 1
-            else if (d2 == 1 && out(k).word == "for") kFor = k
-            k += 1
-          }
+          val kFor = firstTop(out, i + 1, close)(_.word == "for")
           if (kFor >= 0) {
             val refusal = new GraftSqlException(
               "only single-variable list comprehensions `[e FOR x IN l (IF p)?]` " +
@@ -959,16 +963,10 @@ object DuckDialect {
                 exprLeadKeywords(v(varIdx).word)) throw refusal
             val inIdx = nextIdx(v, varIdx)
             if (inIdx >= close || v(inIdx).word != "in") throw refusal
-            // depth-1 IF / second FOR between the list expr and `]`
-            var d3 = 0; var m = inIdx + 1
-            var kIf = -1
-            while (m < close) {
-              if (v(m).is("[") || v(m).is("(")) d3 += 1
-              else if (v(m).is("]") || v(m).is(")")) d3 -= 1
-              else if (d3 == 0 && v(m).word == "for") throw refusal
-              else if (d3 == 0 && kIf < 0 && v(m).word == "if") kIf = m
-              m += 1
-            }
+            // top-level IF / second FOR between the list expr and `]`
+            val tail = topIndices(v, inIdx + 1, close)(t => t.word == "for" || t.word == "if")
+            if (tail.exists(v(_).word == "for")) throw refusal
+            val kIf = tail.headOption.getOrElse(-1)
             def trimWs(ts: Vector[Tok]): Vector[Tok] =
               ts.dropWhile(_.isWs).reverse.dropWhile(_.isWs).reverse
             val exprToks = trimWs(v.slice(i + 1, kFor))
@@ -1004,7 +1002,7 @@ object DuckDialect {
             // the next iteration re-examines from the constructor onward.
           }
         } else if (isSubscript) {
-          val close = closing(i)
+          val close = matching(out, i)
           val inner = v.slice(i + 1, close).filterNot(_.isWs)
           val isMapKey = inner.length == 1 && inner.head.kind == 2
           if (!isMapKey)
@@ -1051,16 +1049,7 @@ object DuckDialect {
         if (open >= v.length || !v(open).is("("))
           throw new GraftSqlException("* REPLACE must be followed by (expr AS col, ...)")
         val close = matching(v, open)
-        // split items at depth-1 commas
-        val items = Vector.newBuilder[Vector[Tok]]
-        var d = 0; var s = open + 1; var k = open
-        while (k <= close) {
-          if (v(k).is("(")) d += 1
-          else if (v(k).is(")")) { d -= 1; if (d == 0) { items += v.slice(s, k) } }
-          else if (v(k).is(",") && d == 1) { items += v.slice(s, k); s = k + 1 }
-          k += 1
-        }
-        val parsed = items.result().map { item =>
+        val parsed = splitTop(v, open + 1, close)(_.is(",")).map { item =>
           val asAt = item.lastIndexWhere(x => x.kind == 4 && x.word == "as")
           if (asAt < 0)
             throw new GraftSqlException("* REPLACE items must be `expr AS col`")
@@ -1198,42 +1187,16 @@ object DuckDialect {
         val term = Set("where", "group", "having", "order", "limit", "offset",
           "union", "intersect", "except", "qualify", "window",
           "join", "inner", "left", "right", "full", "cross", "asof")
-        var d = 0; var e = onAt + 1; var stop = -1
-        while (e < v.length && stop < 0) {
-          val t = v(e)
-          if (t.is("(")) d += 1
-          else if (t.is(")")) { d -= 1; if (d < 0) stop = e }
-          else if (d == 0 && ((t.kind == 4 && term(t.word)) || t.is(","))) stop = e
-          if (stop < 0) e += 1
-        }
-        val condEnd = if (stop < 0) v.length else stop
+        val scope = scopeEnd(v, onAt + 1)
+        val stop = firstTop(v, onAt + 1, scope)(t => term(t.word) || t.is(","))
+        val condEnd = if (stop < 0) scope else stop
         val cond = v.slice(onAt + 1, condEnd)
         // locate THE inequality conjunct (split at depth-0 ANDs)
-        val conjuncts = {
-          val out = Vector.newBuilder[Vector[Tok]]
-          var cd = 0; var s = 0
-          for (x <- cond.indices) {
-            if (cond(x).is("(")) cd += 1
-            else if (cond(x).is(")")) cd -= 1
-            else if (cd == 0 && cond(x).kind == 4 && cond(x).word == "and") {
-              out += cond.slice(s, x); s = x + 1
-            }
-          }
-          out += cond.slice(s, cond.length)
-          out.result()
-        }
         val ineqOps = Set(">=", "<=", ">", "<")
-        def splitIneq(c: Vector[Tok]): Option[(Vector[Tok], String, Vector[Tok])] = {
-          var cd = 0
-          for (x <- c.indices) {
-            if (c(x).is("(")) cd += 1
-            else if (c(x).is(")")) cd -= 1
-            else if (cd == 0 && c(x).kind == 6 && ineqOps(c(x).text))
-              return Some((c.take(x), c(x).text, c.drop(x + 1)))
-          }
-          None
+        val ineqs = splitTop(cond)(_.word == "and").flatMap { c =>
+          val x = firstTop(c)(t => t.kind == 6 && ineqOps(t.text))
+          Option.when(x >= 0)((c.take(x), c(x).text, c.drop(x + 1)))
         }
-        val ineqs = conjuncts.flatMap(splitIneq(_).toSeq)
         if (ineqs.length != 1)
           throw new GraftSqlException(
             s"ASOF JOIN ON must contain exactly one inequality conjunct (found ${ineqs.length})")
@@ -1298,25 +1261,8 @@ object DuckDialect {
     * WINDOW/QUALIFY tail (their evaluation order vs the zip is not a
     * text-level rewrite). Single-unnest lists pass through untouched
     * (the explode rename covers them). */
-  private def rewriteUnnestZip(toks: Vector[Tok]): Vector[Tok] = {
-    // recurse into parenthesized blocks first (subqueries, CTE bodies),
-    // then rewrite this block's own select list
-    val rec = {
-      val out = Vector.newBuilder[Tok]
-      var i = 0
-      while (i < toks.length) {
-        if (toks(i).is("(")) {
-          val close = matching(toks, i)
-          out += sym("(")
-          out ++= rewriteUnnestZip(toks.slice(i + 1, close))
-          out += sym(")")
-          i = close + 1
-        } else { out += toks(i); i += 1 }
-      }
-      out.result()
-    }
-    rewriteUnnestZipBlock(rec)
-  }
+  private def rewriteUnnestZip(toks: Vector[Tok]): Vector[Tok] =
+    rewriteUnnestZipBlock(mapParens(toks)(rewriteUnnestZip))
 
   private def rewriteUnnestZipBlock(toks: Vector[Tok]): Vector[Tok] = {
     val first = toks.indexWhere(!_.isWs)
@@ -1327,20 +1273,7 @@ object DuckDialect {
       })
     val fromIdx = firstDepth0(toks, first + 1, Set("from"))
     val listEnd = if (fromIdx < 0) toks.length else fromIdx
-    // split the depth-0 select list (parens AND bracket literals nest)
-    val items = {
-      val b = Vector.newBuilder[Vector[Tok]]
-      var d = 0; var s = first + 1; var j = first + 1
-      while (j < listEnd) {
-        val t = toks(j)
-        if (t.is("(") || t.is("[")) d += 1
-        else if (t.is(")") || t.is("]")) d -= 1
-        else if (d == 0 && t.is(",")) { b += toks.slice(s, j); s = j + 1 }
-        j += 1
-      }
-      b += toks.slice(s, listEnd)
-      b.result()
-    }
+    val items = splitTop(toks, first + 1, listEnd)(_.is(","))
     val bearing = items.count(hasUnnestCall)
     if (bearing < 2) return toks
     def refuse(msg: String): Nothing = throw new GraftSqlException(
@@ -1407,30 +1340,25 @@ object DuckDialect {
 
   // ------------------------------------------------- block-scoped rewrites
 
-  /** Depth-0 positions (relative to `toks`) of word `w` in the block. */
-  private def depth0Word(toks: Vector[Tok], w: String): Vector[Int] = {
-    val out = Vector.newBuilder[Int]
-    var d = 0; var i = 0
+  /** `toks` with the inside of each top-level parenthesized span
+    * replaced by `f` of it (the block rewrites recurse through this). */
+  private def mapParens(toks: Vector[Tok])(f: Vector[Tok] => Vector[Tok]): Vector[Tok] = {
+    val out = Vector.newBuilder[Tok]
+    var i = 0
     while (i < toks.length) {
-      if (toks(i).is("(")) d += 1
-      else if (toks(i).is(")")) d -= 1
-      else if (d == 0 && toks(i).kind == 4 && toks(i).word == w) out += i
-      i += 1
+      if (toks(i).is("(")) {
+        val close = matching(toks, i)
+        out += sym("("); out ++= f(toks.slice(i + 1, close)); out += sym(")")
+        i = close + 1
+      } else { out += toks(i); i += 1 }
     }
     out.result()
   }
 
-  /** First depth-0 occurrence of any of `ws` at or after `from`; -1 if none. */
-  private def firstDepth0(toks: Vector[Tok], from: Int, words: Set[String]): Int = {
-    var d = 0; var i = 0
-    while (i < toks.length) {
-      if (toks(i).is("(")) d += 1
-      else if (toks(i).is(")")) d -= 1
-      else if (i >= from && d == 0 && toks(i).kind == 4 && words(toks(i).word)) return i
-      i += 1
-    }
-    -1
-  }
+  /** First depth-0 occurrence of any of `words` at or after the depth-0
+    * index `from`; -1 if none. */
+  private def firstDepth0(toks: Vector[Tok], from: Int, words: Set[String]): Int =
+    firstTop(toks, from)(t => words(t.word))
 
   /** QUALIFY → subquery + WHERE over a projected predicate column. */
   private def rewriteQualify(block: Vector[Tok]): Vector[Tok] = {
@@ -1439,7 +1367,7 @@ object DuckDialect {
     // QUALIFY binds to ITS set-operation branch: rewrite from the LAST
     // depth-0 SELECT before it, so earlier UNION/INTERSECT/EXCEPT
     // branches pass through untouched in the prefix.
-    val selAt = depth0Word(block, "select").filter(_ < qAt).lastOption.getOrElse(-1)
+    val selAt = topIndices(block, 0, qAt)(_.word == "select").lastOption.getOrElse(-1)
     if (selAt < 0)
       throw new GraftSqlException("QUALIFY outside a SELECT block")
     val afterSel = nextIdx(block, selAt)
@@ -1484,30 +1412,13 @@ object DuckDialect {
       // predicate before projecting it. One level: aliases defined in
       // terms of OTHER select aliases stay unresolved (Spark then reports
       // the unresolved column, which is loud, not silent).
-      val items = {
-        val out = Vector.newBuilder[Vector[Tok]]
-        var d = 0; var s = 0
-        for (x <- head.indices) {
-          if (head(x).is("(")) d += 1
-          else if (head(x).is(")")) d -= 1
-          else if (d == 0 && head(x).is(",")) { out += head.slice(s, x); s = x + 1 }
-        }
-        out += head.slice(s, head.length)
-        out.result()
-      }
-      val aliasDef: Map[String, Vector[Tok]] = items.flatMap { item =>
-        var d = 0; var asAt = -1
-        for (x <- item.indices) {
-          if (item(x).is("(")) d += 1
-          else if (item(x).is(")")) d -= 1
-          else if (d == 0 && item(x).kind == 4 && item(x).word == "as") asAt = x
-        }
-        if (asAt < 0) None
-        else item.drop(asAt + 1).filterNot(_.isWs) match {
-          case Vector(a) if a.kind == 4 => Some(a.word -> item.take(asAt))
-          case Vector(a) if a.kind == 3 =>
-            Some(a.text.substring(1, a.text.length - 1).toLowerCase -> item.take(asAt))
-          case _ => None
+      val aliasDef: Map[String, Vector[Tok]] = splitTop(head)(_.is(",")).flatMap { item =>
+        topIndices(item)(_.word == "as").lastOption.flatMap { asAt =>
+          item.drop(asAt + 1).filterNot(_.isWs) match {
+            case Vector(a) if a.kind == 4 => Some(a.word -> item.take(asAt))
+            case Vector(a) if a.kind == 3 => Some(identText(a).toLowerCase -> item.take(asAt))
+            case _ => None
+          }
         }
       }.toMap
       val raw = block.slice(qAt + 1, tailAt)
@@ -1518,7 +1429,7 @@ object DuckDialect {
           val t = raw(x)
           val name =
             if (t.kind == 4) t.word
-            else if (t.kind == 3) t.text.substring(1, t.text.length - 1).toLowerCase
+            else if (t.kind == 3) identText(t).toLowerCase
             else ""
           val prev = prevIdx(raw, x)
           val nxt = nextIdx(raw, x)
@@ -1569,7 +1480,7 @@ object DuckDialect {
       throw new GraftSqlException("DISTINCT ON must be followed by (exprs)")
     val close = matching(block, open)
     val keys = block.slice(open + 1, close)
-    val fromAt = firstDepth0(block, close, Set("from"))
+    val fromAt = firstDepth0(block, close + 1, Set("from"))
     if (fromAt < 0) throw new GraftSqlException("DISTINCT ON requires a FROM clause")
     val orderAt = firstDepth0(block, fromAt, Set("order"))
     if (orderAt < 0)
@@ -1646,7 +1557,7 @@ object DuckDialect {
     *     restores DuckDB's "range" column name. Window `RANGE BETWEEN`
     *     and a column named range are untouched (no `(` follows). */
   /** Is position `i` a FROM-clause (table) position? Scans BACKWARD at
-    * the same paren depth for the nearest clause keyword: `from`/`join`
+    * the same bracket depth for the nearest clause keyword: `from`/`join`
     * → table position; `select`/`where`/`on`/… or an enclosing `(`
     * (function-arg or subquery-start) → expression position. This is
     * what makes a comma disambiguate correctly: `FROM a, f(...)` is a
@@ -1659,11 +1570,9 @@ object DuckDialect {
     var depth = 0
     while (k >= 0) {
       val t = v(k)
-      if (t.is(")")) depth += 1
-      else if (t.is("(")) {
-        if (depth == 0) return false
-        depth -= 1
-      } else if (depth == 0 && t.kind == 4) {
+      depth -= depthDelta(t)
+      if (depth < 0) return false
+      else if (depth == 0 && t.kind == 4) {
         t.word match {
           case "from" | "join" | "lateral" => return true
           case "select" | "where" | "group" | "having" | "qualify" |
@@ -2063,11 +1972,11 @@ object DuckDialect {
         // has an identifier there instead.
         var d = 0; var k = p1
         while (k >= 0) {
-          if (v(k).is(")")) d += 1
-          else if (v(k).is("(")) { d -= 1; if (d == 0) {
+          d -= depthDelta(v(k))
+          if (d == 0) {
             val pp = prevIdx(v, k)
             return pp >= 0 && v(pp).word == "as"
-          } }
+          }
           k -= 1
         }
         return false
@@ -2095,31 +2004,17 @@ object DuckDialect {
       var i = 0
       while (i < v.length && !changed) {
         if (v(i).kind == 4 && v(i).word == "from" && isQueryStart(v, i)) {
-          // scope: up to the ')' closing the current depth, or stream end
-          var scopeEnd = v.length
-          var d = 0; var k = i
-          while (k < scopeEnd) {
-            if (v(k).is("(")) d += 1
-            else if (v(k).is(")")) { if (d == 0) scopeEnd = k else d -= 1 }
-            k += 1
+          // scope: up to the closer of the current depth, or stream end;
+          // the from-clause and the select-list after it each end at the
+          // next depth-0 clause keyword in scope
+          val scope = scopeEnd(v, i)
+          def clauseAt(from: Int): Int = {
+            val k = firstTop(v, from, scope)(t => clauseKw(t.word))
+            if (k < 0) scope else k
           }
-          // from-clause ends at the first depth-0 clause keyword in scope
-          var j = i + 1; d = 0; var fromEnd = scopeEnd
-          while (j < scopeEnd && fromEnd == scopeEnd) {
-            if (v(j).is("(")) d += 1
-            else if (v(j).is(")")) d -= 1
-            else if (d == 0 && clauseKw(v(j).word)) fromEnd = j
-            j += 1
-          }
-          if (fromEnd < scopeEnd && v(fromEnd).word == "select") {
-            // select-list ends at the next depth-0 clause keyword
-            var m = fromEnd + 1; d = 0; var listEnd = scopeEnd
-            while (m < scopeEnd && listEnd == scopeEnd) {
-              if (v(m).is("(")) d += 1
-              else if (v(m).is(")")) d -= 1
-              else if (d == 0 && clauseKw(v(m).word)) listEnd = m
-              m += 1
-            }
+          val fromEnd = clauseAt(i + 1)
+          if (fromEnd < scope && v(fromEnd).word == "select") {
+            val listEnd = clauseAt(fromEnd + 1)
             v = v.take(i) ++ (v.slice(fromEnd, listEnd) :+ ws(" ")) ++
               v.slice(i, fromEnd) ++ v.slice(listEnd, v.length)
           } else {
@@ -2136,60 +2031,28 @@ object DuckDialect {
 
   private def rewriteSetOpByName(toks: Vector[Tok]): Vector[Tok] = {
     // recurse into parenthesized sub-blocks first (subqueries, CTE bodies)
-    val rec = {
-      val out = Vector.newBuilder[Tok]
-      var i = 0
-      while (i < toks.length) {
-        if (toks(i).is("(")) {
-          val close = matching(toks, i)
-          out += sym("(")
-          out ++= rewriteSetOpByName(toks.slice(i + 1, close))
-          out += sym(")")
-          i = close + 1
-        } else { out += toks(i); i += 1 }
-      }
-      out.result()
-    }
+    val rec = mapParens(toks)(rewriteSetOpByName)
     // depth-0 `union|intersect|except [all] by name` spans [start, end]
     final case class ByNameOp(start: Int, end: Int, all: Boolean, kind: String)
-    val opsB = Vector.newBuilder[ByNameOp]
-    var d = 0; var i = 0
-    while (i < rec.length) {
-      val t = rec(i)
-      if (t.is("(")) d += 1
-      else if (t.is(")")) d -= 1
-      else if (d == 0 && (t.word == "union" || t.word == "intersect" ||
-          t.word == "except")) {
-        var j = nextIdx(rec, i)
-        val all = j < rec.length && rec(j).word == "all"
-        if (all) j = nextIdx(rec, j)
-        if (j < rec.length && rec(j).word == "by") {
-          val k = nextIdx(rec, j)
-          if (k < rec.length && rec(k).word == "name")
-            opsB += ByNameOp(i, k, all, t.word)
-        }
-      }
-      i += 1
+    val setOps = Set("union", "intersect", "except")
+    val setOpAt = topIndices(rec)(t => setOps(t.word))
+    val ops = setOpAt.flatMap { i =>
+      var j = nextIdx(rec, i)
+      val all = j < rec.length && rec(j).word == "all"
+      if (all) j = nextIdx(rec, j)
+      val k = if (j < rec.length && rec(j).word == "by") nextIdx(rec, j) else rec.length
+      Option.when(k < rec.length && rec(k).word == "name")(
+        ByNameOp(i, k, all, rec(i).word))
     }
-    val ops = opsB.result()
     if (ops.isEmpty) return rec
     val opName = ops.head.kind.toUpperCase + " BY NAME"
     def refuse(msg: String): Nothing = throw new GraftSqlException(
       s"$opName: $msg — or align the columns on the DataFrame API " +
         "(unionByName / intersect / except after a name-ordered select)")
     // chains mixing BY NAME with positional set ops: refuse
-    val opIdx = ops.flatMap(o => o.start to o.end).toSet
-    d = 0; i = 0
-    while (i < rec.length) {
-      val t = rec(i)
-      if (t.is("(")) d += 1
-      else if (t.is(")")) d -= 1
-      else if (d == 0 && !opIdx(i) &&
-          (t.word == "union" || t.word == "intersect" || t.word == "except"))
-        refuse("mixing BY NAME with positional set operations in one chain " +
-          "is unsupported")
-      i += 1
-    }
+    if (setOpAt.length != ops.length)
+      refuse("mixing BY NAME with positional set operations in one chain " +
+        "is unsupported")
     // a leading WITH clause scopes over the whole set op — keep it outside
     val idx0 = rec.indexWhere(!_.isWs)
     var bodyStart = 0
@@ -2225,19 +2088,13 @@ object DuckDialect {
     def itemName(item: Vector[Tok]): (String, String) = {
       val nonWs = item.filterNot(_.isWs)
       if (nonWs.isEmpty) refuse("empty select item")
-      var dd = 0
-      nonWs.foreach { t =>
-        if (t.is("(")) dd += 1 else if (t.is(")")) dd -= 1
-        else if (dd == 0 && t.is("*"))
-          refuse("`SELECT *` branches are unsupported (the translator " +
-            "cannot know the column names) — list the columns explicitly")
-      }
+      if (firstTop(nonWs)(_.is("*")) >= 0)
+        refuse("`SELECT *` branches are unsupported (the translator " +
+          "cannot know the column names) — list the columns explicitly")
       def nameOf(t: Tok): (String, String) =
-        if (t.kind == 3) {
-          val inner = t.text.substring(1, t.text.length - 1)
-          (inner.toLowerCase, s"`$inner`")
-        } else (t.word, t.text)
-      val asPos = depth0Word(item, "as")
+        if (t.kind == 3) (identText(t).toLowerCase, s"`${identText(t)}`")
+        else (t.word, t.text)
+      val asPos = topIndices(item)(_.word == "as")
       if (asPos.nonEmpty) {
         val n = nextIdx(item, asPos.last)
         if (n < item.length && (item(n).kind == 3 || item(n).kind == 4))
@@ -2273,18 +2130,7 @@ object DuckDialect {
       val listEndRaw = firstDepth0(b, listFrom, Set("from", "where", "group",
         "order", "having", "limit", "qualify", "window"))
       val listEnd = if (listEndRaw < 0) b.length else listEndRaw
-      // split the select list on depth-0 commas
-      val items = Vector.newBuilder[Vector[Tok]]
-      var dd = 0; var s = listFrom; var j = listFrom
-      while (j < listEnd) {
-        val t = b(j)
-        if (t.is("(") || t.is("[")) dd += 1
-        else if (t.is(")") || t.is("]")) dd -= 1
-        else if (dd == 0 && t.is(",")) { items += b.slice(s, j); s = j + 1 }
-        j += 1
-      }
-      items += b.slice(s, listEnd)
-      items.result().map(itemName)
+      splitTop(b, listFrom, listEnd)(_.is(",")).map(itemName)
     }
     // Precedence-aware tree emission (the libpg_query grammar the
     // reference parses with: INTERSECT binds tighter than UNION/EXCEPT,
@@ -2341,23 +2187,8 @@ object DuckDialect {
       " " + render(tailToks))
   }
 
-  private def rewriteBlocks(toks: Vector[Tok]): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    while (i < toks.length) {
-      if (toks(i).is("(")) {
-        val close = matching(toks, i)
-        out += sym("(")
-        out ++= rewriteBlocks(toks.slice(i + 1, close))
-        out += sym(")")
-        i = close + 1
-      } else {
-        out += toks(i)
-        i += 1
-      }
-    }
-    rewriteDistinctOn(rewriteQualify(out.result()))
-  }
+  private def rewriteBlocks(toks: Vector[Tok]): Vector[Tok] =
+    rewriteDistinctOn(rewriteQualify(mapParens(toks)(rewriteBlocks)))
 
   /** DuckDB double-quoted identifiers → Spark backticks. In DuckDB `"x"`
     * is ALWAYS an identifier (strings are single-quoted, reference
@@ -2453,12 +2284,8 @@ object DuckDialect {
     if (!(last.is("%") || last.word == "percent")) return None
     val num = nw(nw.length - 2)._1
     val (lim, limIdx) = nw(nw.length - 3)
-    if (num.kind != 5 || lim.word != "limit") return None
-    var d = 0
-    toks.take(limIdx).foreach { t =>
-      if (t.is("(")) d += 1 else if (t.is(")")) d -= 1
-    }
-    if (d != 0) return None
+    if (num.kind != 5 || lim.word != "limit" ||
+        !topIndices(toks, 0, limIdx + 1)(_.word == "limit").contains(limIdx)) return None
     Some((render(toks.take(limIdx)), num.text.toDouble))
   }
 

@@ -3,7 +3,8 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import graft.sources.GraftTable
-import DuckDialect.{GraftSqlException, Tok, tokenize}
+import DuckDialect.{GraftSqlException, Tok, firstTop, identText, matching, render,
+  splitTop, tokenize, topIndices}
 
 /** SQL front-end for the DML surface: routes `INSERT INTO` / `DELETE
   * FROM` / `UPDATE … SET` statement STRINGS to the corresponding
@@ -137,8 +138,7 @@ object DuckDml {
     if (toks.isEmpty || toks(0).word != "execute") return None
     if (toks.length < 2 || (toks(1).kind != 4 && toks(1).kind != 3))
       throw new GraftSqlException("EXECUTE needs a prepared-statement name")
-    val name = (if (toks(1).kind == 3)
-      toks(1).text.substring(1, toks(1).text.length - 1) else toks(1).text).toLowerCase
+    val name = identText(toks(1)).toLowerCase
     val text = st.prepared.get(name)
     if (text == null)
       throw new GraftSqlException(
@@ -148,45 +148,25 @@ object DuckDml {
       else {
         if (!toks(2).is("("))
           throw new GraftSqlException("EXECUTE name(arg, …) — expected '('")
-        // split the top-level comma-separated literal spans verbatim
-        var d = 0
-        val spans = Seq.newBuilder[String]
-        val cur = new StringBuilder
-        var i = 2
-        var done = false
-        var sawCommaFlag = false
-        while (i < toks.length && !done) {
-          val t = toks(i)
-          if (t.is("(")) { d += 1; if (d > 1) cur ++= t.text }
-          else if (t.is(")")) {
-            d -= 1
-            if (d == 0) {
-              // a trailing comma leaves an empty final span — refuse
-              // loudly here rather than splicing '()' into the statement
-              // and surfacing an opaque downstream parse error
-              if (cur.isEmpty && sawCommaFlag)
-                throw new GraftSqlException(
-                  "EXECUTE: empty argument before ')' — remove the trailing comma")
-              if (cur.nonEmpty) spans += cur.toString
-              done = true
-            }
-            else cur ++= t.text
-          }
-          else if (t.is(",") && d == 1) {
-            if (cur.isEmpty)
-              throw new GraftSqlException(
-                "EXECUTE: empty argument in the argument list (doubled or leading comma)")
-            sawCommaFlag = true
-            spans += cur.toString; cur.clear()
-          }
-          else cur ++= (if (cur.nonEmpty) " " else "") + t.text
-          i += 1
-        }
-        if (!done) throw new GraftSqlException("EXECUTE: unbalanced argument list")
-        if (i < toks.length)
+        val close = matching(toks, 2)
+        if (close + 1 < toks.length)
           throw new GraftSqlException(
-            s"EXECUTE: unexpected trailing tokens after ')': ${toks(i).text}")
-        spans.result()
+            s"EXECUTE: unexpected trailing tokens after ')': ${toks(close + 1).text}")
+        // the top-level comma-separated argument spans, verbatim; an empty
+        // one refuses loudly here rather than splicing '()' into the
+        // statement and surfacing an opaque downstream parse error
+        val spans = splitTop(toks, 3, close)(_.is(","))
+        if (close == 3) Nil
+        else spans.zipWithIndex.map { case (span, k) =>
+          if (span.isEmpty)
+            throw new GraftSqlException(
+              if (k == spans.length - 1)
+                "EXECUTE: empty argument before ')' — remove the trailing comma"
+              else "EXECUTE: empty argument in the argument list (doubled or leading comma)")
+          span.foldLeft("") { (arg, t) =>
+            if (t.is("(") || t.is(")") || arg.isEmpty) arg + t.text else arg + " " + t.text
+          }
+        }
       }
     Some(bindPrepared(text, args))
   }
@@ -196,15 +176,8 @@ object DuckDml {
     * None when the statement has no depth-0 RETURNING. */
   private[sql] def splitReturning(sql: String): Option[(String, String)] = {
     val full = tokenize(sql.stripSuffix(";"))
-    var d = 0; var at = -1; var i = 0
-    while (i < full.length) {
-      d += depthDelta(full(i))
-      if (d == 0 && full(i).kind == 4 && full(i).word == "returning") at = i
-      i += 1
-    }
-    if (at < 0) None
-    else Some((full.take(at).map(_.text).mkString,
-      full.drop(at + 1).map(_.text).mkString.trim))
+    topIndices(full)(_.word == "returning").lastOption.map(at =>
+      (render(full.take(at)), render(full.drop(at + 1)).trim))
   }
 
   /** Execute one DML statement and RETURN its affected rows (reference
@@ -260,15 +233,9 @@ object DuckDml {
       .drop("change_type")
     if (retList == "*") affected
     else affected.selectExpr(
-      splitTop(tokenize(retList), ",").map(item =>
-        DuckDialect.translateIn(spark, item.map(_.text).mkString)): _*)
+      splitTop(tokenize(retList))(_.is(",")).map(item =>
+        DuckDialect.translateIn(spark, render(item))): _*)
   }
-
-  /** Strip surrounding double-quote / backtick from an identifier token's
-    * text (kind 3); bare words pass through. */
-  private def identText(t: Tok): String =
-    if (t.kind == 3 && t.text.length >= 2) t.text.substring(1, t.text.length - 1)
-    else t.text
 
   /** Execute one DML statement; returns the table root it mutated. */
   def exec(spark: SparkSession, tables: Map[String, String], sql: String): String = {
@@ -306,7 +273,7 @@ object DuckDml {
       var seen = 0; var j = 0
       while (j < full.length) {
         if (!full(j).isWs) {
-          if (seen == i) return full.drop(j).map(_.text).mkString
+          if (seen == i) return render(full.drop(j))
           seen += 1
         }
         j += 1
@@ -494,7 +461,7 @@ object DuckDml {
             r
           } else if (w(j + 1) == "update" && w(j + 2) == "set") {
             val assignSpan = toks.drop(j + 3)
-            val assigns = splitTop(assignSpan, ",").map { item =>
+            val assigns = splitTop(assignSpan)(_.is(",")).map { item =>
               val parts = item.filterNot(_.isWs)
               // strictly `col = excluded . col` with the SAME column name
               val ok = parts.length == 5 &&
@@ -534,13 +501,13 @@ object DuckDml {
         st.touch(r)
         if (w(2) != "set") throw new GraftSqlException("UPDATE must be UPDATE <table> SET")
         // assignments: depth-0 comma-separated `col = expr`, up to WHERE
-        val setAt = indexOfWord(full, "set")
-        val whereAt = indexOfWord(full, "where")
+        val setAt = firstTop(full)(_.word == "set")
+        val whereAt = firstTop(full)(_.word == "where")
         val assignSpan = full.slice(setAt + 1, if (whereAt < 0) full.length else whereAt)
         // multi-table UPDATE (a top-level FROM in the assignment span) is
         // unsupported — refuse with the typed error, not a leaked Spark
         // ParseException from the fragment
-        if (indexOfWord(assignSpan, "from") >= 0)
+        if (firstTop(assignSpan)(_.word == "from") >= 0)
           throw new GraftSqlException(
             "multi-table UPDATE … FROM is unsupported — express the join as a " +
               "MERGE (GraftTable.merge) or pre-compute the values into the predicate")
@@ -549,8 +516,8 @@ object DuckDml {
         // case-insensitive; GraftTable.update requires exact field names)
         val schema = GraftTable.schemaOf(r)
         val canon = schema.fieldNames.map(f => f.toLowerCase -> f).toMap
-        val assigns = splitTop(assignSpan, ",").map { item =>
-          val eq = topIndexOf(item, "=")
+        val assigns = splitTop(assignSpan)(_.is(",")).map { item =>
+          val eq = firstTop(item)(_.is("="))
           if (eq < 0) throw new GraftSqlException("UPDATE SET items must be col = expr")
           val colName = item.take(eq).filterNot(_.isWs) match {
             case Vector(t) if t.kind == 4 || t.kind == 3 => identText(t)
@@ -559,8 +526,7 @@ object DuckDml {
           val target = canon.getOrElse(colName.toLowerCase,
             throw new GraftSqlException(
               s"unknown column '$colName' in UPDATE SET (table has ${schema.fieldNames.mkString(", ")})"))
-          target -> expr(DuckDialect.translateIn(spark, 
-            item.drop(eq + 1).map(_.text).mkString))
+          target -> expr(DuckDialect.translateIn(spark, render(item.drop(eq + 1))))
         }
         // duplicate targets would silently last-win through toMap; DuckDB
         // (and the SQL standard) reject multiple assignments to a column
@@ -570,8 +536,7 @@ object DuckDml {
           s"multiple assignments to column '$c' in UPDATE SET"))
         val pred =
           if (whereAt < 0) expr("true")
-          else expr(DuckDialect.translateIn(spark, 
-            full.drop(whereAt + 1).map(_.text).mkString))
+          else expr(DuckDialect.translateIn(spark, render(full.drop(whereAt + 1))))
         GraftTable.update(spark, r, pred, assigns.toMap)
         r
       // maintenance statements (reference
@@ -682,45 +647,5 @@ object DuckDml {
           s"unsupported DML statement '$other' — supported: INSERT INTO, DELETE FROM, " +
             "UPDATE … SET, BEGIN/COMMIT/ROLLBACK, VACUUM, CHECKPOINT")
     }
-  }
-
-  // Depth tracking spans EVERY bracket family: DuckDB list literals
-  // `['a','b']` and struct literals `{'k': v}` carry top-level-looking
-  // commas that must not split SET items (DuckDialect.translate handles
-  // the literals themselves downstream).
-  private def depthDelta(t: Tok): Int =
-    if (t.is("(") || t.is("[") || t.is("{")) 1
-    else if (t.is(")") || t.is("]") || t.is("}")) -1
-    else 0
-
-  private def indexOfWord(toks: Vector[Tok], word: String): Int = {
-    var d = 0; var i = 0
-    while (i < toks.length) {
-      d += depthDelta(toks(i))
-      if (d == 0 && toks(i).kind == 4 && toks(i).word == word) return i
-      i += 1
-    }
-    -1
-  }
-
-  private def topIndexOf(toks: Vector[Tok], sym: String): Int = {
-    var d = 0; var i = 0
-    while (i < toks.length) {
-      d += depthDelta(toks(i))
-      if (d == 0 && toks(i).is(sym)) return i
-      i += 1
-    }
-    -1
-  }
-
-  private def splitTop(toks: Vector[Tok], sep: String): Vector[Vector[Tok]] = {
-    val out = Vector.newBuilder[Vector[Tok]]
-    var d = 0; var s = 0
-    toks.indices.foreach { i =>
-      d += depthDelta(toks(i))
-      if (d == 0 && toks(i).is(sep)) { out += toks.slice(s, i); s = i + 1 }
-    }
-    out += toks.slice(s, toks.length)
-    out.result()
   }
 }

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import graft.Tables
-import DuckDialect.{GraftSqlException, Tok}
+import DuckDialect.{GraftSqlException, Tok, firstTop, identText, matching}
 
 /** DuckDB `PIVOT` statement front-end (reference:
   * `src/parser/transform/statement/transform_pivot_stmt.cpp`; DuckDB
@@ -27,30 +27,27 @@ import DuckDialect.{GraftSqlException, Tok}
   * refused loudly rather than translated approximately. */
 object PivotStatement {
 
+  /** The `<kw> <source>` head PIVOT and UNPIVOT share: the statement's
+    * tokens without whitespace and comments, the source as a query (a
+    * table name or a parenthesized query), and the index after it. */
+  private[sql] def source(stmt: String, kw: String,
+      refuse: String => Nothing): (Vector[Tok], String, Int) = {
+    val nw = DuckDialect.tokenize(stmt).filterNot(_.isWs)
+    require(nw.nonEmpty && nw.head.word == kw, s"not a ${kw.toUpperCase} statement: $stmt")
+    if (nw.length > 1 && nw(1).is("(")) {
+      val close = matching(nw, 1)
+      (nw, nw.slice(2, close).map(_.text + " ").mkString, close + 1)
+    } else if (nw.length > 1 && (nw(1).kind == 3 || nw(1).kind == 4))
+      (nw, s"SELECT * FROM ${identText(nw(1))}", 2)
+    else refuse("source must be a table name or a parenthesized query")
+  }
+
   def run(spark: SparkSession, dir: String, stmt: String): DataFrame = {
-    val toks = DuckDialect.tokenize(stmt).filterNot(t => t.kind == 1)
     def refuse(msg: String): Nothing = throw new GraftSqlException(
       s"PIVOT: $msg — or use DataFrame groupBy(...).pivot(...).agg(...)")
-    val nw = toks.filterNot(_.isWs)
-    require(nw.nonEmpty && nw.head.word == "pivot", s"not a PIVOT statement: $stmt")
-    var i = 1 // index into nw
+    val (nw, srcSql, afterSrc) = source(stmt, "pivot", refuse)
+    var i = afterSrc // index into nw
     def word(j: Int): String = if (j < nw.length) nw(j).word else ""
-    def identText(t: Tok): String =
-      if (t.kind == 3) t.text.substring(1, t.text.length - 1) else t.text
-    // source: bare table name or parenthesized subquery
-    val srcSql: String =
-      if (nw(i).is("(")) {
-        var d = 0; val sb = new StringBuilder; var done = false
-        while (i < nw.length && !done) {
-          if (nw(i).is("(")) d += 1 else if (nw(i).is(")")) d -= 1
-          if (d == 0) done = true
-          else if (!(d == 1 && nw(i).is("("))) { sb.append(nw(i).text); sb.append(' ') }
-          i += 1
-        }
-        sb.toString
-      } else if (nw(i).kind == 3 || nw(i).kind == 4) {
-        val n = identText(nw(i)); i += 1; s"SELECT * FROM $n"
-      } else refuse("source must be a table name or a parenthesized query")
     if (word(i) != "on") refuse("expected ON <column>")
     i += 1
     if (i >= nw.length || (nw(i).kind != 3 && nw(i).kind != 4))
@@ -65,18 +62,16 @@ object PivotStatement {
     if (word(i) != "using") refuse("expected USING <aggregate>")
     i += 1
     // aggregate expression: tokens until depth-0 GROUP/ORDER or end
-    val aggSb = new StringBuilder; var d = 0
-    while (i < nw.length && !(d == 0 && (word(i) == "group" || word(i) == "order"))) {
-      if (nw(i).is("(")) d += 1 else if (nw(i).is(")")) d -= 1
-      if (d == 0 && nw(i).is(","))
-        refuse("multiple USING aggregates are unsupported")
-      if (d == 0 && word(i) == "as")
-        refuse("USING aliases are unsupported (they change DuckDB's " +
-          "output-column naming)")
-      aggSb.append(nw(i).text); aggSb.append(' ')
-      i += 1
-    }
-    val aggSql = aggSb.toString.trim
+    val tailAt = firstTop(nw, i)(t => t.word == "group" || t.word == "order")
+    val aggEnd = if (tailAt < 0) nw.length else tailAt
+    val bad = firstTop(nw, i, aggEnd)(t => t.is(",") || t.word == "as")
+    if (bad >= 0 && nw(bad).is(","))
+      refuse("multiple USING aggregates are unsupported")
+    if (bad >= 0)
+      refuse("USING aliases are unsupported (they change DuckDB's " +
+        "output-column naming)")
+    val aggSql = nw.slice(i, aggEnd).map(_.text).mkString(" ")
+    i = aggEnd
     if (aggSql.isEmpty) refuse("USING aggregate is empty")
     // optional GROUP BY ident list
     val explicitGroups: Option[Seq[String]] =

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
-import DuckDialect.{GraftSqlException, Tok}
+import DuckDialect.{GraftSqlException, identText}
 
 /** DuckDB `UNPIVOT` statement front-end (reference:
   * `src/parser/transform/statement/transform_pivot_stmt.cpp` — DuckDB
@@ -36,30 +36,11 @@ object UnpivotStatement {
     * for statement-head UNPIVOT, which needs no session beyond the
     * source query's macros and aliases. */
   def spell(stmt: String, session: Option[SessionSql]): String = {
-    val toks = DuckDialect.tokenize(stmt).filterNot(t => t.kind == 1)
     def refuse(msg: String): Nothing = throw new GraftSqlException(
       s"UNPIVOT: $msg — or use Dataset.unpivot(ids, values, variableColumnName, valueColumnName)")
-    val nw = toks.filterNot(_.isWs)
-    require(nw.nonEmpty && nw.head.word == "unpivot", s"not an UNPIVOT statement: $stmt")
-    var i = 1
+    val (nw, srcSql, afterSrc) = PivotStatement.source(stmt, "unpivot", refuse)
+    var i = afterSrc
     def word(j: Int): String = if (j < nw.length) nw(j).word else ""
-    def identText(t: Tok): String =
-      if (t.kind == 3) t.text.substring(1, t.text.length - 1) else t.text
-    // source: bare table name or parenthesized subquery (same contract
-    // as PivotStatement)
-    val srcSql: String =
-      if (nw(i).is("(")) {
-        var d = 0; val sb = new StringBuilder; var done = false
-        while (i < nw.length && !done) {
-          if (nw(i).is("(")) d += 1 else if (nw(i).is(")")) d -= 1
-          if (d == 0) done = true
-          else if (!(d == 1 && nw(i).is("("))) { sb.append(nw(i).text); sb.append(' ') }
-          i += 1
-        }
-        sb.toString
-      } else if (nw(i).kind == 3 || nw(i).kind == 4) {
-        val n = identText(nw(i)); i += 1; s"SELECT * FROM $n"
-      } else refuse("source must be a table name or a parenthesized query")
     if (word(i) != "on") refuse("expected ON <column list>")
     i += 1
     val cols = Seq.newBuilder[String]

@@ -305,12 +305,11 @@ class AdaptiveCompactSpec extends SparkSpec {
 class SplitPipelineRuleSpec extends SparkSpec {
 
   test("rule inserts a shuffle between chained joins when enabled") {
-    // getOrCreate() may reuse a suite-shared session whose extensions are
-    // fixed; extraOptimizations is the public per-session hook for that case.
+    // no session runs the rule by default; extraOptimizations is the
+    // public per-session hook that opts this one in.
     val s = spark
     s.experimental.extraOptimizations =
       s.experimental.extraOptimizations :+ graft.plans.SplitPipelineRule()
-    s.conf.set("spark.graft.splitPipelines", "true")
     try {
       val n = graft.Tables.t(s, sf(), "nation")
       val c = graft.Tables.t(s, sf(), "customer")
@@ -326,7 +325,6 @@ class SplitPipelineRuleSpec extends SparkSpec {
       assert(chained.count() ==
         o.join(c, o("o_custkey") === c("c_custkey")).count())
     } finally {
-      s.conf.set("spark.graft.splitPipelines", "false")
       s.experimental.extraOptimizations = s.experimental.extraOptimizations
         .filterNot(_.isInstanceOf[graft.plans.SplitPipelineRule])
     }

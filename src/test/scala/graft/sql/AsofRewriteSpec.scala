@@ -48,6 +48,13 @@ class AsofRewriteSpec extends SparkSpec {
     assert(ids.sameElements(ids.sorted), "ORDER BY must hold")
   }
 
+  test("an unbalanced ASOF query raises GraftSqlException") {
+    val sql = "SELECT a.event_id FROM (SELECT * FROM events a ASOF JOIN events b " +
+      "ON a.user_id = b.user_id AND a.ts >= b.ts"
+    intercept[DuckDialect.GraftSqlException](AsofRewrite.maybeRun(spark, sf(), sql))
+    intercept[DuckDialect.GraftSqlException](DuckDialect.run(spark, sf(), sql))
+  }
+
   for ((label, sql) <- Seq(
     "star select" ->
       "SELECT * FROM events a ASOF JOIN events b ON a.user_id = b.user_id AND a.ts >= b.ts",

@@ -596,6 +596,14 @@ class DuckDialectSpec extends AnyFunSuite {
       .getMessage.contains("cyclic"))
     // a bare identifier with a macro's name is untouched
     assert(norm(translate("SELECT dd_add FROM t")) == "SELECT dd_add FROM t")
+    // list, struct and MAP literal arguments are one argument each: the
+    // commas inside their brackets do not split the call
+    st.registerMacro("dd_id", Seq("x"), "x")
+    assert(tight(translate("SELECT dd_id([1, 2]) FROM t")) == "SELECT((array(1,2)))FROMt")
+    assert(tight(translate("SELECT dd_id({'a': 1, 'b': 2}) FROM t")) ==
+      "SELECT((named_struct('a',1,'b',2)))FROMt")
+    assert(tight(translate("SELECT dd_id(MAP {'k': 1, 'j': 2}) FROM t")) ==
+      "SELECT((map('k',1,'j',2)))FROMt")
   }
 
   test("FROM-first queries normalize to standard SELECT form") {

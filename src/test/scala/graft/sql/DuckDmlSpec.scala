@@ -54,6 +54,15 @@ class DuckDmlSpec extends SparkSpec {
     // NumberFormatException (the fail-loudly contract)
     DuckDml.exec(s, Map.empty, "PREPARE pbad AS SELECT $2.5 AS x")
     intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE pbad(1, 2)"))
+    // list and struct literal arguments are one argument each: the
+    // commas inside their brackets do not split the argument list
+    DuckDml.exec(s, Map.empty, "PREPARE pv AS SELECT $1 AS v")
+    assert(DuckDialect.run(s, sf(), "EXECUTE pv([1, 2])").head().getSeq[Int](0) == Seq(1, 2))
+    val struct = DuckDialect.run(s, sf(), "EXECUTE pv({'a': 1, 'b': 2})").head().getStruct(0)
+    assert(struct.schema.fieldNames.toSeq == Seq("a", "b") &&
+      struct.getInt(0) == 1 && struct.getInt(1) == 2)
+    DuckDml.exec(s, Map.empty, "PREPARE pin AS SELECT list_contains($1, $2) AS v")
+    assert(DuckDialect.run(s, sf(), "EXECUTE pin([1, 2], 2)").head().getBoolean(0))
     // empty argument spans refuse at EXECUTE-split time: trailing,
     // doubled, and leading commas each name the malformation
     intercept[GraftSqlException](DuckDialect.run(s, sf(), "EXECUTE padd(1,)"))
