@@ -14,8 +14,8 @@ import scala.util.Try
   * own harness times multiple engine configurations of one suite,
   * reference `benchmark/run_bench.py`):
   *   - `queries`       — [[BenchConf.tuned]] (the headline);
-  *   - `queries_aqe`   — the SAME staged data under
-  *                       [[BenchConf.production]]: guards the production
+  *   - `queries_aqe`   — the SAME staged data under the engine's posture
+  *                       ([[EngineSession.restore]]): guards the production
   *                       config — a regression on the AQE path shows up
   *                       here even when the tuned row looks fine;
   *   - `queries_sf10x` — a 10×-inflated copy of the corpus (key-shifted
@@ -289,8 +289,7 @@ object Bench {
     val cpus = EngineSession.cores
     // 10×-scale block: copies of the corpus (0 disables; default 10).
     val inflate = sys.env.getOrElse("SPARK_GRAFT_BENCH_INFLATE", "10").toInt
-    val spark = BenchConf.session(cpus, 8)
-    compaction.Compact.enableAqeCompaction(spark)
+    val spark = EngineSession.local(cpus)
     val dir = BenchConf.stageFixtures(spark, sfDir, cpus)
     try measure(spark, sfDir, dir, cpus, inflate)
     finally scala.reflect.io.Path(dir).deleteRecursively() // tmpfs is shared with the OS
@@ -328,13 +327,12 @@ object Bench {
       noop(spark.range(0, 1, 1, 1))
       (System.nanoTime() - t0) / 1e9
     }.min
-    val production = (s: SparkSession) => BenchConf.production(s, cpus)
-    val aqe = run(Block("aqe", production, dir, 1, math.min(Runs, 3)), "aqe block")
+    val aqe = run(Block("aqe", EngineSession.restore, dir, 1, math.min(Runs, 3)), "aqe block")
     val sf10x = Option.when(inflate > 1) {
       BenchConf.tuned(spark) // staging itself shouldn't pay AQE re-plans
       val bigDir = BenchConf.stageFixtures(spark, sfDir, cpus, copies = inflate)
       mark(s"staged ${inflate}x")
-      try run(Block("sf10x", production, bigDir, Warms10x, Runs10x), "sf10x block")
+      try run(Block("sf10x", EngineSession.restore, bigDir, Warms10x, Runs10x), "sf10x block")
       finally scala.reflect.io.Path(bigDir).deleteRecursively() // tmpfs is shared with the OS
     }
 

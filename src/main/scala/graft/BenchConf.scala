@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr, lit, translate}
 
-/** Every session conf and data layout the timing mains use, in one place:
-  * the staged layout Bench and the probes time against, the tuned and
-  * production conf sets Bench's blocks alternate between (and profile
-  * its headliners under), and the verbatim-suite conf. No main keeps its
-  * own copy.
+/** The benchmark confs and data layout the timing mains use, in one
+  * place: the staged layout Bench and the probes time against, the tuned
+  * conf Bench's blocks alternate with the engine's posture
+  * ([[EngineSession.restore]]) and profile its headliners under, and the
+  * verbatim-suite conf. No main keeps its own copy.
   *
   * The input fixtures are single-row-group snappy parquet files, which
   * caps scan parallelism at 1 task/table — a layout no real deployment
@@ -25,15 +25,6 @@ object BenchConf {
     * default the sf0.1 testdata. The one place a main reads the variable. */
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** A benchmark session: the engine's own session at `cpus` cores and
-    * `shufflePartitions`, with its generated-class cache
-    * ([[EngineSession.CodegenCacheEntries]]). */
-  def session(cpus: Int, shufflePartitions: Int): SparkSession = {
-    val spark = EngineSession.builder(s"local[$cpus]", shufflePartitions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** One scan task per staged file: a file's cost is max(size, openCost),
     * so openCost = maxPartitionBytes pins one file per split. */
   def staged(spark: SparkSession): Unit = {
@@ -41,25 +32,17 @@ object BenchConf {
     spark.conf.set("spark.sql.files.openCostInBytes", "8m")
   }
 
-  /** The tuned bench conf (every knob decided by the BenchTune sweep, not
-    * guessed): broadcast 64 MB, 8 shuffle partitions, AQE off. */
+  /** The tuned bench conf: broadcast 64 MB, 8 shuffle partitions, AQE off.
+    * [[EngineSession.restore]] puts the engine's posture back. */
   def tuned(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
 
-  /** EngineSession's production posture: AQE + coalescing on, one shuffle
-    * partition per core (at least 8), default 10 MB broadcast threshold. */
-  def production(spark: SparkSession, cpus: Int): Unit = {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
-    spark.conf.set("spark.sql.shuffle.partitions", math.max(cpus, 8).toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-  }
-
-  /** The verbatim suites' conf: 10 MB broadcast, 32-way shuffles, AQE on,
-    * 8 MB splits so the single-file dbgen/dsdgen parquet scans wide.
+  /** The verbatim suites' conf: the engine's posture (10 MB broadcast, AQE
+    * on) with 32-way shuffles and 8 MB splits, so the single-file
+    * dbgen/dsdgen parquet scans wide.
     * Measured A/B on the 5 hottest TPC-H queries at sf1 (warm JVM, 3-run
     * min): {10 MB broadcast, 32 shuffle partitions, AQE} 4.47 s vs
     * {64 MB, 32, AQE} 6.90 s — the 64 MB threshold broadcasts
@@ -67,9 +50,7 @@ object BenchConf {
     * build dominates (q5 2.29 s → 0.76 s once those become 32-way shuffle
     * joins). Dimensions still broadcast under 10 MB. */
   def verbatim(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
     spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     staged(spark)
   }
 

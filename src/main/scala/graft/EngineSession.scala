@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine: AQE with compaction-oriented
-  * coalescing on (the always-on analog of the reference's dynamic chunk
-  * compaction — SURVEY.md §4.2), UTC, right-sized shuffle parallelism and
-  * memory pages, and the graft optimizer extensions registered.
+/** Session factory for the engine, and the one place its settings live:
+  * AQE with compaction-oriented coalescing on (the always-on analog of the
+  * reference's dynamic chunk compaction — SURVEY.md §4.2), UTC,
+  * right-sized shuffle parallelism and memory pages, and the graft
+  * optimizer extensions registered. Every session a main starts, and
+  * every `newSession()` of it, inherits them.
   */
 object EngineSession {
 
@@ -38,24 +40,41 @@ object EngineSession {
   def cores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
 
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+  /** The runtime keys of the engine's posture at `cores`: one shuffle
+    * partition per core (at least 8), the 10 MB broadcast threshold, UTC,
+    * parquet aggregate pushdown and AQE with the compaction threshold
+    * ([[compaction.Compact.aqeCompaction]]). The builder puts them in the
+    * SparkConf, so every `newSession()` starts in them too. */
+  def posture(cores: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> math.max(cores, 8).toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> (10 << 20).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.parquet.aggregatePushdown" -> "true") ++ compaction.Compact.aqeCompaction()
+
+  /** The one definition of a session: master, extensions, the static keys
+    * and the [[posture]] at `cores`. */
+  def builder(master: String, cores: Int): SparkSession.Builder =
+    posture(cores).foldLeft(SparkSession.builder()
       .master(master)
       .appName("graft")
       .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.buffer.pageSize", PageSize)
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()
-    compaction.Compact.enableAqeCompaction(s)
+    val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Puts `spark`'s posture keys back to the values its SparkContext was
+    * built with, after a benchmark conf ([[BenchConf.tuned]],
+    * [[BenchConf.verbatim]]) or a probe changed them. */
+  def restore(spark: SparkSession): Unit = {
+    val built = spark.sparkContext.getConf
+    posture(cores = 1).map(_._1).foreach(k => spark.conf.set(k, built.get(k)))
   }
 }

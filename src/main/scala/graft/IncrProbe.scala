@@ -27,9 +27,6 @@ object IncrProbe {
     val out = sys.env.getOrElse("SPARK_GRAFT_INCR_OUT",
       "bench_evidence/r16_incr_probe.json")
     val spark = EngineSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     def secs(since: Long): Double = (System.nanoTime() - since) / 1e9
 
     val rows = copiesList.map { c =>

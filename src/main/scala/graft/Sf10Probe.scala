@@ -68,18 +68,15 @@ object Sf10Probe {
     val out = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT",
       "bench_evidence/r16_sf10_probe.json")
 
+    // the production config the engine ships with — the probe must hold
+    // there, not under a tuned benchmark config
     val spark = EngineSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     def secs(since: Long): Double = (System.nanoTime() - since) / 1e9
     val dir = BenchConf.stageFixtures(spark, sfDir, cpus,
       copies = copies, moneyDecimals = false)
     val stageSec = secs(t0)
     System.err.println(f"[probe] staged ${copies}x of $sfDir in $stageSec%.0fs -> $dir")
-    // the production config the engine ships with — the probe must hold
-    // there, not under a tuned benchmark config
-    BenchConf.production(spark, cpus)
-    compaction.Compact.enableAqeCompaction(spark)
 
     val results = entries.map { name =>
       val t = System.nanoTime()
@@ -90,7 +87,7 @@ object Sf10Probe {
         val alt = math.max(7, cpus / 3)
         spark.conf.set("spark.sql.shuffle.partitions", alt.toString)
         val (n2, h2) = md5RowsHash(SparkEntry.queries(name)(spark, dir))
-        spark.conf.set("spark.sql.shuffle.partitions", math.max(cpus, 8).toString)
+        EngineSession.restore(spark)
         val ok = n2 == n && h2 == h
         System.err.println(s"[probe] $name invariance @$alt partitions: " +
           (if (ok) "IDENTICAL" else s"MISMATCH ($n/$h vs $n2/$h2)"))

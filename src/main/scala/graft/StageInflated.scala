@@ -14,7 +14,6 @@ object StageInflated {
     val Array(sfDir, outDir, copiesStr) = args
     val cpus = EngineSession.cores
     val spark = EngineSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     val dir = BenchConf.stageFixtures(spark, sfDir, cpus,
       copies = copiesStr.toInt, moneyDecimals = false, outDir = Some(outDir))
     println(s"STAGED $dir")

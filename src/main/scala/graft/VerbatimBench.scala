@@ -56,7 +56,7 @@ object VerbatimBench {
       s"usage: VerbatimBench <${suites.keys.toSeq.sorted.mkString("|")}> [scale]"))
     val corpus = suite.corpus
     val scale = stagedScale(corpus, args.lift(1).getOrElse("sf0.1"))
-    val spark = BenchConf.session(EngineSession.cores, 32)
+    val spark = EngineSession.local(EngineSession.cores)
     BenchConf.verbatim(spark)
     // the scale is passed where entries take their testdata dir: its name selects the staged dir
     val queries = corpus.queryIds.map(id => s"q$id" -> (corpus.run(_: SparkSession, scale, id)))

@@ -207,13 +207,12 @@ object Verify {
     val workers = (1 to threads).map { i =>
       val th = new Thread(() => {
         // The whole body is guarded: a failure OUTSIDE runOne's
-        // per-entry try (session init, enableAqeCompaction) must not
+        // per-entry try (session init, warm-up) must not
         // kill the worker silently — a dead pool would make hundreds
         // of entries VANISH from the record, violating the gate's
         // failed-rows-never-vanish invariant.
         try {
           val ws = spark.newSession()
-          compaction.Compact.enableAqeCompaction(ws)
           warm(ws)
           var e = queue.poll()
           while (e != null) { runOne(ws, e._1, e._2); e = queue.poll() }

@@ -25,8 +25,8 @@ class AdaptiveCompact(spark: SparkSession, val tuner: CompactTuner = new Compact
   private val log = scala.collection.mutable.ArrayBuffer.empty[Episode]
 
   /** Apply an arm's configuration: the sentinel default arm restores the
-    * shipped posture ([[Compact.enableAqeCompaction]]'s defaults, as
-    * `EngineSession.local` applies them); a byte arm binds the target. */
+    * shipped posture ([[Compact.enableAqeCompaction]]'s defaults, which
+    * every engine session starts in); a byte arm binds the target. */
   private def applyArm(targetBytes: Long): Unit =
     if (targetBytes == CompactTuner.DefaultArm) Compact.enableAqeCompaction(spark)
     else Compact.enableAqeCompaction(spark, targetBytes, bindTarget = true)

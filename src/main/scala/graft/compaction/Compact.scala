@@ -22,7 +22,7 @@ object Compact {
   /** Reference ratio: threshold 128 of a 2048-row vector → 1/16. */
   val ThresholdFraction: Double = 128.0 / 2048.0
 
-  /** Configure AQE so post-shuffle partitions are compacted toward
+  /** AQE conf that compacts post-shuffle partitions toward
     * `targetBytes`, with the reference's small-chunk threshold mapped onto
     * `minPartitionSize` (partitions under 1/16 of target always merge).
     *
@@ -36,25 +36,25 @@ object Compact {
     * right production posture for compute-heavy stages (round-8: forcing
     * the 64 MB target session-wide coalesced dedup_minhash's 2.6M-row
     * exchanges onto 1-2 cores and cost +25% on the 10× bench). */
-  def enableAqeCompaction(spark: SparkSession, targetBytes: Long = 64L << 20,
-      bindTarget: Boolean = false): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      if (bindTarget) "false" else "true")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", targetBytes.toString)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+  def aqeCompaction(targetBytes: Long = 64L << 20,
+      bindTarget: Boolean = false): Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> (!bindTarget).toString,
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> targetBytes.toString,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
       math.max(1L, (targetBytes * ThresholdFraction).toLong).toString)
-  }
+
+  /** Applies [[aqeCompaction]] to `spark`'s session conf. Its defaults are
+    * the posture every engine session starts in
+    * ([[graft.EngineSession.posture]]). */
+  def enableAqeCompaction(spark: SparkSession, targetBytes: Long = 64L << 20,
+      bindTarget: Boolean = false): Unit =
+    aqeCompaction(targetBytes, bindTarget).foreach { case (k, v) => spark.conf.set(k, v) }
 
   /** The conf keys the AQE-compaction knobs touch — callers that need to
     * A/B configurations snapshot/restore exactly this set. */
-  val AqeConfKeys: Seq[String] = Seq(
-    "spark.sql.adaptive.enabled",
-    "spark.sql.adaptive.coalescePartitions.enabled",
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+  val AqeConfKeys: Seq[String] = aqeCompaction().map(_._1)
 
   /** Snapshot the AQE conf keys, run `body`, restore them — episode
     * isolation for tuning loops (state must not bleed between arms). */

@@ -155,12 +155,11 @@ object CompactionBench {
   def main(args: Array[String]): Unit = {
     val cpus = EngineSession.cores
     val inflate = sys.env.getOrElse("SPARK_GRAFT_BENCH_INFLATE", "10").toInt
-    val spark = BenchConf.session(cpus, 8)
-    Compact.enableAqeCompaction(spark)
+    val spark = EngineSession.local(cpus)
     BenchConf.staged(spark)
     BenchConf.tuned(spark) // staging itself shouldn't pay AQE re-plans
     val dir = BenchConf.stageFixtures(spark, BenchConf.sfDir, cpus, copies = inflate)
-    BenchConf.production(spark, cpus)
+    EngineSession.restore(spark)
     val record = try {
       (1 to 2).foreach(_ => Bench.noop(SparkEntry.queries("dedup_minhash")(spark, dir))) // warm
       val stages = minhashStages(spark, dir)

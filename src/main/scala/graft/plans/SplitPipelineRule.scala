@@ -34,8 +34,8 @@ case class SplitPipelineRule() extends Rule[LogicalPlan] with Logging {
   }
 }
 
-/** Extension installer: `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` or config
+/** Extension installer: every `graft.EngineSession` carries it; elsewhere,
+  * a session builder's `withExtensions(new GraftExtensions)` or config
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -147,8 +147,15 @@ object DuckDialect {
         while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
         out += Tok(4, sql.substring(s, i))
       } else if (c.isDigit) {
+        // digits[.digits][e[+-]digits]: `1e-3` is one literal, not `1` `e` `-` `3`
         val s = i
-        while (i < n && (sql(i).isDigit || sql(i) == '.')) i += 1
+        def digits(): Unit = while (i < n && sql(i).isDigit) i += 1
+        digits()
+        if (i < n && sql(i) == '.') { i += 1; digits() }
+        val sign = if (i + 1 < n && (sql(i + 1) == '+' || sql(i + 1) == '-')) 1 else 0
+        if (i + 1 + sign < n && (sql(i) == 'e' || sql(i) == 'E') && sql(i + 1 + sign).isDigit) {
+          i += 1 + sign; digits()
+        }
         out += Tok(5, sql.substring(s, i))
       } else {
         multiSyms.find(m => sql.startsWith(m, i)) match {
@@ -282,37 +289,20 @@ object DuckDialect {
     * `floor(a / b)`); identifier operands can't be type-checked here and
     * pass through under the documented integer-only contract. */
   private def rewriteIntDiv(toks: Vector[Tok]): Vector[Tok] = {
-    // A fractional literal reaches the tokenizer in three spellings:
-    //   2.5   → num("2.5")                     (kind-5 with '.')
-    //   .5    → sym(".") + num("5")
-    //   1e3   → num("1") + word("e3")          (exponent ⇒ DOUBLE in SQL)
-    // All three must refuse; a bare identifier like `e3` must not.
-    val expWord = "^[eE][0-9]+$".r
-    def isNum(j: Int) = j >= 0 && j < toks.length && toks(j).kind == 5
+    // A fractional literal reaches the tokenizer in two spellings:
+    //   2.5, 1e3, 1e-3 → one number token holding '.', 'e' or 'E'
+    //   .5             → sym(".") + num("5")
+    // Both must refuse; a bare identifier like `e3` must not.
+    def fractional(t: Tok) = t.kind == 5 && t.text.exists(".eE".contains(_))
     def fractionalForward(j0v: Int): Boolean = { // operand starting at j0v
       var j0 = j0v // skip unary sign(s): `a // -2.5` is sym('-') + num('2.5')
       while (j0 < toks.length && (toks(j0).is("-") || toks(j0).is("+")))
         j0 = nextIdx(toks, j0)
       if (j0 >= toks.length) return false
-      if (toks(j0).is(".")) return true // .5
-      if (toks(j0).kind == 5) {
-        if (toks(j0).text.contains(".")) return true // 2.5
-        val after = j0 + 1 // exponent must be ADJACENT (no ws) to the digits
-        if (after < toks.length && toks(after).kind == 4 &&
-            expWord.matches(toks(after).text)) return true // 1e3
-      }
-      false
+      toks(j0).is(".") || fractional(toks(j0))
     }
-    def fractionalBackward(jn: Int): Boolean = { // operand ending at jn
-      if (jn < 0) return false
-      if (toks(jn).kind == 5) {
-        if (toks(jn).text.contains(".")) return true // 2.5
-        if (jn - 1 >= 0 && toks(jn - 1).is(".")) return true // .5
-      }
-      if (toks(jn).kind == 4 && expWord.matches(toks(jn).text) &&
-          isNum(jn - 1)) return true // 1e3
-      false
-    }
+    def fractionalBackward(jn: Int): Boolean = // operand ending at jn
+      jn >= 0 && (fractional(toks(jn)) || toks(jn).kind == 5 && jn > 0 && toks(jn - 1).is("."))
     toks.zipWithIndex.map { case (t, i) =>
       if (t.is("//")) {
         if (fractionalBackward(prevIdx(toks, i)) || fractionalForward(nextIdx(toks, i)))

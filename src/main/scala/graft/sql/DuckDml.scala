@@ -551,7 +551,7 @@ object DuckDml {
         val keep =
           if (w(2) == "keep") {
             val t = tok(3)
-            if (t.kind != 5) throw new GraftSqlException(
+            if (t.kind != 5 || !t.text.forall(_.isDigit)) throw new GraftSqlException(
               "VACUUM <table> KEEP <n>: n must be an integer version count")
             t.text.toInt
           } else if (toks.length > 2)
@@ -567,7 +567,7 @@ object DuckDml {
         val targetMb =
           if (toks.length > 2) {
             val t = tok(2)
-            if (t.kind != 5) throw new GraftSqlException(
+            if (t.kind != 5 || !t.text.forall(_.isDigit)) throw new GraftSqlException(
               "CHECKPOINT <table> [<target MB>]: target must be an integer")
             t.text.toInt
           } else 128

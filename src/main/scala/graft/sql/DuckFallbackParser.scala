@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParseException, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
@@ -59,6 +59,11 @@ class DuckFallbackParser(session: SparkSession, delegate: ParserInterface)
 
   override def parseQuery(sqlText: String): LogicalPlan =
     withFallback(sqlText, delegate.parseQuery)
+
+  /** `spark.sql(text, args)`: the trait's default ignores `params`, which
+    * leaves every named or positional marker unbound. */
+  override def parsePlanWithParameters(sqlText: String, params: ParameterContext): LogicalPlan =
+    withFallback(sqlText, delegate.parsePlanWithParameters(_, params))
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)

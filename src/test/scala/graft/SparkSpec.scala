@@ -3,19 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test session: one local session per suite (lazy). Every suite
-  * runs in one forked JVM, whose generated-class cache takes its size from
-  * the first session that compiles, so this session sizes it as the
-  * engine's does. */
+/** Shared test session: one local session per suite (lazy), built by the
+  * engine's own builder, so every suite runs the posture, extensions and
+  * page size the engine ships. Every suite runs in one forked JVM: the
+  * first suite's builder creates the SparkContext, and later suites'
+  * `getOrCreate` return its session. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries", EngineSession.CodegenCacheEntries.toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = EngineSession.builder("local[4]", 4).getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

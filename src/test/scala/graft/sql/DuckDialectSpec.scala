@@ -292,6 +292,9 @@ class DuckDialectSpec extends AnyFunSuite {
     intercept[GraftSqlException](translate("SELECT .5 // b FROM t"))
     intercept[GraftSqlException](translate("SELECT a // 1e3 FROM t"))
     intercept[GraftSqlException](translate("SELECT 1e3 // b FROM t"))
+    // a signed exponent is part of the literal, not `1e` `-` `3`
+    intercept[GraftSqlException](translate("SELECT a // 1e-3 FROM t"))
+    intercept[GraftSqlException](translate("SELECT a // 2E+2 FROM t"))
     // signed fractional literals: `-2.5` tokenizes as sym('-') + num('2.5')
     intercept[GraftSqlException](translate("SELECT a // -2.5 FROM t"))
     intercept[GraftSqlException](translate("SELECT a // +.5 FROM t"))

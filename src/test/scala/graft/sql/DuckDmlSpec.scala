@@ -61,6 +61,8 @@ class DuckDmlSpec extends SparkSpec {
     val struct = DuckDialect.run(s, sf(), "EXECUTE pv({'a': 1, 'b': 2})").head().getStruct(0)
     assert(struct.schema.fieldNames.toSeq == Seq("a", "b") &&
       struct.getInt(0) == 1 && struct.getInt(1) == 2)
+    // an exponent literal is one argument, bound as written
+    assert(DuckDialect.run(s, sf(), "EXECUTE pv(1e3)").head().getDouble(0) == 1000.0)
     DuckDml.exec(s, Map.empty, "PREPARE pin AS SELECT list_contains($1, $2) AS v")
     assert(DuckDialect.run(s, sf(), "EXECUTE pin([1, 2], 2)").head().getBoolean(0))
     // empty argument spans refuse at EXECUTE-split time: trailing,
@@ -235,6 +237,9 @@ class DuckDmlSpec extends SparkSpec {
     // grammar refusals
     intercept[GraftSqlException](DuckDml.exec(spark, cat, "VACUUM t EXTRA"))
     intercept[GraftSqlException](DuckDml.exec(spark, cat, "CHECKPOINT t soon"))
+    // counts are integers: a fractional or exponent literal is refused
+    intercept[GraftSqlException](DuckDml.exec(spark, cat, "CHECKPOINT t 1e3"))
+    intercept[GraftSqlException](DuckDml.exec(spark, cat, "VACUUM t KEEP 2.5"))
     intercept[GraftSqlException](DuckDml.exec(spark, cat, "VACUUM nope"))
   }
 
